@@ -27,8 +27,9 @@ final class HttpApi(spark: SparkSession, engine: Engine, embedder: Embedder,
                     atRest: Option[graft.search.AtRestIndexBridge] = None) {
 
   private val mapper = new ObjectMapper()
+  private[graft] val indexCache = new graft.index.IndexCache()
   private val service = new SearchService(spark, engine, Some(embedder),
-    indexCache = Some(new graft.index.IndexCache()), atRest = atRest)
+    indexCache = Some(indexCache), atRest = atRest)
   private var server: HttpServer = _
 
   def start(port: Int = 0): Int = {
@@ -39,7 +40,11 @@ final class HttpApi(spark: SparkSession, engine: Engine, embedder: Embedder,
     server.getAddress.getPort
   }
 
-  def stop(): Unit = if (server != null) server.stop(0)
+  /** Stop serving and release every frame the API's cache holds. */
+  def stop(): Unit = {
+    if (server != null) server.stop(0)
+    indexCache.clear()
+  }
 
   private def respond(ex: HttpExchange, status: Int, body: Option[JsonNode]): Unit = {
     val bytes = body.map(b => mapper.writeValueAsBytes(b)).getOrElse(Array.empty[Byte])

@@ -1,7 +1,7 @@
 package graft.search
 
 import graft.index.{IndexGenerations, LshIndexStore, RandomHyperplaneLsh}
-import graft.state.Engine
+import graft.state.{Engine, LibrarySnapshot}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -62,13 +62,12 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
     * old one. */
   def register(spark: SparkSession, engine: Engine, libraryId: String,
                lsh: RandomHyperplaneLsh = RandomHyperplaneLsh(8, 12, 42L)): String = {
-    val version = engine.getLibrary(libraryId).version
+    val snap = LibrarySnapshot(spark, engine.state, libraryId)
+    val version = snap.version
     val existing = Option(entries.get(libraryId))
     if (existing.exists(e => e.version == version && e.kind == "lsh"))
       return existing.get.path
-    val corpus = libraryCorpus(spark, engine, libraryId)
-    val dim = corpus.select(col("embedding")).limit(1).collect()(0)
-      .getSeq[Float](0).length
+    val (corpus, dim) = requireCorpus(snap)
     val path = s"$baseDir/$libraryId/v$version"
     // scale-adaptive physical partitioning with the constructor value
     // as the cap (r18, same rule as the gate layouts): a fixed 16-way
@@ -104,11 +103,12 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
     * ~corpus/stride centroids. */
   def registerIvf(spark: SparkSession, engine: Engine, libraryId: String,
                   nprobe: Int = 2, stride: Long = 7L): String = {
-    val version = engine.getLibrary(libraryId).version
+    val snap = LibrarySnapshot(spark, engine.state, libraryId)
+    val version = snap.version
     val existing = Option(entries.get(libraryId))
     if (existing.exists(e => e.version == version && e.kind == "ivf"))
       return existing.get.path
-    val corpus = libraryCorpus(spark, engine, libraryId)
+    val (corpus, _) = requireCorpus(snap)
     val cents = graft.index.IvfKnn.centroids(corpus,
       org.apache.spark.sql.functions.xxhash64(col("id")), col("embedding"), stride)
     require(cents.nonEmpty,
@@ -137,11 +137,12 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
   def registerHnsw(spark: SparkSession, engine: Engine, libraryId: String,
                    m: Int = 8, efConstruction: Int = 32,
                    numShards: Int = 2): String = {
-    val version = engine.getLibrary(libraryId).version
+    val snap = LibrarySnapshot(spark, engine.state, libraryId)
+    val version = snap.version
     val existing = Option(entries.get(libraryId))
     if (existing.exists(e => e.version == version && e.kind == "hnsw"))
       return existing.get.path
-    val corpus = libraryCorpus(spark, engine, libraryId)
+    val (corpus, _) = requireCorpus(snap)
     val path = s"$baseDir/$libraryId/hnsw-v$version"
     graft.index.HnswIndexStore(m, efConstruction).write(
       corpus.withColumn("hid", xxhash64(col("id"))),
@@ -151,13 +152,13 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
         payload = Some(corpus)), existing)
   }
 
-  private def libraryCorpus(spark: SparkSession, engine: Engine,
-                            libraryId: String): DataFrame = {
-    val corpus = engine.chunksDF(spark)
-      .where(col("library_id") === libraryId && col("embedding").isNotNull)
-    require(corpus.select(col("embedding")).limit(1).collect().nonEmpty,
-      s"library $libraryId has no embedded chunks to index")
-    corpus
+  /** The corpus to index — the snapshot's frame, so the registered
+    * version and the written rows come from one snapshot — and the dim
+    * of its first chunk; an empty corpus is an error. */
+  private def requireCorpus(snap: LibrarySnapshot): (DataFrame, Int) = {
+    val dim = snap.firstDim(Map.empty)
+    require(dim.nonEmpty, s"library ${snap.library.id} has no embedded chunks to index")
+    (snap.frame, dim.get)
   }
 
   /** Publish the new generation and retire the replaced one

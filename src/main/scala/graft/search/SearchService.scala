@@ -2,8 +2,8 @@ package graft.search
 
 import graft.embed.Embedder
 import graft.functions.VectorFunctions
-import graft.index.{BruteForceKnn, RandomHyperplaneLsh}
-import graft.state.Engine
+import graft.index.{BruteForceKnn, IndexCache, RandomHyperplaneLsh}
+import graft.state.{Engine, LibrarySnapshot}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,16 +23,23 @@ final case class SearchResult(hits: Seq[Hit], index: String,
   * scan+flatten → metadata filter → query-vector derivation → index
   * dispatch (brute | lsh with adaptive fallback) → pack.
   *
-  * The DataFrame plan per query is: filtered scan (library + non-null
-  * embedding + metadata conjunction — all pushable predicates) → score
-  * → TakeOrderedAndProject(k). On a partitioned 100 TB chunk corpus the
-  * library filter prunes partitions and only k rows per partition reach
-  * the driver.
+  * Each query reads ONE [[LibrarySnapshot]] of the library: the
+  * reported `library_version`, the rows and the corpus dim all come
+  * from it, so a concurrent write cannot pair one version with another
+  * version's rows. With an [[IndexCache]] the snapshot is the cached
+  * entry for (library, incarnation, version); without one it is built
+  * per query by the same builder, uncached.
+  *
+  * The DataFrame plan per query is: the snapshot frame (an
+  * `InMemoryRelation` at a cached version) → metadata conjunction →
+  * score → TakeOrderedAndProject(k): one Spark job. The empty-after-
+  * filter check and the dim probe are answered on the driver from the
+  * snapshot's rows, not by a job, and nothing re-encodes the store.
   */
 final class SearchService(spark: SparkSession, engine: Engine,
                           embedder: Option[Embedder] = None,
                           rerank: DataFrame => DataFrame = identity,
-                          indexCache: Option[graft.index.IndexCache] = None,
+                          indexCache: Option[IndexCache] = None,
                           atRest: Option[AtRestIndexBridge] = None) {
 
   def search(libraryId: String,
@@ -43,24 +50,20 @@ final class SearchService(spark: SparkSession, engine: Engine,
              lshTables: Int = 8,
              lshPlanes: Int = 12,
              filters: Map[String, String] = Map.empty): SearchResult = {
-    val version = engine.getLibrary(libraryId).version
+    val snap = snapshot(libraryId)
+    val version = snap.version
 
     if (k <= 0) return SearchResult(Nil, index, None, version)
 
     // O1 scan+flatten: chunks of this library with a non-null embedding
     // (search_service.py:43-46), then O2 conjunctive exact-match
     // metadata filter (missing key never matches, search_service.py:75).
-    val base = engine.chunksDF(spark)
-      .where(col("library_id") === libraryId && col("embedding").isNotNull)
-    val filtered = filters.foldLeft(base) { case (df, (key, value)) =>
-      df.where(col("metadata").getItem(key) === lit(value))
-    }
+    val filtered = LibrarySnapshot.where(snap.frame, filters)
 
-    // One job doubles as the empty-after-filter check (search_service.py:105-106)
-    // and the corpus-dim probe the index guards need.
-    val firstEmbedding = filtered.select(col("embedding")).limit(1).collect()
-    if (firstEmbedding.isEmpty) return SearchResult(Nil, index, None, version)
-    val dim = firstEmbedding(0).getSeq[Float](0).length
+    // The empty-after-filter check (search_service.py:105-106) and the
+    // corpus-dim probe the index guards need: the first filtered row's dim.
+    val dim = snap.firstDim(filters).getOrElse(
+      return SearchResult(Nil, index, None, version))
 
     // Query vector: given embedding, else embed text at the corpus dim
     // (search_service.py:110-116 passes dim through), else error.
@@ -118,16 +121,15 @@ final class SearchService(spark: SparkSession, engine: Engine,
         val lsh = RandomHyperplaneLsh(lshTables, lshPlanes)
         indexCache match {
           // Version-keyed cached bucketing: hashing ran once per
-          // (library, version, params); this query only filters stored
-          // bucket columns. Metadata filters apply on top of the cached
-          // frame — same rows as the uncached path. The staleness proof
-          // is the cache key (a mutation bumps the version).
+          // (library, incarnation, version, params), from this query's
+          // own snapshot; this query only filters stored bucket columns.
+          // Metadata filters apply on top of the cached frame — same
+          // rows as the uncached path. The staleness proof is the cache
+          // key (a mutation bumps the version).
           case Some(c) =>
-            val bucketed = c.bucketed(engine, spark, libraryId, lsh, dim)
-            val bFiltered = filters.foldLeft(bucketed) { case (df, (key, value)) =>
-              df.where(col("metadata").getItem(key) === lit(value))
-            }
-            lsh.searchBucketed(bFiltered, col("embedding"), col("id"), qvec, k)
+            val bucketed = c.bucketed(snap, lsh, dim)
+            lsh.searchBucketed(LibrarySnapshot.where(bucketed, filters),
+              col("embedding"), col("id"), qvec, k)
           case None =>
             lsh.search(filtered, col("embedding"), col("id"), qvec, k)
         }
@@ -149,6 +151,11 @@ final class SearchService(spark: SparkSession, engine: Engine,
 
     SearchResult(hits, index, Some(used), version)
   }
+
+  /** The library's snapshot: the cached entry, or built uncached. */
+  private def snapshot(libraryId: String): LibrarySnapshot =
+    indexCache.fold(LibrarySnapshot(spark, engine.state, libraryId))(
+      _.snapshot(engine, spark, libraryId))
 
   /** BATCHED O12 search (r17 stretch): every request of the batch
     * answered by ONE plan when the library is registered at its

@@ -5,7 +5,7 @@ import java.util.UUID
 import java.util.concurrent.atomic.AtomicReference
 
 import graft.embed.Embedder
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 
 /** Typed errors mirroring the reference's HTTP 404/400 split
@@ -68,15 +68,19 @@ private[state] final case class SpilledChunkRow(
     embedding, metadata, created_at, updated_at)
 }
 
-/** Entity rows (SURVEY §1.4 schema mapping). `DocumentRow.incarnation`
-  * is an engine-internal nonce distinguishing same-id re-creations (see
-  * [[SpilledChunkRow]]); it rides along in the DataFrame views but is
-  * never part of the reference-parity API surface (HttpApi serializes
-  * explicit fields).
+/** Entity rows (SURVEY §1.4 schema mapping). `incarnation` is an
+  * engine-internal nonce distinguishing same-id re-creations: on a
+  * document it keys archived rows (see [[SpilledChunkRow]]), on a
+  * library it keys per-version caches ([[graft.index.IndexCache]]), so
+  * a deleted library re-created under its old id and written back to
+  * its old version count never serves the deleted library's chunks. It
+  * rides along in the DataFrame views but is never part of the
+  * reference-parity API surface (HttpApi serializes explicit fields).
   */
 final case class LibraryRow(id: String, name: String, description: Option[String],
                             tags: Option[String], version: Int,
-                            created_at: Instant, updated_at: Instant)
+                            created_at: Instant, updated_at: Instant,
+                            incarnation: String = "")
 final case class DocumentRow(library_id: String, id: String, title: String,
                              category: Option[String],
                              created_at: Instant, updated_at: Instant,
@@ -121,6 +125,9 @@ final case class EngineState(libraries: Vector[LibraryRow],
     * per probe anyway. */
   @transient lazy val chunkByKey: Map[(String, String, String), ChunkRow] =
     chunks.iterator.map(c => ((c.library_id, c.document_id, c.id), c)).toMap
+
+  def library(libId: String): LibraryRow =
+    libraries.find(_.id == libId).getOrElse(throw NotFoundError("library", libId))
 }
 
 object EngineState {
@@ -326,8 +333,7 @@ final class Engine(clock: () => Instant = () => Instant.now(),
     a
   }
 
-  private def requireLibrary(s: EngineState, libId: String): LibraryRow =
-    s.libraries.find(_.id == libId).getOrElse(throw NotFoundError("library", libId))
+  private def requireLibrary(s: EngineState, libId: String): LibraryRow = s.library(libId)
 
   private def bumpLibrary(s: EngineState, libId: String, now: Instant): Vector[LibraryRow] =
     s.libraries.map(l => if (l.id == libId) l.copy(version = l.version + 1, updated_at = now) else l)
@@ -340,7 +346,9 @@ final class Engine(clock: () => Instant = () => Instant.now(),
   def createLibrary(name: String, description: Option[String] = None,
                     tags: Option[String] = None, id: Option[String] = None): LibraryRow = mutate { s =>
     val now = clock()
-    val row = LibraryRow(id.getOrElse(newId()), name, description, tags, 0, now, now)
+    // incarnation nonce: see LibraryRow — never exposed on the API surface
+    val row = LibraryRow(id.getOrElse(newId()), name, description, tags, 0, now, now,
+      incarnation = newId())
     (s.copy(libraries = s.libraries :+ row), row)
   }
 
@@ -571,28 +579,33 @@ final class Engine(clock: () => Instant = () => Instant.now(),
     // (the r13 review's atomicity catch)
     val s = ref.get()
     val resident = spark.createDataset(s.chunks).toDF()
-    spilledChunks(spark, s).map { archived =>
-      // cascade-delete correctness without parquet rewrites: an archived
-      // row is served only while its (library, document) parents are
-      // live — deleting either hides the rows immediately (they stay as
-      // dead bytes until a compaction pass). The liveness key includes
-      // the document's incarnation nonce, so re-creating a document
-      // under the same id does NOT resurrect the deleted incarnation's
-      // archived rows. The liveness side is the driver-resident document
-      // metadata: tiny, so broadcast.
-      val live = spark.createDataset(s.documents).toDF()
-        .select(col("library_id"), col("id").as("document_id"),
-          col("incarnation").as("doc_incarnation"))
-      archived
-        .join(broadcast(live),
-          Seq("library_id", "document_id", "doc_incarnation"), "left_semi")
-        .select(resident.columns.map(col).toIndexedSeq: _*)
-        .unionByName(resident)
-    }.getOrElse(resident)
+    Engine.liveArchived(spark, s).map(_.unionByName(resident)).getOrElse(resident)
   }
 }
 
 object Engine {
+  /** The archived tier of `s` as [[ChunkRow]] columns, or None when
+    * nothing has spilled. Cascade-delete correctness without parquet
+    * rewrites: an archived row is served only while its (library,
+    * document) parents are live — deleting either hides the rows
+    * immediately (they stay as dead bytes until a compaction pass). The
+    * liveness key includes the document's incarnation nonce, so
+    * re-creating a document under the same id does NOT resurrect the
+    * deleted incarnation's archived rows. The liveness side is the
+    * driver-resident document metadata: tiny, so broadcast. */
+  private[state] def liveArchived(spark: SparkSession, s: EngineState): Option[DataFrame] =
+    if (s.spillSegments.isEmpty) None
+    else {
+      import spark.implicits._
+      val live = spark.createDataset(s.documents).toDF()
+        .select(col("library_id"), col("id").as("document_id"),
+          col("incarnation").as("doc_incarnation"))
+      Some(spark.read.parquet(s.spillSegments: _*)
+        .join(broadcast(live),
+          Seq("library_id", "document_id", "doc_incarnation"), "left_semi")
+        .select(Encoders.product[ChunkRow].schema.fieldNames.toIndexedSeq.map(col): _*))
+    }
+
   /** Default driver-store bound: ~1M chunks with 64-dim embeddings is
     * roughly 0.5-1 GiB of driver heap — comfortably inside the bench
     * JVM, far past the reference's workloads, and loud long before an

@@ -28,6 +28,21 @@ object SqlShims {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `df`'s rows as a leaf plan that reports a LocalRelation's size
+    * estimate (the schema's default row size × `rows`, the caller's
+    * exact row count) instead of the unknown-size default of an
+    * RDD-backed plan, so size-driven choices (broadcast joins,
+    * [[graft.index.LshIndexStore.adaptivePartitions]]) treat a frame
+    * built from driver rows the way they treat a local one. */
+  def sizedFrame(df: org.apache.spark.sql.DataFrame, rows: Long): org.apache.spark.sql.DataFrame = {
+    val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val output = org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(df.schema)
+    val size = org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+      .getSizePerRow(output) * rows
+    ofRows(session, org.apache.spark.sql.execution.LogicalRDD(output, df.queryExecution.toRdd)(
+      session, Some(org.apache.spark.sql.catalyst.plans.logical.Statistics(sizeInBytes = size))))
+  }
+
   /** The session's stable UUID (`private[sql]` since the Connect
     * refactor) — the serving-manifest holder identity for
     * [[graft.index.IndexGenerations]]'s cross-JVM lease protocol. */

@@ -1,5 +1,6 @@
 package graft
 
+import graft.index.IndexCache
 import graft.search.SearchService
 import graft.state._
 import org.scalatest.funsuite.AnyFunSuite
@@ -79,9 +80,11 @@ class EngineSpillSpec extends AnyFunSuite {
       (0 until 25).foreach { i =>
         e.addChunk(lib.id, doc.id, s"text $i", Some(oneHot(i)), id = Some(f"c$i%02d"))
       }
-      val svc = new SearchService(spark, e)
-      // chunk 3 is archived (first spill segment), chunk 24 is resident
-      for (i <- Seq(3, 24)) {
+      // chunk 3 is archived (first spill segment), chunk 24 is resident;
+      // without and with an IndexCache (whose snapshot spans both tiers)
+      for (svc <- Seq(new SearchService(spark, e),
+                      new SearchService(spark, e, indexCache = Some(new IndexCache())));
+           i <- Seq(3, 24)) {
         val hits = svc.search(lib.id, queryEmbedding = Some(oneHot(i)), k = 1).hits
         assert(hits.head.chunk_id == f"c$i%02d", s"query $i got ${hits.head}")
       }

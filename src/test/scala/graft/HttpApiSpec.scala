@@ -7,6 +7,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import graft.api.HttpApi
 import graft.embed.HashingEmbedder
 import graft.state.Engine
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** HTTP-level tests in the style of the reference's FastAPI TestClient
@@ -81,6 +82,28 @@ class HttpApiSpec extends AnyFunSuite {
       assert(req("GET", s"$base/vector_db/libraries/$libId").statusCode() == 404)
       assert(req("GET", s"$base/vector_db/libraries/$libId/documents").statusCode() == 404)
     }
+  }
+
+  test("stop releases every frame the API cached") {
+    val e = new Engine()
+    val emb = HashingEmbedder(dim = 16)
+    val lib = e.createLibrary("L").id
+    val doc = e.addDocument(lib, "D").id
+    Seq("eiffel tower", "big ben", "statue of liberty")
+      .foreach(t => e.addChunk(lib, doc, t, Some(emb.embed(t))))
+    val api = new HttpApi(spark, e, emb)
+    val port = api.start()
+    val cached = try {
+      for (index <- Seq("brute", "lsh"))
+        assert(req("POST", s"http://127.0.0.1:$port/vector_db/libraries/$lib/search",
+          s"""{"query_text": "eiffel tower", "k": 2, "index": "$index"}""").statusCode() == 200)
+      val frames = api.indexCache.frames
+      assert(frames.size == 2) // the library's snapshot and its bucketed frame
+      assert(frames.forall(_.storageLevel != StorageLevel.NONE))
+      frames
+    } finally api.stop()
+    assert(api.indexCache.frames.isEmpty)
+    assert(cached.forall(_.storageLevel == StorageLevel.NONE))
   }
 
   test("validation and 404 mapping mirrors the routers") {

@@ -2,7 +2,9 @@ package graft
 
 import graft.embed.HashingEmbedder
 import graft.index.{IndexCache, RandomHyperplaneLsh}
+import graft.search.SearchService
 import graft.state.Engine
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 class IndexCacheSpec extends AnyFunSuite {
@@ -57,5 +59,51 @@ class IndexCacheSpec extends AnyFunSuite {
     assert(cache.size == 2)
     cache.invalidate(lib)
     assert(cache.size == 0)
+  }
+
+  test("one cached snapshot per version feeds searches and bucketing; clear releases every frame") {
+    val (e, lib, doc) = seeded()
+    val cache = new IndexCache()
+    val s1 = cache.snapshot(e, spark, lib)
+    assert(cache.snapshot(e, spark, lib) eq s1) // same version: same entry
+    assert(s1.frame.storageLevel != StorageLevel.NONE)
+    cache.bucketed(e, spark, lib, RandomHyperplaneLsh(2, 4, 42L), 8)
+    assert(cache.frames.size == 2 && cache.size == 1) // snapshot + bucketed
+    e.addChunk(lib, doc, "e f", Some(HashingEmbedder(dim = 8).embed("e f")))
+    val s2 = cache.snapshot(e, spark, lib)
+    assert(!(s2 eq s1) && s2.version == s1.version + 1)
+    assert(s1.frame.storageLevel == StorageLevel.NONE) // stale version released
+    assert(s2.frame.count() == 3 && s1.frame.count() == 2)
+    val held = cache.frames
+    assert(held.nonEmpty)
+    cache.clear()
+    assert(cache.frames.isEmpty && held.forall(_.storageLevel == StorageLevel.NONE))
+  }
+
+  test("a library re-created under its old id never hits the deleted library's entries") {
+    val e = new Engine()
+    val emb = HashingEmbedder(dim = 8)
+    def create(texts: Seq[String]): Unit = {
+      e.createLibrary("lib", id = Some("L"))
+      e.addDocument("L", "d", id = Some("D"))
+      texts.foreach(t => e.addChunk("L", "D", t, Some(emb.embed(t)), id = Some(t)))
+    }
+    val cache = new IndexCache()
+    val svc = new SearchService(spark, e, Some(emb), indexCache = Some(cache))
+    val lsh = RandomHyperplaneLsh(8, 12)
+    create(Seq("old a", "old b"))
+    val q = Some("old a")
+    assert(svc.search("L", queryText = q, k = 5, index = "lsh").hits.nonEmpty)
+    assert(cache.bucketed(e, spark, "L", lsh, 8).count() == 2)
+    val oldVersion = e.getLibrary("L").version
+    e.deleteLibrary("L")
+    create(Seq("new a", "new b"))
+    assert(e.getLibrary("L").version == oldVersion) // same id, same version
+    for (index <- Seq("lsh", "brute")) {
+      val hits = svc.search("L", queryText = q, k = 5, index = index).hits
+      assert(hits.map(_.chunk_id).toSet == Set("new a", "new b"), s"$index served $hits")
+    }
+    assert(cache.bucketed(e, spark, "L", lsh, 8)
+      .select("id").collect().map(_.getString(0)).toSet == Set("new a", "new b"))
   }
 }
