@@ -1,12 +1,13 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.ListenerBusDrain
 
 import java.util.concurrent.atomic.AtomicLong
 
 /** Accumulating job/stage/shuffle counters. Queries run sequentially,
   * so per-query metrics are before/after deltas — provided the
-  * listener bus is drained between queries (see [[Bench.drainBus]]).
+  * listener bus is drained between queries (see
+  * [[org.apache.spark.sql.graft.ListenerBusDrain]]).
   */
 private final class BenchListener extends SparkListener {
   val jobs = new AtomicLong
@@ -53,21 +54,6 @@ private final class BenchListener extends SparkListener {
   * per-round `docs/BENCH_FULL_r{N}.json` copies keep the evidence.
   */
 object Bench {
-
-  /** Drain the listener bus so metric deltas attribute to the query
-    * that caused them. LiveListenerBus is private[spark] — reflection
-    * (with a bounded-wait fallback) rather than a compile dependency
-    * on spark-internals.
-    */
-  private def drainBus(spark: SparkSession): Unit =
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      val m = bus.getClass.getMethods.find(m =>
-        m.getName == "waitUntilEmpty" && m.getParameterCount <= 1).get
-      if (m.getParameterCount == 0) m.invoke(bus)
-      else m.invoke(bus, java.lang.Long.valueOf(10000L))
-    } catch { case _: Throwable => Thread.sleep(200) }
 
   /** JSON string escape for env-sourced values (paths) interpolated
     * into the stdout line — a quote or backslash in SPARK_GRAFT_BENCH_OUT
@@ -162,15 +148,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = LocalSpark.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val listener = new BenchListener
     spark.sparkContext.addSparkListener(listener)
@@ -226,11 +205,11 @@ object Bench {
         // generation's async block eviction (the r12 driver artifact's
         // 4-25x GC inflation on the dedup gates)
         graft.dedup.Dedup.releaseScratch(spark)
-        drainBus(spark)
+        ListenerBusDrain(spark.sparkContext)
         val before = listener.snap
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
-        drainBus(spark)
+        ListenerBusDrain(spark.sparkContext)
         val after = listener.snap
         val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
         (sec, after._1 - before._1, after._2 - before._2, after._3 - before._3,
@@ -322,7 +301,7 @@ object Bench {
       suspects, queryRuns.toMap, anchors,
       name => {
         graft.dedup.Dedup.releaseScratch(spark)
-        drainBus(spark)
+        ListenerBusDrain(spark.sparkContext)
         val t0 = System.nanoTime()
         try { SparkEntry.queries(name)(spark, sfDir).count()
           (System.nanoTime() - t0) / 1e9 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Time one named query (cold + warm) for local optimization work.
   * Usage: runMain graft.BenchOne <queryName> [sfDir] [explain]
   */
@@ -9,24 +7,10 @@ object BenchOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    // dev-only A/B lever for local optimization work: semicolon-
-    // separated k=v pairs layered on top of the fixed bench config
-    // (e.g. SPARK_GRAFT_CONF="spark.sql.adaptive.coalescePartitions.
-    // minPartitionSize=64k"). Bench itself never reads this — the
-    // driver's measurement config stays fixed in Bench.scala.
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k.trim, v.trim)
-      })
-    val spark = builder.getOrCreate()
+    // the suite's core count, so Bench's fresh-JVM fork measures a
+    // suspect at the operating point the suite flagged it at
+    val spark = LocalSpark.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     name.split(",").foreach { q =>
       // an UNKNOWN gate still dies before any verdict line (a config

@@ -2,7 +2,6 @@ package graft
 
 import graft.embed.HashingEmbedder
 import graft.session._
-import org.apache.spark.sql.SparkSession
 
 /** End-to-end interactive-session demo — the engine's equivalent of the
   * reference's demo.py / interactive_cli.py happy path: create library
@@ -10,12 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val session = new InteractiveSession(spark, HashingEmbedder(dim = 32))

@@ -3,8 +3,6 @@ package graft
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes docs/PLANS.md: the formatted physical plan of each headline
   * query at sf0.01 — the artifact to eyeball for pushdown (PushedFilters /
   * ReadSchema), codegen spans, TakeOrderedAndProject, partial
@@ -13,12 +11,7 @@ import org.apache.spark.sql.SparkSession
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = LocalSpark.builder(8)
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

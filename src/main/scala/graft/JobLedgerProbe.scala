@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.ListenerBusDrain
 
 import scala.collection.concurrent.TrieMap
 
@@ -53,14 +53,7 @@ object JobLedgerProbe {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val fn = Queries.all(name)
     // run 1: absorb layout builds / JIT / page cache like Bench's median
@@ -72,13 +65,7 @@ object JobLedgerProbe {
     val t0 = System.nanoTime()
     val n = fn(spark, sfDir).count()
     val total = (System.nanoTime() - t0) / 1e9
-    // drain listener bus
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethods.find(m =>
-        m.getName == "waitUntilEmpty" && m.getParameterCount == 0).foreach(_.invoke(bus))
-    } catch { case _: Throwable => Thread.sleep(500) }
+    ListenerBusDrain(spark.sparkContext)
     println(f"LEDGER $name rows=$n warm_total=$total%.3f s")
     val js = ledger.jobs.values.toSeq.sortBy(_.start)
     var prevEnd = 0L

@@ -220,7 +220,7 @@ object Queries {
   /** Deterministic CLUSTERED embedding fixture (r13 verdict #5): the
     * random-vector tables are the adversarial recall case the ANN
     * decision table itself calls unrepresentative — real encoder output
-    * is clustered. This is [[LshSweep.gaussianMixture]]'s seeded
+    * is clustered. This is [[Fixtures.gaussianMixture]]'s seeded
     * mixture-of-Gaussians (25 unit-norm centers, σ=0.1 — within-cluster
     * cosine ≈ 0.8, the "what encoders produce" shape the decision
     * table's clustered row describes; σ=0.25 at 64-d gives noise norm
@@ -237,7 +237,7 @@ object Queries {
   /** GENERATOR VERSION, encoded in the staged directory name (r14
     * ADVICE): the `_SUCCESS`-gated reuse below serves whatever parquet
     * sits at the path, so a generator change (seed, mixture shape,
-    * [[LshSweep.gaussianMixture]] internals) WITHOUT a version bump
+    * [[Fixtures.gaussianMixture]] internals) WITHOUT a version bump
     * would keep both the engine and the oracle hash-green on stale
     * geometry while AnnEvalSpec's recall bars silently measured the
     * wrong fixture. Bump this with ANY generator change; the oracle SQL
@@ -250,7 +250,7 @@ object Queries {
     clusteredFixtureCache.getOrElseUpdate(spark, "v1") {
       val dir = new java.io.File(clusteredFixtureRelPath)
       if (!new java.io.File(dir, "_SUCCESS").exists())
-        LshSweep.gaussianMixture(spark, 4000L, 64, 25, 0.1)
+        Fixtures.gaussianMixture(spark, 4000L, 64, 25, 0.1)
           .coalesce(1).write.mode("overwrite").parquet(dir.getAbsolutePath)
       dir.getAbsolutePath
     }
@@ -1462,8 +1462,9 @@ object Queries {
       .sortBy(_._1)
       .take(20)
     val k = 10
-    // tuned default from the LshSweep grid: 1-bit multi-probe at 8×6
-    // matches 16-table exact-bucket recall at half the storage
+    // tuned default from the LshSweep grid (last in commit a10423e):
+    // 1-bit multi-probe at 8×6 matches 16-table exact-bucket recall at
+    // half the storage
     val cb = pqTrainCache.getOrElseUpdate(spark, sfDir)(
       graft.index.PqKnn.train(emb, col("vec_id"), col("embedding"), dim = 64))
     val scales = sqScalesCache.getOrElseUpdate(spark, sfDir)(

@@ -3,17 +3,12 @@ package graft
 import graft.api.HttpApi
 import graft.embed.HashingEmbedder
 import graft.state.Engine
-import org.apache.spark.sql.SparkSession
 
 /** Run the REST API: `runMain graft.Serve [port]` (default 8900). */
 object Serve {
   def main(args: Array[String]): Unit = {
     val port = if (args.nonEmpty) args(0).toInt else 8900
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val api = new HttpApi(spark, new Engine(), HashingEmbedder(dim = 64))
     val bound = api.start(port)

@@ -1,16 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke runner for SparkEntry.entry (the driver's t1 check). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSpark.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val df = SparkEntry.entry(spark)
     val rows = df.collect()

@@ -248,32 +248,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Distinct (id, shingle) postings for a corpus. */
-  def shingleTable(docs: DataFrame, idCol: String, textCol: String, shingleSize: Int): DataFrame =
-    docs.select(col(idCol).as("id"),
-      explode(TextFunctions.wordNgramsFast(shingleSize)(col(textCol))).as("shingle")).distinct()
-
-  /** Exact word-n-gram Jaccard for candidate pairs (id_a, id_b), given
-    * a precomputed [[shingleTable]] (cache it when the caller also used
-    * it to build signatures — one shuffle instead of three).
-    * |A∩B| via an inner join on (pair, shingle); |A∪B| = |A|+|B|-|A∩B|.
-    */
-  def verifyJaccard(sh: DataFrame, pairs: DataFrame): DataFrame = {
-    val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("n"))
-    val shA = sh.toDF("id_a", "shingle")
-    val shB = sh.toDF("id_b", "shingle")
-    val interCounts = pairs.join(shA, "id_a").join(shB, Seq("id_b", "shingle"))
-      .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("n_inter"))
-    pairs
-      .join(interCounts, Seq("id_a", "id_b"), "left")
-      .na.fill(0L, Seq("n_inter"))
-      .join(sizes.toDF("id_a", "n_a"), "id_a")
-      .join(sizes.toDF("id_b", "n_b"), "id_b")
-      .withColumn("jaccard",
-        col("n_inter").cast("double") / (col("n_a") + col("n_b") - col("n_inter")).cast("double"))
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
-
   /** MinHash signature from a document's (distinct) shingle array —
     * the same hash stream as [[minhashSignatures]] (min is unaffected
     * by shingle multiplicity), but computable from a shared shingle
@@ -1113,7 +1087,7 @@ object Dedup {
     * CPU-for-shuffle trade: the dot product is codegen'd and cheap,
     * the exchange is the scarce resource.
     *
-    * Two rejected alternatives, measured by [[graft.DedupProbe]]'s
+    * Two rejected alternatives, measured by DedupProbe's (commit f3d16ab)
     * three-way A/B (broadcasts disabled = the no-broadcastable-side
     * regime of a real corpus):
     *  - dedup-then-score on keys only (pairs distinct → join vectors

@@ -202,9 +202,9 @@ object TextFunctions {
   def fingerprint(text: Column): Column =
     md5(trim(regexp_replace(regexp_replace(lower(text), "[^a-z0-9 ]", ""), " +", " ")))
 
-  /** Widened to the package so driver-side probes (SkewProbe input
-    * synthesis) share the one scrambler instead of keeping a copy
-    * whose constants could silently drift; spec copies stay
+  /** Widened to the package so driver-side generators ([[graft.Fixtures]],
+    * the Verify canary) share the one scrambler instead of keeping a
+    * copy whose constants could silently drift; spec copies stay
     * independent on purpose. */
   private[graft] def splitmix64(x0: Long): Long = {
     var x = x0 + 0x9E3779B97F4A7C15L

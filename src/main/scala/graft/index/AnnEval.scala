@@ -22,8 +22,8 @@ final case class QScore(qid: Long, score: Double)
   * The measured operating points this harness produced — the random and
   * clustered recall tables and the corpus-shape × constraint decision
   * table (which index, which params, at what scan budget) — live in
-  * README § "ANN operating points"; reproduce them with
-  * `runMain graft.LshSweep [clustered n clusters sigma]`.
+  * README § "ANN operating points"; the sweep main that printed them is
+  * `git show a10423e:src/main/scala/graft/LshSweep.scala`.
   */
 object AnnEval {
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 /** The training-data-pipeline operators as a reusable DataFrame-level
   * library surface (column-parameterized — bring your own schema).
   * [[graft.Queries]] wraps these over the fixture tables for the
-  * correctness gate; `graft.DedupProbe` measures them on a
+  * correctness gate; DedupProbe (commit f3d16ab) measured them on a
   * duplicate-heavy 10× corpus. Every operator is deterministic and
   * DuckDB-oracle-checkable; the scale notes on each mirror the gate
   * query's Scaladoc.

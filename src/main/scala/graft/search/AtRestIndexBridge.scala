@@ -1,7 +1,7 @@
 package graft.search
 
 import graft.index.{IndexGenerations, LshIndexStore, RandomHyperplaneLsh}
-import graft.state.{Engine, LibrarySnapshot}
+import graft.state.{Engine, LibraryRow, LibrarySnapshot}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -31,14 +31,22 @@ import org.apache.spark.sql.functions._
 final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
                               numPhysicalPartitions: Int = 16) {
 
-  private final case class Entry(path: String, version: Int,
+  /** One registered generation, built from the row `library`. It
+    * serves only that row's version AND incarnation, so a library
+    * deleted and re-created under its old id and written back to the
+    * registered version count is never served the deleted library's
+    * layout (the [[graft.index.IndexCache]] key). */
+  private final case class Entry(path: String, library: LibraryRow,
                                  kind: String, // "lsh" | "ivf" | "hnsw"
                                  layout: DataFrame,
                                  // hnsw only: the chunk payload view at
                                  // the registered version (the graph
                                  // layout stores hashed node ids +
                                  // vectors, not the chunk columns)
-                                 payload: Option[DataFrame] = None)
+                                 payload: Option[DataFrame] = None) {
+    def serves(lib: LibraryRow): Boolean =
+      library.version == lib.version && library.incarnation == lib.incarnation
+  }
 
   private val entries =
     new java.util.concurrent.ConcurrentHashMap[String, Entry]
@@ -57,18 +65,17 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
   }
 
   /** Build + register `libraryId`'s corpus at its current version.
-    * Returns the layout path. Idempotent per (library, version, kind);
-    * a NEW version (or kind) writes a new generation and retires the
-    * old one. */
+    * Returns the layout path. Idempotent per (library, incarnation,
+    * version, kind); a NEW version (or kind, or incarnation) writes a
+    * new generation and retires the old one. */
   def register(spark: SparkSession, engine: Engine, libraryId: String,
                lsh: RandomHyperplaneLsh = RandomHyperplaneLsh(8, 12, 42L)): String = {
     val snap = LibrarySnapshot(spark, engine.state, libraryId)
-    val version = snap.version
     val existing = Option(entries.get(libraryId))
-    if (existing.exists(e => e.version == version && e.kind == "lsh"))
+    if (existing.exists(e => e.serves(snap.library) && e.kind == "lsh"))
       return existing.get.path
     val (corpus, dim) = requireCorpus(snap)
-    val path = s"$baseDir/$libraryId/v$version"
+    val path = generationPath(snap, "")
     // scale-adaptive physical partitioning with the constructor value
     // as the cap (r18, same rule as the gate layouts): a fixed 16-way
     // split of a small library shatters the layout into ~tables×16
@@ -89,7 +96,7 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
     graft.plans.LshProbeRewrite.register(path, lsh, dim, parts,
       guaranteeK = true)
     swapIn(spark, libraryId,
-      Entry(path, version, "lsh", spark.read.parquet(path)), existing)
+      Entry(path, snap.library, "lsh", spark.read.parquet(path)), existing)
   }
 
   /** The IVF twin of [[register]] (r16) — the decision table's
@@ -104,21 +111,20 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
   def registerIvf(spark: SparkSession, engine: Engine, libraryId: String,
                   nprobe: Int = 2, stride: Long = 7L): String = {
     val snap = LibrarySnapshot(spark, engine.state, libraryId)
-    val version = snap.version
     val existing = Option(entries.get(libraryId))
-    if (existing.exists(e => e.version == version && e.kind == "ivf"))
+    if (existing.exists(e => e.serves(snap.library) && e.kind == "ivf"))
       return existing.get.path
     val (corpus, _) = requireCorpus(snap)
     val cents = graft.index.IvfKnn.centroids(corpus,
       org.apache.spark.sql.functions.xxhash64(col("id")), col("embedding"), stride)
     require(cents.nonEmpty,
       s"library $libraryId sampled no centroids at stride $stride")
-    val path = s"$baseDir/$libraryId/ivf-v$version"
+    val path = generationPath(snap, "ivf-")
     graft.index.IvfIndexStore(cents).write(
       corpus.withColumn("hid", xxhash64(col("id"))), "embedding", path): Unit
     graft.plans.LshProbeRewrite.registerIvf(path, cents, nprobe, guaranteeK = true)
     swapIn(spark, libraryId,
-      Entry(path, version, "ivf", spark.read.parquet(path)), existing)
+      Entry(path, snap.library, "ivf", spark.read.parquet(path)), existing)
   }
 
   /** The HNSW twin of [[register]] (r17, r16 verdict #4): the
@@ -138,19 +144,23 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
                    m: Int = 8, efConstruction: Int = 32,
                    numShards: Int = 2): String = {
     val snap = LibrarySnapshot(spark, engine.state, libraryId)
-    val version = snap.version
     val existing = Option(entries.get(libraryId))
-    if (existing.exists(e => e.version == version && e.kind == "hnsw"))
+    if (existing.exists(e => e.serves(snap.library) && e.kind == "hnsw"))
       return existing.get.path
     val (corpus, _) = requireCorpus(snap)
-    val path = s"$baseDir/$libraryId/hnsw-v$version"
+    val path = generationPath(snap, "hnsw-")
     graft.index.HnswIndexStore(m, efConstruction).write(
       corpus.withColumn("hid", xxhash64(col("id"))),
       "hid", "embedding", path, numShards)
     swapIn(spark, libraryId,
-      Entry(path, version, "hnsw", spark.read.parquet(path),
-        payload = Some(corpus)), existing)
+      Entry(path, snap.library, "hnsw", spark.read.parquet(path), Some(corpus)), existing)
   }
+
+  /** A generation's directory: one per (incarnation, version, kind),
+    * so a re-created library never overwrites the layout a lease may
+    * still be reading. */
+  private def generationPath(snap: LibrarySnapshot, kindPrefix: String): String =
+    s"$baseDir/${snap.library.id}/${kindPrefix}v${snap.version}-${snap.library.incarnation}"
 
   /** The corpus to index — the snapshot's frame, so the registered
     * version and the written rows come from one snapshot — and the dim
@@ -216,7 +226,8 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
     try {
       val node = pointerMapper.createObjectNode()
       node.put("path", new java.io.File(e.path).getAbsolutePath)
-      node.put("version", e.version)
+      node.put("incarnation", e.library.incarnation)
+      node.put("version", e.library.version)
       node.put("kind", e.kind): Unit
       java.nio.file.Files.createDirectories(currentFile(libraryId).getParentFile.toPath)
       java.nio.file.Files.write(currentFile(libraryId).toPath,
@@ -224,34 +235,34 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
     } catch { case scala.util.control.NonFatal(_) => () }
 
   /** Adopt the generation another session published, when it matches
-    * the engine's CURRENT version (the version-pinned staleness
-    * contract is unchanged — a pointer at any other version is
-    * ignored). HNSW entries are not adoptable (their chunk-payload
-    * view needs engine state at registration time); they re-register. */
-  private def adoptCurrent(spark: SparkSession, libraryId: String,
-                           version: Int): Option[Entry] =
+    * the engine's CURRENT library row (the version-pinned staleness
+    * contract is unchanged — a pointer at any other version, or at
+    * another incarnation of the same id, is ignored). HNSW entries are
+    * not adoptable (their chunk-payload view needs engine state at
+    * registration time); they re-register. */
+  private def adoptCurrent(spark: SparkSession, lib: LibraryRow): Option[Entry] =
     try {
-      val f = currentFile(libraryId)
+      val f = currentFile(lib.id)
       if (!f.exists()) return None
       val node = pointerMapper.readTree(java.nio.file.Files.readAllBytes(f.toPath))
       val kind = node.get("kind").asText()
-      if (node.get("version").asInt() != version || kind == "hnsw") return None
+      if (!Option(node.get("incarnation")).exists(_.asText() == lib.incarnation) ||
+          node.get("version").asInt() != lib.version || kind == "hnsw") return None
       val path = node.get("path").asText()
       if (!new java.io.File(path).exists()) return None
       if (!graft.plans.LshProbeRewrite.isRegistered(path))
         graft.plans.LshProbeRewrite.registerFromSidecar(path): Unit
       injectRule(spark)
-      val e = Entry(path, version, kind, spark.read.parquet(path))
-      entries.put(libraryId, e)
+      val e = Entry(path, lib, kind, spark.read.parquet(path))
+      entries.put(lib.id, e)
       Some(e)
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** The serving entry for `libraryId` at `version`: the session's own
+  /** The serving entry for the library row `lib`: the session's own
     * registration first, else the published `_current` generation. */
-  private def liveEntry(spark: SparkSession, libraryId: String,
-                        version: Int): Option[Entry] =
-    Option(entries.get(libraryId)).filter(_.version == version)
-      .orElse(adoptCurrent(spark, libraryId, version))
+  private def liveEntry(spark: SparkSession, lib: LibraryRow): Option[Entry] =
+    Option(entries.get(lib.id)).filter(_.serves(lib))
+      .orElse(adoptCurrent(spark, lib))
 
   private def injectRule(spark: SparkSession): Unit = {
     if (!spark.experimental.extraOptimizations.contains(graft.plans.LshProbeRewrite))
@@ -262,9 +273,9 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
         spark.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(spark)
   }
 
-  /** Serve one O12 query from the registered layout if `libraryId` is
-    * registered AT `version` (else None — the caller falls back to the
-    * transient path). `pack` runs under the generation's read lease,
+  /** Serve one O12 query from the registered layout if `library` is
+    * registered at its incarnation and version (else None — the caller
+    * falls back to the transient path). `pack` runs under the generation's read lease,
     * so a concurrent re-register cannot delete the directory
     * mid-collect; it receives the served frame (plain columns + a
     * `score`, plus `index_used` when `laddered`) and whether the
@@ -272,16 +283,16 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
     * The `require` keeps a silent non-rewrite loud: the registered
     * tier exists to serve the probe, and an exact scan here would be
     * correct rows through the wrong component. */
-  private[search] def tryServe[A](spark: SparkSession, libraryId: String,
-                                  version: Int, qvec: Array[Float], k: Int,
+  private[search] def tryServe[A](spark: SparkSession, library: LibraryRow,
+                                  qvec: Array[Float], k: Int,
                                   filters: Map[String, String])
                                  (pack: (DataFrame, Boolean, String) => A): Option[A] =
-    liveEntry(spark, libraryId, version).flatMap { e =>
+    liveEntry(spark, library).flatMap { e =>
       // the HNSW kind: no filtered form (see registerHnsw) — a
       // filtered search falls back to the transient path by returning
       // None here, exactly like a stale version does
       if (e.kind == "hnsw" && filters.nonEmpty) None
-      else Some(serveEntry(spark, e, libraryId, qvec, k, filters)(pack))
+      else Some(serveEntry(spark, e, library.id, qvec, k, filters)(pack))
     }
 
   /** The last batch serve's executed-plan string (diagnostic surface —
@@ -299,12 +310,12 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
     * orchestrator loop. Returns the (q_id, rn, payload..., score) rows
     * for every request plus the tier's `index_used` value — identical
     * per-request envelope to [[tryServe]]'s. */
-  private[search] def tryServeBatch(spark: SparkSession, libraryId: String,
-                                    version: Int, qvecs: Array[Array[Float]],
+  private[search] def tryServeBatch(spark: SparkSession, library: LibraryRow,
+                                    qvecs: Array[Array[Float]],
                                     k: Int,
                                     filters: Map[String, String] = Map.empty)
   : Option[(DataFrame, Boolean, String)] =
-    liveEntry(spark, libraryId, version)
+    liveEntry(spark, library)
       // HNSW has no filtered form at either arity (see registerHnsw)
       .filterNot(e => e.kind == "hnsw" && filters.nonEmpty)
       .map { e =>
@@ -365,7 +376,7 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
             require(
               if (laddered) plan.contains("min_dist")
               else plan.contains("bucket_part") || plan.contains("c_cid"),
-              s"the $libraryId batch declaration was not rewritten to the " +
+              s"the ${library.id} batch declaration was not rewritten to the " +
                 s"registered batched serve:\n${plan.take(1500)}")
             if (laddered)
               require(!plan.contains("auto"),

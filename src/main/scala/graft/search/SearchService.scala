@@ -91,7 +91,7 @@ final class SearchService(spark: SparkSession, engine: Engine,
     // contract.
     if (index == "lsh") {
       val bridged = atRest.flatMap(
-        _.tryServe(spark, libraryId, version, qvec, k, filters) { (df, laddered, kind) =>
+        _.tryServe(spark, snap.library, qvec, k, filters) { (df, laddered, kind) =>
           val cols = Seq(col("id"), col("document_id"), col("library_id"),
             col("text"), col("metadata"), col("score")) ++
             (if (laddered) Seq(col("index_used")) else Nil)
@@ -175,11 +175,12 @@ final class SearchService(spark: SparkSession, engine: Engine,
                   k: Int = 5,
                   index: String = "brute",
                   filters: Map[String, String] = Map.empty): Seq[SearchResult] = {
-    val version = engine.getLibrary(libraryId).version
+    val library = engine.getLibrary(libraryId)
+    val version = library.version
     if (queryEmbeddings.isEmpty) return Nil
     val batched =
       if (index == "lsh" && k > 0)
-        atRest.flatMap(_.tryServeBatch(spark, libraryId, version,
+        atRest.flatMap(_.tryServeBatch(spark, library,
           queryEmbeddings.toArray, k, filters))
       else None
     batched match {

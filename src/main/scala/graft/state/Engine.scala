@@ -3,6 +3,7 @@ package graft.state
 import java.time.Instant
 import java.util.UUID
 import java.util.concurrent.atomic.AtomicReference
+import scala.util.control.NonFatal
 
 import graft.embed.Embedder
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
@@ -498,8 +499,10 @@ final class Engine(clock: () => Instant = () => Instant.now(),
   }
 
   /** Whitelist update (text / embedding / metadata.type). When text
-    * changes and no embedding is supplied, re-embed; embedder failures
-    * leave the embedding unchanged (chunk_service.py:38-45).
+    * changes and no embedding is supplied, re-embed; a non-fatal
+    * embedder failure leaves the embedding unchanged (chunk_service.py:38-45
+    * catches `Exception` only), while interrupts and VM errors propagate
+    * and the update is not applied.
     */
   def updateChunk(libId: String, docId: String, chunkId: String,
                   text: Option[String] = None,
@@ -523,7 +526,7 @@ final class Engine(clock: () => Instant = () => Instant.now(),
     val newEmbedding: Option[Array[Float]] =
       if (embedding.isDefined) embedding
       else if (textChanged) embedder.flatMap { e =>
-        try Some(e.embed(text.get)) catch { case _: Throwable => None }
+        try Some(e.embed(text.get)) catch { case NonFatal(_) => None }
       }.orElse(existing.embedding)
       else existing.embedding
     var updated: ChunkRow = null

@@ -58,3 +58,11 @@ object SqlShims {
   : Ordering[org.apache.spark.sql.catalyst.InternalRow] =
     new org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering(sortOrder, input)
 }
+
+/** Block until every event posted so far has reached the registered
+  * listeners (`listenerBus` is `private[spark]`), so a caller can read
+  * the job and stage metrics of an action it just ran. Waits at most
+  * the bus's own 10 s bound, then throws `TimeoutException`. */
+object ListenerBusDrain {
+  def apply(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}

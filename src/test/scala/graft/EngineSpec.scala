@@ -237,6 +237,21 @@ class EngineSpec extends AnyFunSuite {
     assert(up.text == "new" && up.embedding.get.toSeq == Seq(1f, 0f))
   }
 
+  test("update chunk text: an interrupted embedder propagates and leaves the chunk unchanged") {
+    val (e, lib, doc) = withLibDoc()
+    val c = e.addChunk(lib, doc, "old", Some(Array(1f, 0f)))
+    val version = e.getLibrary(lib).version
+    val interrupted = new graft.embed.Embedder {
+      def dim: Int = 2
+      def embed(text: String): Array[Float] = throw new InterruptedException("shutting down")
+    }
+    intercept[InterruptedException](
+      e.updateChunk(lib, doc, c.id, text = Some("new"), embedder = Some(interrupted)))
+    val kept = e.listChunks(lib, doc).find(_.id == c.id).get
+    assert(kept.text == "old" && kept.embedding.get.toSeq == Seq(1f, 0f))
+    assert(e.getLibrary(lib).version == version)
+  }
+
   test("update chunk embedding only") {
     val (e, lib, doc) = withLibDoc()
     val c = e.addChunk(lib, doc, "t", Some(Array(1f, 0f)))

@@ -318,6 +318,60 @@ class HttpApiSpec extends AnyFunSuite {
     } finally graft.plans.LshProbeRewrite.clear()
   }
 
+  test("a library re-created under its old id at the registered version is not served the deleted layout") {
+    graft.plans.LshProbeRewrite.clear()
+    try {
+      val engine = new Engine()
+      val dim = 8
+      val rng = new scala.util.Random(47)
+      val qv = Array.fill(dim)(rng.nextGaussian().toFloat)
+      // the same write sequence twice, so both incarnations reach the
+      // same version; only the first one holds a copy of the query
+      def populate(withGhost: Boolean): Unit = {
+        engine.createLibrary(name = "Re", id = Some("relib"))
+        engine.addDocument("relib", title = "d", id = Some("rd"))
+        engine.addChunk("relib", "rd", text = "first",
+          embedding = Some(if (withGhost) qv.clone()
+                           else Array.fill(dim)(rng.nextGaussian().toFloat)),
+          id = Some(if (withGhost) "ghost" else "fresh")): Unit
+        (0 until 14).foreach { i =>
+          engine.addChunk("relib", "rd", text = s"far-$i",
+            embedding = Some(Array.fill(dim)(rng.nextGaussian().toFloat)),
+            id = Some(f"f$i%02d")): Unit
+        }
+      }
+      populate(withGhost = true)
+      val root = "target/test-index/at-rest-bridge-recreate"
+      TestSpark.rmTree(new java.io.File(root))
+      graft.index.IndexGenerations.clear()
+      val bridgeA = new graft.search.AtRestIndexBridge(root)
+      val g1 = bridgeA.register(spark, engine, "relib")
+      val registered = engine.getLibrary("relib").version
+      def lshSearch(bridge: graft.search.AtRestIndexBridge) =
+        new graft.search.SearchService(spark, engine, atRest = Some(bridge))
+          .search("relib", queryEmbedding = Some(qv), k = 3, index = "lsh")
+      assert(lshSearch(bridgeA).hits.headOption.map(_.chunk_id).contains("ghost"))
+
+      assert(engine.deleteLibrary("relib"))
+      populate(withGhost = false)
+      assert(engine.getLibrary("relib").version == registered)
+      // the registering session's own entry, then a fresh session that
+      // finds the deleted incarnation's generation in `_current`
+      Seq("registering" -> bridgeA, "fresh" -> new graft.search.AtRestIndexBridge(root))
+        .foreach { case (who, bridge) =>
+          val res = lshSearch(bridge)
+          assert(!res.hits.exists(_.chunk_id == "ghost"),
+            s"$who session served the deleted library's chunk: ${res.hits.map(_.chunk_id)}")
+          assert(!res.indexUsed.contains("lsh_at_rest"))
+        }
+      // registering the new incarnation serves it and retires the old one
+      val g2 = bridgeA.register(spark, engine, "relib")
+      val res = lshSearch(bridgeA)
+      assert(g2 != g1 && !new java.io.File(g1).exists())
+      assert(res.indexUsed.contains("lsh_at_rest") && !res.hits.exists(_.chunk_id == "ghost"))
+    } finally graft.plans.LshProbeRewrite.clear()
+  }
+
   test("batched search: one plan answers the request set; per-request envelopes match the single route") {
     // r17 stretch (r16 verdict #7): the batched serving wins surfaced
     // through the reference's own API shape. Same engine behind the

@@ -88,10 +88,10 @@ class IndexAppendSpec extends AnyFunSuite {
     def mixture(centerSeed: Long, ids: Range, idOffset: Long): org.apache.spark.sql.DataFrame =
       ids.map { i =>
         val c = i % 25
-        val center = Array.tabulate(dim)(j => LshSweep.gauss(centerSeed + c, j))
+        val center = Array.tabulate(dim)(j => Fixtures.gauss(centerSeed + c, j))
         val cn = math.sqrt(center.map(x => x * x).sum)
         (idOffset + i, Array.tabulate(dim)(j =>
-          (center(j) / cn + 0.1 * LshSweep.gauss(0xBEEFL + idOffset + i, j)).toFloat))
+          (center(j) / cn + 0.1 * Fixtures.gauss(0xBEEFL + idOffset + i, j)).toFloat))
       }.toDF("vec_id", "embedding")
     val base = mixture(0xC0FFEEL, 0 until 2000, 0L)
     val cents = IvfKnn.centroids(base, col("vec_id"), col("embedding"), 53L)

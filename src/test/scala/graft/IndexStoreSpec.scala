@@ -84,10 +84,10 @@ class IndexStoreSpec extends AnyFunSuite {
     val dim = 64
     def mixPoint(centerSeed: Long, id: Long): Array[Float] = {
       val c = id % 25
-      val center = Array.tabulate(dim)(j => LshSweep.gauss(centerSeed + c, j))
+      val center = Array.tabulate(dim)(j => Fixtures.gauss(centerSeed + c, j))
       val cn = math.sqrt(center.map(x => x * x).sum)
       Array.tabulate(dim)(j =>
-        (center(j) / cn + 0.1 * LshSweep.gauss(0xBEEFL + id, j)).toFloat)
+        (center(j) / cn + 0.1 * Fixtures.gauss(0xBEEFL + id, j)).toFloat)
     }
     import spark.implicits._
     val base = (0L until 1500L).map(i => (i, mixPoint(0xC0FFEEL, i)))

@@ -14,7 +14,7 @@ class LshSweepSpec extends AnyFunSuite {
 
   test("gaussianMixture is deterministic and partitioning-invariant") {
     def corpus(parts: Int) =
-      LshSweep.gaussianMixture(spark, 200, 16, 10, 0.08)
+      Fixtures.gaussianMixture(spark, 200, 16, 10, 0.08)
         .repartition(parts)
         .select(col("vec_id"), col("embedding"))
         .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
@@ -26,7 +26,7 @@ class LshSweepSpec extends AnyFunSuite {
   }
 
   test("gaussianMixture clusters are tight at small sigma: same-cluster cosine beats cross") {
-    val rows = LshSweep.gaussianMixture(spark, 100, 32, 5, 0.05)
+    val rows = Fixtures.gaussianMixture(spark, 100, 32, 5, 0.05)
       .as[(Long, Seq[Float])].collect().toSeq
       .map { case (id, v) => (id % 5, v.toArray) }
     def cos(a: Array[Float], b: Array[Float]): Double = {

@@ -4,7 +4,7 @@ import graft.embed.{Embedder, HashingEmbedder}
 import graft.index.IndexCache
 import graft.search.SearchService
 import graft.state.Engine
-import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.sql.graft.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.QueryExecution
