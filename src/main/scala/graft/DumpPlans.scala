@@ -3,12 +3,36 @@ package graft
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.{Files, Paths}
 
+import scala.util.matching.Regex
+
 /** Writes docs/PLANS.md: the formatted physical plan of each headline
   * query at sf0.01 — the artifact to eyeball for pushdown (PushedFilters /
   * ReadSchema), codegen spans, TakeOrderedAndProject, partial
-  * aggregation and join strategies.
+  * aggregation and join strategies. Run-dependent ids are masked
+  * ([[normalize]]), so regenerating it over unchanged plans rewrites
+  * the same bytes.
   */
 object DumpPlans {
+
+  /** Tokens of an explain that change from run to run over the same
+    * plans, each with its mask (a regex replacement: `$1` is the
+    * pattern's first group). Codegen and AQE stage ids follow the order
+    * in which stages happen to be planned or materialized. */
+  private val volatileTokens: Seq[(Regex, String)] = Seq(
+    raw"#\d+".r -> "#n",                                          // expression ids
+    raw"\[plan_id=\d+\]".r -> "[plan_id=n]",
+    raw"\*\(\d+\)".r -> "*(n)",                                  // codegen stage ids
+    raw"\[codegen id : \d+\]".r -> "[codegen id : n]",
+    raw"(QueryStage\n(?:Output .*\n)?Arguments: )\d+".r -> "$1n",  // AQE stage ids
+    raw"\$$\$$Lambda(\$$\d+)?/0x[0-9a-f]+".r -> raw"\$$\$$Lambda",  // lambda classes
+    raw"(?<=[\w$$;\[])@[0-9a-f]{1,8}\b".r -> "@n",                // identity hashes
+    raw"Queries\.scala:\d+".r -> "Queries.scala:n")
+
+  /** `plans` with every run-dependent token masked, so two runs over the
+    * same plans write the same bytes and a diff shows only plan changes. */
+  def normalize(plans: String): String =
+    volatileTokens.foldLeft(plans) { case (acc, (re, mask)) => re.replaceAllIn(acc, mask) }
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val spark = LocalSpark.builder(8)
@@ -270,7 +294,7 @@ object DumpPlans {
       sb.append(s"\n## bucketed co-located join (no Exchange)\n\n```\n${explainOf(j)}\n```\n")
     }
     Files.createDirectories(Paths.get("docs"))
-    Files.writeString(Paths.get("docs/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("docs/PLANS.md"), normalize(sb.toString))
     println(s"PLANS written: ${sb.length} chars")
     spark.stop()
   }

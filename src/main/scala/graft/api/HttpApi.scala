@@ -1,13 +1,15 @@
 package graft.api
 
 import java.net.InetSocketAddress
-import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ExecutorService, Executors, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.embed.Embedder
-import graft.search.SearchService
+import graft.search.{SearchResult, SearchService}
 import graft.state.{BadRequestError, Engine, NotFoundError}
 import org.apache.spark.sql.SparkSession
 
@@ -22,6 +24,21 @@ import org.apache.spark.sql.SparkSession
   * input), 404 for unknown ids. The search envelope carries
   * hits/index/index_used/library_version/durable_execution exactly like
   * search.py:75-87 (index_used absent on early-exit paths).
+  *
+  * Handlers run on a fixed pool of daemon threads, one per core of the
+  * session (`defaultParallelism`, the `n` of `local[n]`), so concurrent
+  * requests overlap instead of queueing behind the JDK server's one
+  * dispatcher thread. Handlers share only state that is safe under
+  * concurrent readers: the `Engine` (an immutable `EngineState` behind
+  * an `AtomicReference`, writes serialized on its write lock), the
+  * `IndexCache` (one lock), the at-rest bridge and rule registries
+  * (concurrent maps, generation leases) and the configured
+  * `ObjectMapper`.
+  *
+  * `stop()` stops the server, then shuts the pool down and waits (at
+  * most 30 s, then interrupts) for in-flight handlers, and only then
+  * clears the cache: a search finishing after the clear would re-insert
+  * a cached frame that nothing unpersists.
   */
 final class HttpApi(spark: SparkSession, engine: Engine, embedder: Embedder,
                     atRest: Option[graft.search.AtRestIndexBridge] = None) {
@@ -31,18 +48,29 @@ final class HttpApi(spark: SparkSession, engine: Engine, embedder: Embedder,
   private val service = new SearchService(spark, engine, Some(embedder),
     indexCache = Some(indexCache), atRest = atRest)
   private var server: HttpServer = _
+  private var pool: ExecutorService = _
 
   def start(port: Int = 0): Int = {
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     server.createContext("/vector_db", (ex: HttpExchange) => handle(ex))
-    server.setExecutor(null)
+    pool = Executors.newFixedThreadPool(spark.sparkContext.defaultParallelism, (r: Runnable) => {
+      val t = new Thread(r, "graft-http-handler")
+      t.setDaemon(true)
+      t
+    })
+    server.setExecutor(pool)
     server.start()
     server.getAddress.getPort
   }
 
-  /** Stop serving and release every frame the API's cache holds. */
+  /** Stop serving, drain the in-flight handlers, then release every
+    * frame the API's cache holds. */
   def stop(): Unit = {
     if (server != null) server.stop(0)
+    if (pool != null) {
+      pool.shutdown()
+      if (!pool.awaitTermination(30, TimeUnit.SECONDS)) pool.shutdownNow(): Unit
+    }
     indexCache.clear()
   }
 
@@ -65,11 +93,38 @@ final class HttpApi(spark: SparkSession, engine: Engine, embedder: Embedder,
     if (bytes.isEmpty) mapper.createObjectNode() else mapper.readTree(bytes)
   }
 
+  private def optField(n: JsonNode, field: String): Option[JsonNode] =
+    Option(n.get(field)).filterNot(_.isNull)
+
   private def optText(n: JsonNode, field: String): Option[String] =
-    Option(n.get(field)).filterNot(_.isNull).map(_.asText())
+    optField(n, field).map(_.asText())
 
   private def metaField(n: JsonNode, key: String): Option[String] =
-    Option(n.get("metadata")).filterNot(_.isNull).flatMap(m => optText(m, key))
+    optField(n, "metadata").flatMap(m => optText(m, key))
+
+  private def floats(arr: JsonNode): Array[Float] =
+    arr.elements().asScala.map(_.floatValue()).toArray
+
+  /** The `filters` object as a string map; empty when absent. */
+  private def filters(n: JsonNode): Map[String, String] =
+    optField(n, "filters").fold(Map.empty[String, String])(
+      _.fields().asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
+
+  /** Packs `res` into `o`: hits, index, index_used (absent on early
+    * exits) and library_version. */
+  private def putResult(o: ObjectNode, res: SearchResult): ObjectNode = {
+    val hits = o.putArray("hits")
+    res.hits.foreach { h =>
+      val ho = hits.addObject()
+      ho.put("chunk_id", h.chunk_id).put("document_id", h.document_id)
+        .put("library_id", h.library_id).put("text", h.text).put("score", h.score)
+      val hm = ho.putObject("metadata")
+      h.metadata.foreach { case (k, v) => hm.put(k, v) }
+    }
+    o.put("index", res.index)
+    res.indexUsed.foreach(o.put("index_used", _))
+    o.put("library_version", res.libraryVersion)
+  }
 
   private def libraryJson(l: graft.state.LibraryRow): ObjectNode = {
     val o = mapper.createObjectNode()
@@ -164,13 +219,7 @@ final class HttpApi(spark: SparkSession, engine: Engine, embedder: Embedder,
           optText(b, "text") match {
             case None => respond(ex, 400, Some(error("text is required")))
             case Some(text) =>
-              val emb = Option(b.get("embedding")).filterNot(_.isNull)
-                .map(_.elements().asInstanceOf[java.util.Iterator[JsonNode]])
-                .map { it =>
-                  val buf = scala.collection.mutable.ArrayBuffer.empty[Float]
-                  while (it.hasNext) buf += it.next().floatValue()
-                  buf.toArray
-                }
+              val emb = optField(b, "embedding").map(floats)
               val meta = metaField(b, "type").map(t => Map("type" -> t)).getOrElse(Map.empty[String, String])
               respond(ex, 201, Some(chunkJson(engine.addChunk(libId, docId, text, emb, meta))))
           }
@@ -180,12 +229,7 @@ final class HttpApi(spark: SparkSession, engine: Engine, embedder: Embedder,
           respond(ex, 200, Some(a))
         case ("PUT", List("vector_db", "libraries", libId, "documents", docId, "chunks", chunkId)) =>
           val b = readBody(ex)
-          val emb = Option(b.get("embedding")).filterNot(_.isNull).map { arr =>
-            val it = arr.elements()
-            val buf = scala.collection.mutable.ArrayBuffer.empty[Float]
-            while (it.hasNext) buf += it.next().floatValue()
-            buf.toArray
-          }
+          val emb = optField(b, "embedding").map(floats)
           respond(ex, 200, Some(chunkJson(engine.updateChunk(libId, docId, chunkId,
             optText(b, "text"), emb, metaField(b, "type"), Some(embedder)))))
         case ("DELETE", List("vector_db", "libraries", libId, "documents", docId, "chunks", chunkId)) =>
@@ -196,40 +240,18 @@ final class HttpApi(spark: SparkSession, engine: Engine, embedder: Embedder,
         case ("POST", List("vector_db", "libraries", libId, "search")) =>
           val b = readBody(ex)
           val qText = optText(b, "query_text")
-          val qEmb = Option(b.get("query_embedding")).filterNot(_.isNull).map { arr =>
-            val it = arr.elements()
-            val buf = scala.collection.mutable.ArrayBuffer.empty[Float]
-            while (it.hasNext) buf += it.next().floatValue()
-            buf.toArray
-          }
+          val qEmb = optField(b, "query_embedding").map(floats)
           if (qText.isEmpty && qEmb.isEmpty)
             respond(ex, 400, Some(error("query_text or query_embedding required")))
           else {
-            val filters = Option(b.get("filters")).filterNot(_.isNull).map { f =>
-              val it = f.fields()
-              val m = scala.collection.mutable.Map.empty[String, String]
-              while (it.hasNext) { val e = it.next(); m += e.getKey -> e.getValue.asText() }
-              m.toMap
-            }.getOrElse(Map.empty[String, String])
             val res = service.search(libId,
               queryText = qText, queryEmbedding = qEmb,
               k = Option(b.get("k")).map(_.asInt()).getOrElse(5),
               index = optText(b, "index").getOrElse("brute"),
               lshTables = Option(b.get("lsh_tables")).map(_.asInt()).getOrElse(8),
               lshPlanes = Option(b.get("lsh_planes")).map(_.asInt()).getOrElse(12),
-              filters = filters)
-            val o = mapper.createObjectNode()
-            val hits = o.putArray("hits")
-            res.hits.foreach { h =>
-              val ho = hits.addObject()
-              ho.put("chunk_id", h.chunk_id).put("document_id", h.document_id)
-                .put("library_id", h.library_id).put("text", h.text).put("score", h.score)
-              val hm = ho.putObject("metadata")
-              h.metadata.foreach { case (k, v) => hm.put(k, v) }
-            }
-            o.put("index", res.index)
-            res.indexUsed.foreach(o.put("index_used", _)) // absent on early exits
-            o.put("library_version", res.libraryVersion)
+              filters = filters(b))
+            val o = putResult(mapper.createObjectNode(), res)
             o.put("durable_execution", false)
             respond(ex, 200, Some(o))
           }
@@ -239,47 +261,18 @@ final class HttpApi(spark: SparkSession, engine: Engine, embedder: Embedder,
         // per-request envelopes identical to the single-search route
         case ("POST", List("vector_db", "libraries", libId, "search_batch")) =>
           val b = readBody(ex)
-          val qEmbs = Option(b.get("query_embeddings")).filterNot(_.isNull).map { arr =>
-            val it = arr.elements()
-            val out = scala.collection.mutable.ArrayBuffer.empty[Array[Float]]
-            while (it.hasNext) {
-              val inner = it.next().elements()
-              val buf = scala.collection.mutable.ArrayBuffer.empty[Float]
-              while (inner.hasNext) buf += inner.next().floatValue()
-              out += buf.toArray
-            }
-            out.toSeq
-          }.getOrElse(Nil)
+          val qEmbs = optField(b, "query_embeddings")
+            .fold(Seq.empty[Array[Float]])(_.elements().asScala.map(floats).toSeq)
           if (qEmbs.isEmpty)
             respond(ex, 400, Some(error("query_embeddings (non-empty) required")))
           else {
-            val bFilters = Option(b.get("filters")).filterNot(_.isNull).map { f =>
-              val it = f.fields()
-              val m = scala.collection.mutable.Map.empty[String, String]
-              while (it.hasNext) { val e = it.next(); m += e.getKey -> e.getValue.asText() }
-              m.toMap
-            }.getOrElse(Map.empty[String, String])
             val results = service.searchBatch(libId, qEmbs,
               k = Option(b.get("k")).map(_.asInt()).getOrElse(5),
               index = optText(b, "index").getOrElse("brute"),
-              filters = bFilters)
+              filters = filters(b))
             val o = mapper.createObjectNode()
             val arr = o.putArray("results")
-            results.foreach { res =>
-              val ro = arr.addObject()
-              val hits = ro.putArray("hits")
-              res.hits.foreach { h =>
-                val ho = hits.addObject()
-                ho.put("chunk_id", h.chunk_id).put("document_id", h.document_id)
-                  .put("library_id", h.library_id).put("text", h.text)
-                  .put("score", h.score)
-                val hm = ho.putObject("metadata")
-                h.metadata.foreach { case (k, v) => hm.put(k, v) }
-              }
-              ro.put("index", res.index)
-              res.indexUsed.foreach(ro.put("index_used", _))
-              ro.put("library_version", res.libraryVersion)
-            }
+            results.foreach(res => putResult(arr.addObject(), res))
             respond(ex, 200, Some(o))
           }
 

@@ -186,22 +186,27 @@ object IndexGenerations {
       if (markerFile(kk).exists()) ng.retirePending = true
       ng
     })
+    // the heartbeat write and the manifest removal happen in the same
+    // critical section as the holder-count change: done outside it, a
+    // release of the holder's last lease could delete the heartbeat a
+    // concurrent lease of the same holder had just written, leaving that
+    // reader with no manifest on disk
     g.synchronized {
       require(!g.retired && !g.retirePending,
         s"index generation $path is retired — re-register and serve a live generation")
       g.leases += 1
       g.holders(holder) = g.holders.getOrElse(holder, 0) + 1
+      heartbeat(k, holder)
     }
-    heartbeat(k, holder)
     try f
     finally {
-      val (maybeDelete, holderDone) = g.synchronized {
+      val maybeDelete = g.synchronized {
         g.leases -= 1
         val hc = g.holders.getOrElse(holder, 1) - 1
-        if (hc <= 0) g.holders.remove(holder) else g.holders(holder) = hc
-        (g.retirePending && g.leases == 0, hc <= 0)
+        if (hc <= 0) { g.holders.remove(holder); releaseManifest(k, holder) }
+        else g.holders(holder) = hc
+        g.retirePending && g.leases == 0
       }
-      if (holderDone) releaseManifest(k, holder)
       if (maybeDelete) {
         // the deferred delete defers FURTHER while a foreign session's
         // manifest is fresh — the marker stays on disk and a later

@@ -264,7 +264,10 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
     Option(entries.get(lib.id)).filter(_.serves(lib))
       .orElse(adoptCurrent(spark, lib))
 
-  private def injectRule(spark: SparkSession): Unit = {
+  /** Adds the rule and its strategy to the session once. The check and
+    * the append run under the session's `experimental` lock: concurrent
+    * serves adopting a generation would otherwise both append. */
+  private def injectRule(spark: SparkSession): Unit = spark.experimental.synchronized {
     if (!spark.experimental.extraOptimizations.contains(graft.plans.LshProbeRewrite))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.LshProbeRewrite

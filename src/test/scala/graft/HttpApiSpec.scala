@@ -2,11 +2,12 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, CyclicBarrier, TimeUnit}
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.api.HttpApi
-import graft.embed.HashingEmbedder
-import graft.state.Engine
+import graft.embed.{Embedder, HashingEmbedder}
+import graft.state.{Engine, EngineState}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -104,6 +105,151 @@ class HttpApiSpec extends AnyFunSuite {
     } finally api.stop()
     assert(api.indexCache.frames.isEmpty)
     assert(cached.forall(_.storageLevel == StorageLevel.NONE))
+  }
+
+  /** A `HashingEmbedder(dim = 16)` whose `embedAt` (the query path)
+    * first runs `gate`. */
+  private def gatedEmbedder(gate: () => Unit): Embedder = new Embedder {
+    private val base = HashingEmbedder(dim = 16)
+    def dim: Int = base.dim
+    def embed(text: String): Array[Float] = base.embed(text)
+    override def embedAt(text: String, d: Int): Array[Float] = { gate(); base.embedAt(text, d) }
+  }
+
+  /** An engine with one library of three embedded chunks; its id. */
+  private def landmarks(e: Engine): String = {
+    val emb = HashingEmbedder(dim = 16)
+    val lib = e.createLibrary("L").id
+    val doc = e.addDocument(lib, "D").id
+    Seq("eiffel tower", "big ben", "statue of liberty")
+      .foreach(t => e.addChunk(lib, doc, t, Some(emb.embed(t))))
+    lib
+  }
+
+  private def searchRequest(url: String, body: String): HttpRequest =
+    HttpRequest.newBuilder(URI.create(url))
+      .POST(HttpRequest.BodyPublishers.ofString(body)).build()
+
+  test("two searches run side by side on the handler pool") {
+    // each search's embedder waits for the other at a barrier: served one
+    // after the other, the first would time out waiting for the second
+    val barrier = new CyclicBarrier(2)
+    val e = new Engine()
+    val lib = landmarks(e)
+    val api = new HttpApi(spark, e, gatedEmbedder(() => barrier.await(10, TimeUnit.SECONDS): Unit))
+    val port = api.start()
+    try {
+      val url = s"http://127.0.0.1:$port/vector_db/libraries/$lib/search"
+      val pending = Seq("eiffel tower", "big ben").map(q => client.sendAsync(
+        searchRequest(url, s"""{"query_text": "$q", "k": 2}"""), HttpResponse.BodyHandlers.ofString()))
+      pending.map(_.get(30, TimeUnit.SECONDS)).foreach { r =>
+        assert(r.statusCode() == 200, s"concurrent search failed: ${r.body()}")
+      }
+    } finally api.stop()
+  }
+
+  test("concurrent brute searches under a writer answer the exact top-k of the version they report") {
+    val e = new Engine()
+    val lib = e.createLibrary("C").id
+    val doc = e.addDocument(lib, "D").id
+    val dim = 8
+    val rng = new scala.util.Random(31)
+    def vec(): Array[Float] = Array.fill(dim)(rng.nextGaussian().toFloat)
+    (0 until 40).foreach(i => e.addChunk(lib, doc, s"c$i", Some(vec())))
+    // the one writer publishes each version before any search can report it
+    val states = new ConcurrentHashMap[Int, EngineState]()
+    def capture(): Unit = { val s = e.state; states.put(s.library(lib).version, s): Unit }
+    capture()
+    val queries = Array.fill(4, 12)(vec())
+    val writes = Array.fill(20)(vec())
+    def json(v: Array[Float]) = v.mkString("[", ",", "]")
+
+    val api = new HttpApi(spark, e, HashingEmbedder(dim = dim))
+    val base = s"http://127.0.0.1:${api.start()}/vector_db/libraries/$lib"
+    // per reader: (query, status, reported version, hit ids with scores)
+    val answers = Array.fill(4)(Vector.empty[(Array[Float], Int, Int, Seq[(String, Double)])])
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    def run(body: => Unit): Thread = {
+      val t = new Thread(() => try body catch { case err: Throwable => failures.add(err): Unit })
+      t.start()
+      t
+    }
+    try {
+      val readers = (0 until 4).map { t =>
+        run {
+          queries(t).foreach { q =>
+            val r = req("POST", s"$base/search", s"""{"query_embedding": ${json(q)}, "k": 5}""")
+            val env = mapper.readTree(r.body())
+            val hits =
+              if (r.statusCode() != 200) Nil
+              else (0 until env.get("hits").size()).map { i =>
+                val h = env.get("hits").get(i)
+                h.get("chunk_id").asText() -> h.get("score").asDouble()
+              }
+            val version = if (r.statusCode() == 200) env.get("library_version").asInt() else -1
+            answers(t) = answers(t) :+ ((q, r.statusCode(), version, hits))
+          }
+        }
+      }
+      val writer = run {
+        writes.zipWithIndex.foreach { case (w, i) =>
+          val r = req("POST", s"$base/documents/$doc/chunks",
+            s"""{"text": "w$i", "embedding": ${json(w)}}""")
+          assert(r.statusCode() == 201, s"write failed: ${r.body()}")
+          capture()
+        }
+      }
+      (readers :+ writer).foreach(_.join())
+    } finally api.stop()
+
+    assert(failures.isEmpty, s"a client thread failed: ${failures.peek()}")
+    def cosine(a: Array[Float], b: Array[Float]): Double = {
+      val dot = a.indices.map(i => a(i).toDouble * b(i)).sum
+      dot / math.sqrt(a.map(x => x.toDouble * x).sum * b.map(x => x.toDouble * x).sum)
+    }
+    answers.zipWithIndex.foreach { case (rs, t) =>
+      assert(rs.size == 12)
+      rs.foreach { case (q, status, version, hits) =>
+        assert(status == 200)
+        val s = Option(states.get(version)).getOrElse(
+          fail(s"reader $t reported version $version, which no write published"))
+        val exact = s.chunks.filter(c => c.library_id == lib && c.embedding.isDefined)
+          .map(c => c.id -> cosine(q, c.embedding.get))
+          .sortBy { case (id, score) => (-score, id) }.take(5)
+        assert(hits.map(_._1) == exact.map(_._1), s"reader $t at version $version")
+        hits.zip(exact).foreach { case ((_, got), (_, want)) => assert(math.abs(got - want) < 1e-5) }
+      }
+      val versions = rs.map(_._3)
+      assert(versions == versions.sorted, s"reader $t saw versions go back: $versions")
+    }
+  }
+
+  test("stop waits for an in-flight search before releasing the cache") {
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val e = new Engine()
+    val lib = landmarks(e)
+    val api = new HttpApi(spark, e, gatedEmbedder { () =>
+      entered.countDown()
+      release.await(30, TimeUnit.SECONDS): Unit
+    })
+    val port = api.start()
+    // lsh: the bucketed frame is cached AFTER the embedder returns, so a
+    // stop that did not wait would clear the cache before this insert
+    val inflight = client.sendAsync(searchRequest(
+      s"http://127.0.0.1:$port/vector_db/libraries/$lib/search",
+      """{"query_text": "eiffel tower", "k": 2, "index": "lsh"}"""),
+      HttpResponse.BodyHandlers.ofString())
+    assert(entered.await(30, TimeUnit.SECONDS), "the search never reached the embedder")
+    val stopper = new Thread(() => api.stop())
+    stopper.start()
+    Thread.sleep(300)
+    assert(stopper.isAlive, "stop() returned while a handler was still running")
+    release.countDown()
+    stopper.join(60000)
+    assert(!stopper.isAlive, "stop() did not return after the handler finished")
+    assert(api.indexCache.frames.isEmpty)
+    inflight.handle((_, _) => ()): Unit // the server closed the connection
   }
 
   test("validation and 404 mapping mirrors the routers") {

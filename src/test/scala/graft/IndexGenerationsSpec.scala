@@ -212,6 +212,34 @@ class IndexGenerationsSpec extends AnyFunSuite {
     assert(!manifest.exists(), "last release must clear the holder manifest")
   }
 
+  test("concurrent leases of one holder always see the holder's manifest") {
+    // a release of the holder's last lease must not delete the heartbeat
+    // a concurrent lease of the same holder has just written: the count
+    // change and the manifest write/removal share one critical section
+    IndexGenerations.clear()
+    val path = stage("holder-race")
+    val manifest = new java.io.File(new java.io.File(path, "_serving"), "holder-r")
+    val missing = new java.util.concurrent.atomic.AtomicInteger(0)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val threads = (0 until 4).map { _ =>
+      val t = new Thread(() => {
+        start.await()
+        (0 until 2000).foreach { _ =>
+          IndexGenerations.lease(path, "holder-r") {
+            if (!manifest.exists()) missing.incrementAndGet(): Unit
+          }
+        }
+      })
+      t.start()
+      t
+    }
+    start.countDown()
+    threads.foreach(_.join())
+    assert(missing.get == 0, s"${missing.get} of 8000 leases ran without their manifest")
+    assert(IndexGenerations.liveLeases(path) == 0)
+    assert(!manifest.exists(), "last release must clear the holder manifest")
+  }
+
   test("bridge construction sweeps a crashed predecessor's marked generations") {
     // r17 (r16 verdict #6): the sweep existed but no production path
     // called it — a crashed JVM's marked directories persisted until a
