@@ -4,6 +4,7 @@ import graft.dedup.Dedup
 import graft.functions.{TextFunctions, VectorFunctions}
 import graft.index.{BruteForceKnn, IvfKnn, RandomHyperplaneLsh}
 import graft.multimodal.Multimodal
+import graft.plans.LshProbeRewrite
 import graft.state.Engine
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -140,81 +141,98 @@ object Queries {
   // partition count (r18: scale-adaptive, see
   // [[graft.index.LshIndexStore.adaptivePartitions]]) — every probe
   // over the layout must compute bucket_part with the SAME modulus the
-  // writer used, so the count travels with the FileIndex.
-  private val lshRuleIndexCache = new SessionCache[String, (DataFrame, Int)]
+  // writer used, so the count travels with the FileIndex. Keyed by the
+  // layout path.
+  private val lshLayoutCache = new SessionCache[String, (DataFrame, Int)]
 
-  /** The at-rest rule-registered index table plus rule/strategy
-    * injection — one registration and one cached FileIndex shared by
-    * the point-query gate ([[knnLshRule]]) and the serving stream
-    * ([[knnServeStreamRule]]). The registration's `maxHamming` is the
-    * path's serving policy (0 = exact bucket, 1 = 1-bit multi-probe),
-    * so each policy gets its own at-rest copy of the layout — the
-    * registration IS the index choice. Returns (layout, physical
-    * partition count). */
-  private def lshRuleIndexEntry(spark: SparkSession, sfDir: String,
-                                maxHamming: Int = 0): (DataFrame, Int) = {
+  /** The one builder of the rule-served 8×12 LSH gate layouts: writes
+    * `corpus` to `path` once per session, registers the path under the
+    * given policy and injects the rule. The registration's `maxHamming`
+    * is the path's serving policy (0 = exact bucket, 1 = 1-bit
+    * multi-probe) and `guaranteeK` its filtered policy, so each policy
+    * gets its own at-rest copy of the layout — the registration IS the
+    * index choice. Returns (layout, physical partition count). */
+  private def lshLayout(spark: SparkSession, path: String, maxHamming: Int = 0,
+                        guaranteeK: Boolean = false)
+                       (corpus: => DataFrame): (DataFrame, Int) = {
     val lsh = RandomHyperplaneLsh(8, 12, 42L)
-    val tag = if (maxHamming == 0) "" else s"-mp$maxHamming"
-    val p = s"target/gate-index/lsh-rule$tag-${math.abs(sfDir.hashCode)}"
-    val (base, parts) = lshRuleIndexCache.getOrElseUpdate(spark, s"$tag:$sfDir") {
-      val corpus = Tables.embeddings(spark, sfDir)
-      val pp = graft.index.LshIndexStore.adaptivePartitions(corpus)
-      graft.index.LshIndexStore(lsh, 64, pp).write(corpus, "embedding", p)
-      (spark.read.parquet(p), pp)
+    val (base, parts) = lshLayoutCache.getOrElseUpdate(spark, path) {
+      val c = corpus
+      val pp = graft.index.LshIndexStore.adaptivePartitions(c)
+      graft.index.LshIndexStore(lsh, 64, pp).write(c, "embedding", path)
+      (spark.read.parquet(path), pp)
     }
     // register on EVERY call, not only on the cache-miss build: the
     // registry is global and clear()-able (LshProbeRewriteSpec does),
     // while the cached FileIndex is per-session — registering inside
     // the miss branch let a registry clear strand later gate calls on
-    // a cached-but-unregistered table, failing their rewrite `require`
-    graft.plans.LshProbeRewrite.register(p, lsh, 64,
-      numPhysicalPartitions = parts, maxHamming = maxHamming)
-    injectProbeRule(spark)
+    // a cached-but-unregistered table, failing their rewrite check
+    LshProbeRewrite.register(path, lsh, 64, numPhysicalPartitions = parts,
+      maxHamming = maxHamming, guaranteeK = guaranteeK)
+    LshProbeRewrite.inject(spark)
     (base, parts)
+  }
+
+  /** The dataset's rule-registered LSH layout — one registration and
+    * one cached FileIndex shared by the point-query gate
+    * ([[knnLshRule]]) and the serving streams ([[knnServeStreamRule]]),
+    * one copy per `maxHamming` policy. */
+  private def lshRuleIndexEntry(spark: SparkSession, sfDir: String,
+                                maxHamming: Int = 0): (DataFrame, Int) = {
+    val tag = if (maxHamming == 0) "" else s"-mp$maxHamming"
+    lshLayout(spark, s"target/gate-index/lsh-rule$tag-${math.abs(sfDir.hashCode)}",
+      maxHamming = maxHamming)(Tables.embeddings(spark, sfDir))
   }
 
   private def lshRuleIndexTable(spark: SparkSession, sfDir: String,
                                 maxHamming: Int = 0): DataFrame =
     lshRuleIndexEntry(spark, sfDir, maxHamming)._1
 
-  /** Idempotent per-session injection of the probe rewrite + its
-    * planner strategy (the driver's Verify/Bench sessions are built
-    * without [[graft.GraftExtensions]]) — shared by every rule-served
-    * gate regardless of the registered index kind. */
-  private def injectProbeRule(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.LshProbeRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.LshProbeRewrite
-    if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(spark)
-  }
-
-  /** The at-rest IVF layout registered with the optimizer rule — same
-    * FileIndex-caching rationale as [[lshRuleIndexTable]]; the
-    * registration carries the index KIND (centroids + nprobe), so the
-    * caller's plain top-k is rewritten to the centroid probe without
-    * ever naming IVF. Centroids are [[IvfKnn.centroids]]' deterministic
-    * stride-53 sample — the exact model `ann_ivf` serves and its DuckDB
-    * oracle replays. */
-  private val ivfRuleIndexCache = new SessionCache[String, DataFrame]
-  // centroids are cached alongside so the every-call re-registration
-  // (see lshRuleIndexTable) never re-collects them
+  /** The centroids of the dataset's IVF model: [[IvfKnn.centroids]]'
+    * deterministic stride-53 sample — the exact model `ann_ivf` serves
+    * and its DuckDB oracle replays, shared by every IVF layout over the
+    * dataset and by ann_ivfpq. */
   private val ivfRuleCentsCache = new SessionCache[String, Array[(Long, Array[Float])]]
   private def ivfRuleCents(spark: SparkSession, sfDir: String): Array[(Long, Array[Float])] =
     ivfRuleCentsCache.getOrElseUpdate(spark, sfDir)(
       IvfKnn.centroids(Tables.embeddings(spark, sfDir),
         col("vec_id"), col("embedding"), stride = 53L))
-  private def ivfRuleIndexTable(spark: SparkSession, sfDir: String): DataFrame = {
-    val cents = ivfRuleCents(spark, sfDir)
-    val p = s"target/gate-index/ivf-rule-${math.abs(sfDir.hashCode)}"
-    val base = ivfRuleIndexCache.getOrElseUpdate(spark, sfDir) {
-      graft.index.IvfIndexStore(cents).write(Tables.embeddings(spark, sfDir), "embedding", p)
-      spark.read.parquet(p)
+
+  /** The rule-served IVF layouts, each with the centroids it was written
+    * with, keyed by layout path — same FileIndex-caching rationale as
+    * [[lshLayoutCache]]. */
+  private val ivfLayoutCache =
+    new SessionCache[String, (DataFrame, Array[(Long, Array[Float])])]
+
+  /** The one builder of the rule-served IVF gate layouts: `build` writes
+    * the layout at `path` once per session and returns its centroids;
+    * every call registers the path with them (the registration carries
+    * the index KIND — centroids + nprobe — so the caller's plain top-k
+    * is rewritten to the centroid probe without ever naming IVF) and
+    * injects the rule. */
+  private def ivfLayout(spark: SparkSession, path: String, nprobe: Int,
+                        guaranteeK: Boolean = false)
+                       (build: => Array[(Long, Array[Float])]): DataFrame = {
+    val (base, cents) = ivfLayoutCache.getOrElseUpdate(spark, path) {
+      val c = build
+      (spark.read.parquet(path), c)
     }
-    graft.plans.LshProbeRewrite.registerIvf(p, cents, nprobe = 2)
-    injectProbeRule(spark)
+    LshProbeRewrite.registerIvf(path, cents, nprobe, guaranteeK)
+    LshProbeRewrite.inject(spark)
     base
+  }
+
+  /** The dataset's IVF layout over [[ivfRuleCents]] at nprobe = 2, one
+    * copy per `guaranteeK` policy (the registry keys policies by path). */
+  private def ivfRuleIndexTable(spark: SparkSession, sfDir: String,
+                                guaranteeK: Boolean = false): DataFrame = {
+    val tag = if (guaranteeK) "-gk" else ""
+    val p = s"target/gate-index/ivf-rule$tag-${math.abs(sfDir.hashCode)}"
+    ivfLayout(spark, p, nprobe = 2, guaranteeK) {
+      val cents = ivfRuleCents(spark, sfDir)
+      graft.index.IvfIndexStore(cents).write(Tables.embeddings(spark, sfDir), "embedding", p)
+      cents
+    }
   }
 
   /** Deterministic CLUSTERED embedding fixture (r13 verdict #5): the
@@ -283,32 +301,36 @@ object Queries {
     * gate pins the served rows to the oracle's from-scratch replay
     * (assignment, probe ranking, rerank, tie-breaks).
     */
-  private val clusteredIvfRuleCache = new SessionCache[String, DataFrame]
-  private val clusteredCentsCache = new SessionCache[String, Array[(Long, Array[Float])]]
   def annIvfRuleClustered(spark: SparkSession, sfDir: String): DataFrame = {
     val p = "target/gate-index/ivf-rule-clustered-n4000-c25-s010"
-    val cents = clusteredCentsCache.getOrElseUpdate(spark, "v1")(
-      clusteredCents(spark.read.parquet(clusteredFixtureDir(spark))))
-    val base = clusteredIvfRuleCache.getOrElseUpdate(spark, "v1") {
-      graft.index.IvfIndexStore(cents)
-        .write(spark.read.parquet(clusteredFixtureDir(spark)), "embedding", p)
-      spark.read.parquet(p)
+    val base = ivfLayout(spark, p, nprobe = 4) {
+      val fixture = spark.read.parquet(clusteredFixtureDir(spark))
+      val cents = clusteredCents(fixture)
+      graft.index.IvfIndexStore(cents).write(fixture, "embedding", p)
+      cents
     }
-    graft.plans.LshProbeRewrite.registerIvf(p, cents, nprobe = 4)
-    injectProbeRule(spark)
-    val q = base.where(col("vec_id") === 0)
-      .select(col("embedding")).head().getSeq[Float](0).toArray
-    val out = base
-      .withColumn("score",
-        graft.expressions.CosineSimilarity(col("embedding"), typedlit(q.toSeq)))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(10)
-      .select(col("vec_id"), round(col("score"), 4).as("score"))
-    require(out.queryExecution.optimizedPlan.toString.contains("LshProbeTopK"),
-      "LshProbeRewrite did not fire — the clustered gate must serve through " +
-        "the rule's centroid probe, not fall back to the exact scan")
-    out
+    servedTopK(base, fixtureQuery(base), 10,
+      "the clustered gate must serve through the rule's centroid probe")
   }
+
+  /** The clustered gates' query: the fixture's own vec_id 0. */
+  private def fixtureQuery(base: DataFrame): Array[Float] =
+    base.where(col("vec_id") === 0)
+      .select(col("embedding")).head().getSeq[Float](0).toArray
+
+  /** A rule-served gate's point query: the declared top-k of `q` over
+    * `base` ([[LshProbeRewrite.topK]]) in the gate envelope (vec_id,
+    * score rounded to 4 dp), required to have been rewritten:
+    * `LshProbeTopK` and the registration's own `markers` in the
+    * optimized plan. A silent non-rewrite would serve the exact scan —
+    * right rows only while ANN recall is 1, and never the component the
+    * gate exists to exercise. */
+  private def servedTopK(base: DataFrame, q: Array[Float], k: Int, what: String,
+                         markers: String*): DataFrame =
+    LshProbeRewrite.requireServed(
+      LshProbeRewrite.topK(base, q, k)
+        .select(col("vec_id"), round(col("score"), 4).as("score")),
+      "LshProbeTopK" +: markers)(what)
 
   /** Incrementally-maintained IVF index served through the rule — the
     * [[knnLshAppend]] story on the clustered layout: the at-rest base
@@ -323,13 +345,10 @@ object Queries {
     * the hash, not claimed. Base build + append are one-time snapshot
     * costs (session-cached); the timed run is the served probe.
     */
-  private val ivfAppendCache = new SessionCache[String, DataFrame]
   def annIvfAppend(spark: SparkSession, sfDir: String): DataFrame = {
-    val cents = ivfRuleCentsCache.getOrElseUpdate(spark, sfDir)(
-      IvfKnn.centroids(Tables.embeddings(spark, sfDir),
-        col("vec_id"), col("embedding"), stride = 53L))
     val p = s"target/gate-index/ivf-append-${math.abs(sfDir.hashCode)}"
-    val base = ivfAppendCache.getOrElseUpdate(spark, sfDir) {
+    val base = ivfLayout(spark, p, nprobe = 2) {
+      val cents = ivfRuleCents(spark, sfDir)
       val emb = Tables.embeddings(spark, sfDir)
       val store = graft.index.IvfIndexStore(cents)
       store.write(emb.where(col("vec_id") % 5 =!= 0), "embedding", p)
@@ -340,21 +359,10 @@ object Queries {
       // a fully drifted delta trips it — is pinned in IndexAppendSpec)
       require(stats.reclusterAdvised().contains(false),
         s"in-distribution append tripped the drift alarm: $stats")
-      spark.read.parquet(p)
+      cents
     }
-    graft.plans.LshProbeRewrite.registerIvf(p, cents, nprobe = 2)
-    injectProbeRule(spark)
-    val q = queryVec(spark, sfDir)
-    val out = base
-      .withColumn("score",
-        graft.expressions.CosineSimilarity(col("embedding"), typedlit(q.toSeq)))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(5)
-      .select(col("vec_id"), round(col("score"), 4).as("score"))
-    require(out.queryExecution.optimizedPlan.toString.contains("LshProbeTopK"),
-      "LshProbeRewrite did not fire — the appended-IVF gate must serve " +
-        "through the rule's centroid probe")
-    out
+    servedTopK(base, queryVec(spark, sfDir), 5,
+      "the appended-IVF gate must serve through the rule's centroid probe")
   }
 
   /** The full IVF LIFECYCLE gated end to end (r15: the drift alarm's
@@ -373,12 +381,10 @@ object Queries {
     * lifecycle (stale write → O(delta) append → retrain → swap) is
     * what actually executed. Lifecycle is a one-time snapshot cost
     * (session-cached); the timed run is the served probe. */
-  private val ivfReclusterCache = new SessionCache[String, DataFrame]
-  private val ivfReclusterCentsCache = new SessionCache[String, Array[(Long, Array[Float])]]
   def annIvfRecluster(spark: SparkSession, sfDir: String): DataFrame = {
     val pre = s"target/gate-index/ivf-recluster-pre-${math.abs(sfDir.hashCode)}"
     val post = s"target/gate-index/ivf-recluster-post-${math.abs(sfDir.hashCode)}"
-    val base = ivfReclusterCache.getOrElseUpdate(spark, sfDir) {
+    val base = ivfLayout(spark, post, nprobe = 2) {
       val emb = Tables.embeddings(spark, sfDir)
       val staleCents = IvfKnn.centroids(emb.where(col("vec_id") % 5 =!= 0),
         col("vec_id"), col("embedding"), stride = 53L)
@@ -389,8 +395,6 @@ object Queries {
       val (fresh, rebuilt) = stale.recluster(spark, pre, post, "embedding", "vec_id", 53L)
       require(rebuilt.baselineCos.isDefined,
         "recluster must refresh the training-time baseline")
-      ivfReclusterCentsCache.getOrElseUpdate(spark, sfDir)(fresh.cents)
-      val out = spark.read.parquet(post)
       // the swap's FINAL step, manual until r16: the stale generation
       // is retired through the catalog (reader-drain deferred delete —
       // [[graft.index.IndexGenerations]]); nothing holds a lease here,
@@ -401,23 +405,11 @@ object Queries {
         "no reader holds the stale generation at swap time — retire must delete now")
       require(!new java.io.File(pre).exists(),
         "retire(pre) reported deletion but the directory survived")
-      out
+      fresh.cents
     }
-    val cents = ivfReclusterCentsCache.getOrElseUpdate(spark, sfDir)(
-      sys.error("recluster centroids must be staged by the layout build"))
-    graft.plans.LshProbeRewrite.registerIvf(post, cents, nprobe = 2)
-    injectProbeRule(spark)
-    val q = queryVec(spark, sfDir)
-    val out = base
-      .withColumn("score",
-        graft.expressions.CosineSimilarity(col("embedding"), typedlit(q.toSeq)))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(5)
-      .select(col("vec_id"), round(col("score"), 4).as("score"))
-    require(out.queryExecution.optimizedPlan.toString.contains("LshProbeTopK"),
-      "LshProbeRewrite did not fire — the reclustered gate must serve " +
-        "through the rule's centroid probe over the FRESH layout")
-    out
+    servedTopK(base, queryVec(spark, sfDir), 5,
+      "the reclustered gate must serve through the rule's centroid probe " +
+        "over the FRESH layout")
   }
 
   /** The decision table's CONTINUOUS-INGEST row gated on the same
@@ -429,31 +421,11 @@ object Queries {
     * operating points end-to-end; recall for each is asserted in
     * AnnEvalSpec, and each gate's oracle replays its full candidate
     * rule from the staged fixture bytes. */
-  private val clusteredLshRuleCache = new SessionCache[String, (DataFrame, Int)]
   def annLshRuleClustered(spark: SparkSession, sfDir: String): DataFrame = {
-    val lsh = RandomHyperplaneLsh(8, 12, 42L)
-    val p = "target/gate-index/lsh-rule-clustered-n4000-c25-s010"
-    val (base, parts) = clusteredLshRuleCache.getOrElseUpdate(spark, "v1") {
-      val corpus = spark.read.parquet(clusteredFixtureDir(spark))
-      val pp = graft.index.LshIndexStore.adaptivePartitions(corpus)
-      graft.index.LshIndexStore(lsh, 64, pp).write(corpus, "embedding", p)
-      (spark.read.parquet(p), pp)
-    }
-    graft.plans.LshProbeRewrite.register(p, lsh, 64,
-      numPhysicalPartitions = parts, maxHamming = 1)
-    injectProbeRule(spark)
-    val q = base.where(col("vec_id") === 0)
-      .select(col("embedding")).head().getSeq[Float](0).toArray
-    val out = base
-      .withColumn("score",
-        graft.expressions.CosineSimilarity(col("embedding"), typedlit(q.toSeq)))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(10)
-      .select(col("vec_id"), round(col("score"), 4).as("score"))
-    require(out.queryExecution.optimizedPlan.toString.contains("LshProbeTopK"),
-      "LshProbeRewrite did not fire — the clustered LSH gate must serve " +
-        "through the rule's multi-probe, not fall back to the exact scan")
-    out
+    val (base, _) = lshLayout(spark, "target/gate-index/lsh-rule-clustered-n4000-c25-s010",
+      maxHamming = 1)(spark.read.parquet(clusteredFixtureDir(spark)))
+    servedTopK(base, fixtureQuery(base), 10,
+      "the clustered LSH gate must serve through the rule's multi-probe")
   }
 
   /** [[annPq]] served THROUGH THE OPTIMIZER RULE (r14 verdict #4, the
@@ -476,41 +448,36 @@ object Queries {
     * training are one-time snapshot costs (session-cached); the timed
     * run is the served probe.
     */
-  private val pqRuleIndexCache = new SessionCache[String, DataFrame]
-  private val pqRuleCbCache = new SessionCache[String, graft.index.PqKnn.Codebooks]
   def annPqRule(spark: SparkSession, sfDir: String): DataFrame = {
     val p = s"target/gate-index/pq-rule-${math.abs(sfDir.hashCode)}"
-    val cb = pqRuleCbCache.getOrElseUpdate(spark, sfDir) {
-      val emb = Tables.embeddings(spark, sfDir).where(col("embedding").isNotNull)
-      graft.index.PqKnn.train(emb, col("vec_id"), col("embedding"), dim = 64)
-    }
-    val base = pqRuleIndexCache.getOrElseUpdate(spark, sfDir) {
-      val emb = Tables.embeddings(spark, sfDir).where(col("embedding").isNotNull)
-      val codes = graft.index.PqKnn.encode(emb, col("vec_id"), col("embedding"), cb)
-        .withColumnRenamed("id", "vec_id")
-      emb.select(col("vec_id"), col("embedding"), col("label"))
-        .join(codes, "vec_id")
-        .write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    }
-    graft.plans.LshProbeRewrite.registerPq(p, cb, shortlist = 100)
-    injectProbeRule(spark)
-    val q = queryVec(spark, sfDir)
-    val out = base
-      .withColumn("score",
-        graft.expressions.CosineSimilarity(col("embedding"), typedlit(q.toSeq)))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(5)
-      .select(col("vec_id"), round(col("score"), 4).as("score"))
-    val plan = out.queryExecution.optimizedPlan.toString
-    require(plan.contains("LshProbeTopK"),
-      "LshProbeRewrite did not fire — the PQ gate must serve through the " +
-        "staged rewrite, not fall back to the exact scan")
-    require(plan.contains("adc_score"),
-      "the PQ rewrite lost its ADC stage — an exact top-k in disguise is " +
-        "not the component this gate exists to exercise")
-    out
+    val cb = pqCodebooks(spark, sfDir)
+    val base = fusedLayout(spark, sfDir, p)(
+      graft.index.PqKnn.encode(_, col("vec_id"), col("embedding"), cb))
+    LshProbeRewrite.registerPq(p, cb, shortlist = 100)
+    LshProbeRewrite.inject(spark)
+    // adc_score: a rewrite that lost the ADC stage would be an exact
+    // top-k in disguise
+    servedTopK(base, queryVec(spark, sfDir), 5,
+      "the PQ gate must serve through the staged ADC rewrite", "adc_score")
   }
+
+  /** The fused codes+floats layouts of the scoring kinds (PQ, SQ8,
+    * IVF-PQ), keyed by path: each is written once per session, with the
+    * model read from its own memo ([[pqCodebooks]], [[sqScales]],
+    * [[ivfRuleCents]]). */
+  private val fusedLayoutCache = new SessionCache[String, DataFrame]
+
+  /** The dataset's fused (vec_id, embedding, label, code) layout at
+    * `path`; `encode` maps the non-null corpus to its (id, code) rows. */
+  private def fusedLayout(spark: SparkSession, sfDir: String, path: String)
+                         (encode: DataFrame => DataFrame): DataFrame =
+    fusedLayoutCache.getOrElseUpdate(spark, path) {
+      val emb = Tables.embeddings(spark, sfDir).where(col("embedding").isNotNull)
+      emb.select(col("vec_id"), col("embedding"), col("label"))
+        .join(encode(emb).withColumnRenamed("id", "vec_id"), "vec_id")
+        .write.mode("overwrite").parquet(path)
+      spark.read.parquet(path)
+    }
 
   /** [[annSq]] served THROUGH THE OPTIMIZER RULE — the registry's
     * SECOND scoring kind (r15 open thread #1), proving the staged
@@ -530,49 +497,24 @@ object Queries {
     * 4× weaker compression). The `require`s pin both stages; the alias
     * is `sq8_score` so a plan that silently served the PQ kind — or no
     * scoring stage at all — fails loudly. */
-  private val sq8RuleIndexCache = new SessionCache[String, DataFrame]
-  private val sq8RuleScalesCache = new SessionCache[String, Array[Double]]
-  /** The fused SQ8 at-rest layout + its trained scales, shared by the
-    * per-request rule gate and both batched serving gates (one build,
-    * one cached FileIndex per session×SF). */
-  private def sq8RuleLayout(spark: SparkSession, sfDir: String): (DataFrame, Array[Double]) = {
+  /** The fused SQ8 at-rest layout, its scales and its path, shared by
+    * the per-request rule gate and both batched serving gates (one
+    * build, one cached FileIndex per session×SF). */
+  private def sq8RuleLayout(spark: SparkSession, sfDir: String)
+  : (DataFrame, Array[Double], String) = {
     val p = s"target/gate-index/sq8-rule-${math.abs(sfDir.hashCode)}"
-    val scales = sq8RuleScalesCache.getOrElseUpdate(spark, sfDir) {
-      val emb = Tables.embeddings(spark, sfDir).where(col("embedding").isNotNull)
-      graft.index.SqKnn.trainScales(emb, col("embedding"), dim = 64)
-    }
-    val base = sq8RuleIndexCache.getOrElseUpdate(spark, sfDir) {
-      val emb = Tables.embeddings(spark, sfDir).where(col("embedding").isNotNull)
-      val codes = graft.index.SqKnn.encode(emb, col("vec_id"), col("embedding"), scales)
-        .withColumnRenamed("id", "vec_id")
-      emb.select(col("vec_id"), col("embedding"), col("label"))
-        .join(codes, "vec_id")
-        .write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    }
-    (base, scales)
+    val scales = sqScales(spark, sfDir)
+    (fusedLayout(spark, sfDir, p)(
+      graft.index.SqKnn.encode(_, col("vec_id"), col("embedding"), scales)), scales, p)
   }
 
   def annSq8Rule(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = s"target/gate-index/sq8-rule-${math.abs(sfDir.hashCode)}"
-    val (base, scales) = sq8RuleLayout(spark, sfDir)
-    graft.plans.LshProbeRewrite.registerSq8(p, scales, shortlist = 100)
-    injectProbeRule(spark)
-    val q = queryVec(spark, sfDir)
-    val out = base
-      .withColumn("score",
-        graft.expressions.CosineSimilarity(col("embedding"), typedlit(q.toSeq)))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(5)
-      .select(col("vec_id"), round(col("score"), 4).as("score"))
-    val plan = out.queryExecution.optimizedPlan.toString
-    require(plan.contains("LshProbeTopK"),
-      "LshProbeRewrite did not fire — the SQ8 gate must serve through the " +
-        "staged rewrite, not fall back to the exact scan")
-    require(plan.contains("sq8_score"),
-      "the SQ8 rewrite lost its quantized scoring stage — an exact top-k " +
-        "in disguise is not the component this gate exists to exercise")
-    out
+    val (base, scales, p) = sq8RuleLayout(spark, sfDir)
+    LshProbeRewrite.registerSq8(p, scales, shortlist = 100)
+    LshProbeRewrite.inject(spark)
+    servedTopK(base, queryVec(spark, sfDir), 5,
+      "the SQ8 gate must serve through the staged quantized-scoring rewrite",
+      "sq8_score")
   }
 
   /** BATCHED SQ8 serving ([[graft.index.SqKnn.serveBatched]] — the PQ
@@ -587,11 +529,8 @@ object Queries {
     * 100-wide shortlist keeps the true top-5 and the exact serving
     * stream's DuckDB replay carries over. */
   def knnServeBatchedSq8(spark: SparkSession, sfDir: String): DataFrame = {
-    val (base, scales) = sq8RuleLayout(spark, sfDir)
-    val requests = Tables.embeddings(spark, sfDir)
-      .where(col("embedding").isNotNull && col("vec_id") < 5)
-      .select(col("vec_id"), col("embedding"))
-    val out = graft.index.SqKnn.serveBatched(spark, base, scales, requests,
+    val (base, scales, _) = sq8RuleLayout(spark, sfDir)
+    val out = graft.index.SqKnn.serveBatched(spark, base, scales, servingRequests(spark, sfDir),
         "vec_id", "embedding", k = 5, candidates = 100)
       .select(col("q_id"), col("rn"), col("neighbor_id"),
         (round(col("cos"), 4) + lit(0.0)).as("score"))
@@ -609,29 +548,12 @@ object Queries {
     * by the `sq8` registration into the staged batched serve. Shares
     * the same oracle. */
   def knnServeBatchedSq8Rule(spark: SparkSession, sfDir: String): DataFrame = {
-    val (base, scales) = sq8RuleLayout(spark, sfDir)
-    val p = s"target/gate-index/sq8-rule-${math.abs(sfDir.hashCode)}"
-    graft.plans.LshProbeRewrite.registerSq8(p, scales, shortlist = 100)
-    injectProbeRule(spark)
-    val requests = Tables.embeddings(spark, sfDir)
-      .where(col("embedding").isNotNull && col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val declared = requests
-      .crossJoin(base)
-      .where(col("vec_id") =!= col("q_id"))
-      .withColumn("cos",
-        graft.expressions.CosineSimilarity(col("embedding"), col("q_emb")))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id").asc)))
-      .where(col("rn") <= 5)
-      .select(col("q_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        (round(col("cos"), 4) + lit(0.0)).as("score"))
-      .orderBy(col("q_id"), col("rn"))
-    val plan = declared.queryExecution.optimizedPlan.toString
-    require(plan.contains("ShortlistFetch") && plan.contains("byte_dot_dyn"),
-      "the sq8 registration did not rewrite the batched declaration — the " +
-        "gate would be timing a corpus×requests cross join over the fused table")
-    declared
+    val (base, scales, p) = sq8RuleLayout(spark, sfDir)
+    LshProbeRewrite.registerSq8(p, scales, shortlist = 100)
+    LshProbeRewrite.inject(spark)
+    servedBatchedTopK(spark, sfDir, base, Seq("ShortlistFetch", "byte_dot_dyn"))(
+      "the sq8 registration must rewrite the batched declaration — not time " +
+        "a corpus×requests cross join over the fused table")
   }
 
   /** [[annIvfPq]] served THROUGH THE OPTIMIZER RULE — the registry's
@@ -649,21 +571,16 @@ object Queries {
     * mechanisms: the staged operator, the ADC stage, and the coarse
     * probe reaching the scan as a PARTITION filter (a post-scan row
     * filter would be reading the whole layout). */
-  private val ivfpqRuleIndexCache = new SessionCache[String, DataFrame]
-  private val ivfpqRuleCbCache = new SessionCache[String, graft.index.PqKnn.Codebooks]
   /** The fused IVF-PQ gate layout (vec_id, embedding, label, code,
-    * cluster_id — partitioned by cluster_id) plus its coarse centroids
-    * and trained codebooks, built once per (session, snapshot) and
-    * shared by the per-request rule gate and the batched serves. */
+    * cluster_id — partitioned by cluster_id) with its coarse centroids,
+    * codebooks and path, built once per (session, snapshot) and shared
+    * by the per-request rule gate and the batched serves. */
   private def ivfpqRuleLayout(spark: SparkSession, sfDir: String)
-  : (DataFrame, Array[(Long, Array[Float])], graft.index.PqKnn.Codebooks) = {
+  : (DataFrame, Array[(Long, Array[Float])], graft.index.PqKnn.Codebooks, String) = {
     val cents = ivfRuleCents(spark, sfDir)
+    val cb = pqCodebooks(spark, sfDir)
     val p = s"target/gate-index/ivfpq-rule-${math.abs(sfDir.hashCode)}"
-    val cb = ivfpqRuleCbCache.getOrElseUpdate(spark, sfDir) {
-      val emb = Tables.embeddings(spark, sfDir).where(col("embedding").isNotNull)
-      graft.index.PqKnn.train(emb, col("vec_id"), col("embedding"), dim = 64)
-    }
-    val base = ivfpqRuleIndexCache.getOrElseUpdate(spark, sfDir) {
+    val base = fusedLayoutCache.getOrElseUpdate(spark, p) {
       val emb = Tables.embeddings(spark, sfDir).where(col("embedding").isNotNull)
       val codes = graft.index.PqKnn.encode(emb, col("vec_id"), col("embedding"), cb)
         .withColumnRenamed("id", "vec_id")
@@ -674,27 +591,15 @@ object Queries {
         .write.mode("overwrite").partitionBy("cluster_id").parquet(p)
       spark.read.parquet(p)
     }
-    (base, cents, cb)
+    (base, cents, cb, p)
   }
   def annIvfPqRule(spark: SparkSession, sfDir: String): DataFrame = {
-    val (base, cents, cb) = ivfpqRuleLayout(spark, sfDir)
-    val p = s"target/gate-index/ivfpq-rule-${math.abs(sfDir.hashCode)}"
-    graft.plans.LshProbeRewrite.registerIvfPq(p, cents, nprobe = 2, cb,
-      shortlist = 100)
-    injectProbeRule(spark)
-    val q = queryVec(spark, sfDir)
-    val out = base
-      .withColumn("score",
-        graft.expressions.CosineSimilarity(col("embedding"), typedlit(q.toSeq)))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(5)
-      .select(col("vec_id"), round(col("score"), 4).as("score"))
-    val plan = out.queryExecution.optimizedPlan.toString
-    require(plan.contains("LshProbeTopK"),
-      "LshProbeRewrite did not fire — the IVF-PQ gate must serve through " +
-        "the composed rewrite, not fall back to the exact scan")
-    require(plan.contains("adc_score"),
-      "the IVF-PQ rewrite lost its ADC stage")
+    val (base, cents, cb, p) = ivfpqRuleLayout(spark, sfDir)
+    LshProbeRewrite.registerIvfPq(p, cents, nprobe = 2, cb, shortlist = 100)
+    LshProbeRewrite.inject(spark)
+    val out = servedTopK(base, queryVec(spark, sfDir), 5,
+      "the IVF-PQ gate must serve through the composed rewrite with its ADC stage",
+      "adc_score")
     val physical = out.queryExecution.executedPlan.toString
     require(physical.contains("PartitionFilters") &&
       physical.replaceAll("(?s).*PartitionFilters: \\[([^\\]]*)\\].*", "$1")
@@ -714,20 +619,9 @@ object Queries {
     * shares ann_ivf's DuckDB replay oracle. The `require` turns a
     * silent non-rewrite (exact scan — right rows only when IVF recall
     * is 1) into a loud failure, exactly like [[knnLshRule]]. */
-  def annIvfRule(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = ivfRuleIndexTable(spark, sfDir)
-    val q = queryVec(spark, sfDir)
-    val out = base
-      .withColumn("score",
-        graft.expressions.CosineSimilarity(col("embedding"), typedlit(q.toSeq)))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(5)
-      .select(col("vec_id"), round(col("score"), 4).as("score"))
-    require(out.queryExecution.optimizedPlan.toString.contains("LshProbeTopK"),
-      "LshProbeRewrite did not fire — the IVF gate must serve through the " +
-        "rule's centroid probe, not fall back to the exact scan")
-    out
-  }
+  def annIvfRule(spark: SparkSession, sfDir: String): DataFrame =
+    servedTopK(ivfRuleIndexTable(spark, sfDir), queryVec(spark, sfDir), 5,
+      "the IVF gate must serve through the rule's centroid probe")
 
   /** [[knnLshRule]] at the 1-bit MULTI-PROBE serving policy — the
     * clustered-sweep-recommended LSH operating point (8×12 + 1-bit
@@ -737,20 +631,9 @@ object Queries {
     * numPlanes+1 bucket Hamming ball. Shares the hand-built
     * multi-probe gate's DuckDB oracle (same candidate rule
     * `bit_count(xor) <= 1`, same rerank). */
-  def knnLshRuleMultiprobe(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = lshRuleIndexTable(spark, sfDir, maxHamming = 1)
-    val q = queryVec(spark, sfDir)
-    val out = base
-      .withColumn("score",
-        graft.expressions.CosineSimilarity(col("embedding"), typedlit(q.toSeq)))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(5)
-      .select(col("vec_id"), round(col("score"), 4).as("score"))
-    require(out.queryExecution.optimizedPlan.toString.contains("LshProbeTopK"),
-      "LshProbeRewrite did not fire — the multi-probe gate must serve " +
-        "through the rule, not fall back to the exact scan")
-    out
-  }
+  def knnLshRuleMultiprobe(spark: SparkSession, sfDir: String): DataFrame =
+    servedTopK(lshRuleIndexTable(spark, sfDir, maxHamming = 1), queryVec(spark, sfDir), 5,
+      "the multi-probe gate must serve through the rule")
 
   /** FILTERED search through the optimizer rule — the reference's O2
     * metadata filter composed with the rule-served index path: the
@@ -765,21 +648,10 @@ object Queries {
     * the MULTI-PROBE policy because the exact-bucket candidate set at
     * the gate SFs is nearly self-only — a filter over it would gate an
     * empty intersection (hash-green but vacuous). */
-  def knnLshRuleFiltered(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = lshRuleIndexTable(spark, sfDir, maxHamming = 1)
-    val q = queryVec(spark, sfDir)
-    val out = base
-      .where(col("label") =!= 3)
-      .withColumn("score",
-        graft.expressions.CosineSimilarity(col("embedding"), typedlit(q.toSeq)))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(5)
-      .select(col("vec_id"), round(col("score"), 4).as("score"))
-    require(out.queryExecution.optimizedPlan.toString.contains("LshProbeTopK"),
-      "LshProbeRewrite did not fire — the filtered gate must serve through " +
-        "the rule with the user predicate intact, not fall back to the exact scan")
-    out
-  }
+  def knnLshRuleFiltered(spark: SparkSession, sfDir: String): DataFrame =
+    servedTopK(lshRuleIndexTable(spark, sfDir, maxHamming = 1).where(col("label") =!= 3),
+      queryVec(spark, sfDir), 5,
+      "the filtered gate must serve through the rule with the user predicate intact")
 
   /** FILTERED search with GUARANTEED k
     * ([[graft.index.LshIndexStore.searchFilteredAdaptive]], r14 verdict
@@ -834,43 +706,26 @@ object Queries {
   /** The guaranteed-k at-rest LSH layout + registration, shared by the
     * per-request and batched ladder gates — its own at-rest copy: the
     * registration IS the policy, and the registry keys policies by
-    * path (same rule as the -mp1 layout). Returns (layout, physical
-    * partition count) like [[lshRuleIndexEntry]]. */
-  private def lshGkIndexEntry(spark: SparkSession, sfDir: String): (DataFrame, Int) = {
-    val lsh = RandomHyperplaneLsh(8, 12, 42L)
-    val p = s"target/gate-index/lsh-rule-gk-${math.abs(sfDir.hashCode)}"
-    val (base, parts) = lshRuleIndexCache.getOrElseUpdate(spark, s"gk:$sfDir") {
-      val corpus = Tables.embeddings(spark, sfDir)
-      val pp = graft.index.LshIndexStore.adaptivePartitions(corpus)
-      graft.index.LshIndexStore(lsh, 64, pp).write(corpus, "embedding", p)
-      (spark.read.parquet(p), pp)
-    }
-    graft.plans.LshProbeRewrite.register(p, lsh, 64,
-      numPhysicalPartitions = parts, guaranteeK = true)
-    injectProbeRule(spark)
-    (base, parts)
-  }
+    * path (same rule as the -mp1 layout). */
+  private def lshGkIndexTable(spark: SparkSession, sfDir: String): DataFrame =
+    lshLayout(spark, s"target/gate-index/lsh-rule-gk-${math.abs(sfDir.hashCode)}",
+      guaranteeK = true)(Tables.embeddings(spark, sfDir))._1
 
-  def knnFilteredRuleAdaptive(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = lshGkIndexEntry(spark, sfDir)._1
-    val q = queryVec(spark, sfDir)
-    val out = base
-      .where(pmod(col("vec_id"), lit(47)) === 0)
-      .withColumn("score",
-        graft.expressions.CosineSimilarity(col("embedding"), typedlit(q.toSeq)))
-      .withColumn("index_used", lit("auto"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(5)
-      .select(col("vec_id"), round(col("score"), 4).as("score"), col("index_used"))
-    val plan = out.queryExecution.optimizedPlan.toString
-    require(plan.contains("gk_level"),
-      "the guaranteed-k ladder did not fire — a static probe (or the exact " +
+  def knnFilteredRuleAdaptive(spark: SparkSession, sfDir: String): DataFrame =
+    servedLadderTopK(lshGkIndexTable(spark, sfDir), queryVec(spark, sfDir),
+      "the guaranteed-k ladder must serve — a static probe (or the exact " +
         "scan) under a selective filter serves fewer than k rows")
-    require(!plan.contains("auto"),
-      "the caller's index_used placeholder survived — the engine must own " +
-        "the served-level value")
-    out
-  }
+
+  /** A guaranteed-k gate's point query: the declared top-k under the
+    * `vec_id % 47 = 0` filter with an `index_used` placeholder, in the
+    * gate envelope, required to ride the in-plan ladder (`gk_level`)
+    * with the placeholder overwritten. */
+  private def servedLadderTopK(base: DataFrame, q: Array[Float], what: String): DataFrame =
+    LshProbeRewrite.requireServed(
+      LshProbeRewrite.topK(base.where(pmod(col("vec_id"), lit(47)) === 0), q, 5,
+          placeholder = true)
+        .select(col("vec_id"), round(col("score"), 4).as("score"), col("index_used")),
+      Seq("gk_level"), placeholder = true)(what)
 
   /** The IVF kind's guaranteed-k filtered serve (r16 — the
     * registration-level policy generalized past LSH): the caller
@@ -884,34 +739,10 @@ object Queries {
     * WHOLE rule: cluster ranking, per-row assignment, both counts, the
     * boundary, the chosen set, rerank, and the reported level. Its own
     * at-rest layout copy, per the one-policy-per-path registry rule. */
-  private val ivfGkIndexCache = new SessionCache[String, DataFrame]
-  def knnFilteredIvfAdaptive(spark: SparkSession, sfDir: String): DataFrame = {
-    val cents = ivfRuleCents(spark, sfDir)
-    val p = s"target/gate-index/ivf-rule-gk-${math.abs(sfDir.hashCode)}"
-    val base = ivfGkIndexCache.getOrElseUpdate(spark, sfDir) {
-      graft.index.IvfIndexStore(cents).write(Tables.embeddings(spark, sfDir), "embedding", p)
-      spark.read.parquet(p)
-    }
-    graft.plans.LshProbeRewrite.registerIvf(p, cents, nprobe = 2, guaranteeK = true)
-    injectProbeRule(spark)
-    val q = queryVec(spark, sfDir)
-    val out = base
-      .where(pmod(col("vec_id"), lit(47)) === 0)
-      .withColumn("score",
-        graft.expressions.CosineSimilarity(col("embedding"), typedlit(q.toSeq)))
-      .withColumn("index_used", lit("auto"))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(5)
-      .select(col("vec_id"), round(col("score"), 4).as("score"), col("index_used"))
-    val plan = out.queryExecution.optimizedPlan.toString
-    require(plan.contains("gk_level"),
-      "the IVF guaranteed-k ladder did not fire — a static centroid probe " +
+  def knnFilteredIvfAdaptive(spark: SparkSession, sfDir: String): DataFrame =
+    servedLadderTopK(ivfRuleIndexTable(spark, sfDir, guaranteeK = true), queryVec(spark, sfDir),
+      "the IVF guaranteed-k ladder must serve — a static centroid probe " +
         "under a selective filter serves fewer than k rows")
-    require(!plan.contains("auto"),
-      "the caller's index_used placeholder survived — the engine must own " +
-        "the served-level value")
-    out
-  }
 
   /** [[knnFilteredAdaptive]]'s BATCHED form (r15 open thread #4):
     * every request of a batch runs the guaranteed-k filtered ladder,
@@ -937,11 +768,8 @@ object Queries {
   def knnFilteredAdaptiveBatched(spark: SparkSession, sfDir: String): DataFrame = {
     // same at-rest layout + cached FileIndex; probe modulus = layout's
     val (base, parts) = lshRuleIndexEntry(spark, sfDir)
-    val requests = Tables.embeddings(spark, sfDir)
-      .where(col("embedding").isNotNull && col("vec_id") < 5)
-      .select(col("vec_id"), col("embedding"))
     graft.index.KnnJoin.lshServeFilteredAdaptiveBatched(
-        requests, base, RandomHyperplaneLsh(8, 12, 42L), 64, k = 5,
+        servingRequests(spark, sfDir), base, RandomHyperplaneLsh(8, 12, 42L), 64, k = 5,
         userFilter = pmod(col("vec_id"), lit(3)) === 0,
         numPhysicalPartitions = parts)
       .select(col("q_id"), col("rn"), col("neighbor_id"),
@@ -966,35 +794,15 @@ object Queries {
     * both counts, level choice, chosen set, rerank, `index_used`)
     * carries over verbatim — rule-served ≡ library-served, per
     * request. */
-  def knnFilteredBatchedRule(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = lshGkIndexEntry(spark, sfDir)._1
-    val requests = Tables.embeddings(spark, sfDir)
-      .where(col("embedding").isNotNull && col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val declared = requests
-      .crossJoin(base.where(pmod(col("vec_id"), lit(3)) === 0))
-      .where(col("vec_id") =!= col("q_id"))
-      .withColumn("cos",
-        graft.expressions.CosineSimilarity(col("embedding"), col("q_emb")))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id").asc)))
-      .where(col("rn") <= 5)
-      .select(col("q_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        (round(col("cos"), 4) + lit(0.0)).as("score"),
-        lit("auto").as("index_used"))
-      .orderBy(col("q_id"), col("rn"))
-    val plan = declared.queryExecution.optimizedPlan.toString
+  def knnFilteredBatchedRule(spark: SparkSession, sfDir: String): DataFrame =
     // the batched library ladder's own column names + level literals
     // (the per-request rule ladder says gk_level; this one says level)
-    require(plan.contains("min_dist") && plan.contains("lsh_mp1"),
-      "the batched declaration was not rewritten to the in-plan ladder — " +
-        "a static serve under this filter starves, and the cross join is " +
-        "the plan this gate exists to avoid")
-    require(!plan.contains("auto"),
-      "the caller's index_used placeholder survived — the engine must own " +
-        "the served-level value")
-    declared
-  }
+    servedBatchedTopK(spark, sfDir,
+        lshGkIndexTable(spark, sfDir).where(pmod(col("vec_id"), lit(3)) === 0),
+        Seq("min_dist", "lsh_mp1"), placeholder = true)(
+      "the batched declaration must be rewritten to the in-plan ladder — a " +
+        "static serve under this filter starves, and the cross join is the " +
+        "plan this gate exists to avoid")
 
   /** The IVF guaranteed-k ladder at BATCH QPS through the OPTIMIZER
     * RULE (r17 — the r16 verdict's #1, the one real hole left in the
@@ -1021,40 +829,14 @@ object Queries {
     * both counts, the boundary, the chosen set, rerank, `index_used`
     * — so a request escalated at the wrong boundary flips the hash
     * even when its neighbors coincide. */
-  def knnFilteredIvfBatchedRule(spark: SparkSession, sfDir: String): DataFrame = {
-    val cents = ivfRuleCents(spark, sfDir)
-    val p = s"target/gate-index/ivf-rule-gk-${math.abs(sfDir.hashCode)}"
-    val base = ivfGkIndexCache.getOrElseUpdate(spark, sfDir) {
-      graft.index.IvfIndexStore(cents).write(Tables.embeddings(spark, sfDir), "embedding", p)
-      spark.read.parquet(p)
-    }
-    graft.plans.LshProbeRewrite.registerIvf(p, cents, nprobe = 2, guaranteeK = true)
-    injectProbeRule(spark)
-    val requests = Tables.embeddings(spark, sfDir)
-      .where(col("embedding").isNotNull && col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val declared = requests
-      .crossJoin(base.where(pmod(col("vec_id"), lit(23)) === 0))
-      .where(col("vec_id") =!= col("q_id"))
-      .withColumn("cos",
-        graft.expressions.CosineSimilarity(col("embedding"), col("q_emb")))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id").asc)))
-      .where(col("rn") <= 5)
-      .select(col("q_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        (round(col("cos"), 4) + lit(0.0)).as("score"),
-        lit("auto").as("index_used"))
-      .orderBy(col("q_id"), col("rn"))
-    val plan = declared.queryExecution.optimizedPlan.toString
-    require(plan.contains("min_dist") && plan.contains("ivf_w2"),
-      "the batched declaration was not rewritten to the in-plan IVF ladder — " +
+  def knnFilteredIvfBatchedRule(spark: SparkSession, sfDir: String): DataFrame =
+    servedBatchedTopK(spark, sfDir,
+        ivfRuleIndexTable(spark, sfDir, guaranteeK = true)
+          .where(pmod(col("vec_id"), lit(23)) === 0),
+        Seq("min_dist", "ivf_w2"), placeholder = true)(
+      "the batched declaration must be rewritten to the in-plan IVF ladder — " +
         "a static centroid probe under this filter starves, and the cross " +
         "join is the plan this gate exists to avoid")
-    require(!plan.contains("auto"),
-      "the caller's index_used placeholder survived — the engine must own " +
-        "the served-level value")
-    declared
-  }
 
   /** BATCHED split-PQ serving (r16 — the serve the batched rewrite
     * listed as "(yet)"): one ADC scan of the codes table answers the 5
@@ -1070,14 +852,12 @@ object Queries {
     */
   def knnServeBatchedPq(spark: SparkSession, sfDir: String): DataFrame = {
     val path = pqSplitPath(spark, sfDir)
-    val requests = Tables.embeddings(spark, sfDir)
-      .where(col("embedding").isNotNull && col("vec_id") < 5)
-      .select(col("vec_id"), col("embedding"))
     // 300-wide: at the gate SFs one request's true top-5 fell outside
     // the top-100 ADC shortlist (the oracle caught it at sf0.01) —
     // shortlist width is the PQ recall knob, and the bound stays
     // requests × 300, nowhere near the corpus
-    val out = graft.index.PqIndexStore().serveBatchedSplit(spark, path, requests,
+    val out = graft.index.PqIndexStore().serveBatchedSplit(spark, path,
+        servingRequests(spark, sfDir),
         "vec_id", "embedding", k = 5, dim = 64, candidates = 300)
       .select(col("q_id"), col("rn"), col("neighbor_id"),
         (round(col("cos"), 4) + lit(0.0)).as("score"))
@@ -1100,28 +880,13 @@ object Queries {
   def knnServeBatchedPqRule(spark: SparkSession, sfDir: String): DataFrame = {
     val path = pqSplitPath(spark, sfDir)
     val cb = graft.index.PqIndexStore().loadCodebooks(spark, path, dim = 64)
-    graft.plans.LshProbeRewrite.registerPqSplit(spark, path, cb,
+    LshProbeRewrite.registerPqSplit(spark, path, cb,
       shortlist = 300, idColName = "vec_id") // same width rationale as knnServeBatchedPq
-    injectProbeRule(spark)
-    val requests = Tables.embeddings(spark, sfDir)
-      .where(col("embedding").isNotNull && col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val declared = requests
-      .crossJoin(spark.read.parquet(s"$path/floats"))
-      .where(col("vec_id") =!= col("q_id"))
-      .withColumn("cos",
-        graft.expressions.CosineSimilarity(col("embedding"), col("q_emb")))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id").asc)))
-      .where(col("rn") <= 5)
-      .select(col("q_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        (round(col("cos"), 4) + lit(0.0)).as("score"))
-      .orderBy(col("q_id"), col("rn"))
-    val plan = declared.queryExecution.optimizedPlan.toString
-    require(plan.contains("ShortlistFetch") && plan.contains("adc_score_dyn"),
-      "the pq_split registration did not rewrite the batched declaration — " +
-        "the gate would be timing a corpus×requests float cross join")
-    declared
+    LshProbeRewrite.inject(spark)
+    servedBatchedTopK(spark, sfDir, spark.read.parquet(s"$path/floats"),
+        Seq("ShortlistFetch", "adc_score_dyn"))(
+      "the pq_split registration must rewrite the batched declaration — not " +
+        "time a corpus×requests float cross join")
   }
 
   /** The FILTERED batched declaration over a guaranteeK split
@@ -1144,33 +909,17 @@ object Queries {
   def knnFilteredBatchedPqRule(spark: SparkSession, sfDir: String): DataFrame = {
     val path = pqSplitFilteredPath(spark, sfDir)
     val cb = graft.index.PqIndexStore().loadCodebooks(spark, path, dim = 64)
-    graft.plans.LshProbeRewrite.registerPqSplit(spark, path, cb,
+    LshProbeRewrite.registerPqSplit(spark, path, cb,
       shortlist = 300, idColName = "vec_id", guaranteeK = true)
-    injectProbeRule(spark)
-    val requests = Tables.embeddings(spark, sfDir)
-      .where(col("embedding").isNotNull && col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val declared = requests
-      .crossJoin(spark.read.parquet(s"$path/floats").where(col("label") === 3))
-      .where(col("vec_id") =!= col("q_id"))
-      .withColumn("cos",
-        graft.expressions.CosineSimilarity(col("embedding"), col("q_emb")))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id").asc)))
-      .where(col("rn") <= 5)
-      .select(col("q_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        (round(col("cos"), 4) + lit(0.0)).as("score"))
-      .orderBy(col("q_id"), col("rn"))
-    val plan = declared.queryExecution.optimizedPlan.toString
-    require(plan.contains("ShortlistFetch") && plan.contains("adc_score_dyn"),
-      "the guaranteeK pq_split registration did not rewrite the filtered " +
-        "batched declaration — the gate would be timing a filtered " +
+    LshProbeRewrite.inject(spark)
+    // LeftSemi: without the semi-join, corpus-ranked shortlists under a
+    // user filter are the starvation shape the filtered policy closes
+    servedBatchedTopK(spark, sfDir,
+        spark.read.parquet(s"$path/floats").where(col("label") === 3),
+        Seq("ShortlistFetch", "adc_score_dyn", "LeftSemi"))(
+      "the guaranteeK pq_split registration must rewrite the filtered batched " +
+        "declaration to the filter-first staged serve — not time a filtered " +
         "corpus×requests float cross join")
-    require(plan.contains("LeftSemi"),
-      "the filtered batched rewrite lost its semi-join — corpus-ranked " +
-        "shortlists under a user filter are the starvation shape the " +
-        "filtered policy exists to close")
-    declared
   }
 
   /** BATCHED serving for the COMPOSED IVF-PQ kind (r17 — the r16
@@ -1189,12 +938,10 @@ object Queries {
     * with the same stride-53 coarse quantizer — the gate shares
     * knn_serve_stream_ivf's per-request DuckDB replay. */
   def knnServeBatchedIvfPq(spark: SparkSession, sfDir: String): DataFrame = {
-    val (base, cents, cb) = ivfpqRuleLayout(spark, sfDir)
-    val requests = Tables.embeddings(spark, sfDir)
-      .where(col("embedding").isNotNull && col("vec_id") < 5)
-      .select(col("vec_id"), col("embedding"))
+    val (base, cents, cb, _) = ivfpqRuleLayout(spark, sfDir)
     val out = graft.index.PqKnn.serveBatchedIvfPq(spark, base, cents,
-        nprobe = 2, cb, requests, "vec_id", "embedding", k = 5, candidates = 300)
+        nprobe = 2, cb, servingRequests(spark, sfDir), "vec_id", "embedding", k = 5,
+        candidates = 300)
       .select(col("q_id"), col("rn"), col("neighbor_id"),
         (round(col("cos"), 4) + lit(0.0)).as("score"))
       .orderBy(col("q_id"), col("rn"))
@@ -1214,51 +961,52 @@ object Queries {
     * clusters' codes once per batch plus the union-shortlist floats.
     * Shares the same exact-IVF replay oracle. */
   def knnServeBatchedIvfPqRule(spark: SparkSession, sfDir: String): DataFrame = {
-    val (base, cents, cb) = ivfpqRuleLayout(spark, sfDir)
-    val p = s"target/gate-index/ivfpq-rule-${math.abs(sfDir.hashCode)}"
-    graft.plans.LshProbeRewrite.registerIvfPq(p, cents, nprobe = 2, cb,
-      shortlist = 300)
-    injectProbeRule(spark)
-    val requests = Tables.embeddings(spark, sfDir)
-      .where(col("embedding").isNotNull && col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val declared = requests
-      .crossJoin(base)
-      .where(col("vec_id") =!= col("q_id"))
-      .withColumn("cos",
-        graft.expressions.CosineSimilarity(col("embedding"), col("q_emb")))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id").asc)))
-      .where(col("rn") <= 5)
-      .select(col("q_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        (round(col("cos"), 4) + lit(0.0)).as("score"))
-      .orderBy(col("q_id"), col("rn"))
-    val plan = declared.queryExecution.optimizedPlan.toString
-    require(plan.contains("ShortlistFetch") && plan.contains("adc_score_dyn"),
-      "the ivfpq registration did not rewrite the batched declaration — the " +
-        "gate would be timing a corpus×requests float cross join")
-    declared
+    val (base, cents, cb, p) = ivfpqRuleLayout(spark, sfDir)
+    LshProbeRewrite.registerIvfPq(p, cents, nprobe = 2, cb, shortlist = 300)
+    LshProbeRewrite.inject(spark)
+    servedBatchedTopK(spark, sfDir, base, Seq("ShortlistFetch", "adc_score_dyn"))(
+      "the ivfpq registration must rewrite the batched declaration — not time " +
+        "a corpus×requests float cross join")
   }
 
-  def knnLshRule(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = lshRuleIndexTable(spark, sfDir)
-    val q = queryVec(spark, sfDir)
-    val out = base
-      .withColumn("score",
-        graft.expressions.CosineSimilarity(col("embedding"), typedlit(q.toSeq)))
-      .orderBy(col("score").desc, col("vec_id").asc)
-      .limit(5)
-      .select(col("vec_id"), round(col("score"), 4).as("score"),
-        lit("lsh").as("index_used"))
+  /** The batched gates' 5 serving requests: the embeddings of vec_id < 5. */
+  private def servingRequests(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.embeddings(spark, sfDir)
+      .where(col("embedding").isNotNull && col("vec_id") < 5)
+      .select(col("vec_id"), col("embedding"))
+
+  /** A rule-served batched gate: the declared batched top-k
+    * ([[LshProbeRewrite.batchedTopK]]) of the 5 serving requests over
+    * `layout`, in the gate envelope (q_id, rn, neighbor_id, score
+    * rounded to 4 dp, plus a literal `index_used` placeholder when
+    * `placeholder`), required to carry the registration's `markers` in
+    * its optimized plan. */
+  private def servedBatchedTopK(spark: SparkSession, sfDir: String, layout: DataFrame,
+                                markers: Seq[String], placeholder: Boolean = false)
+                               (what: => String): DataFrame = {
+    val requests = servingRequests(spark, sfDir)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val envelope = Seq(col("q_id"), col("rn"), col("vec_id").as("neighbor_id"),
+      // + 0.0 collapses IEEE negative zero (see embeddingPool)
+      (round(col("cos"), 4) + lit(0.0)).as("score")) ++
+      (if (placeholder) Seq(lit("auto").as("index_used")) else Nil)
+    LshProbeRewrite.requireServed(
+      LshProbeRewrite.batchedTopK(requests, layout, 5)
+        .select(envelope: _*)
+        .orderBy(col("q_id"), col("rn")),
+      markers, placeholder)(what)
+  }
+
+  def knnLshRule(spark: SparkSession, sfDir: String): DataFrame =
     // checked on the FINAL plan, envelope projection included: the
     // optimizer pushes that projection below the limit, and an
     // unmatched shape would silently serve the exact scan — correct
     // rows, but not the component this gate exists to exercise
-    require(out.queryExecution.optimizedPlan.toString.contains("LshProbeTopK"),
-      "LshProbeRewrite did not fire — the gate must serve through the rule, " +
-        "not fall back to the exact scan")
-    out
-  }
+    LshProbeRewrite.requireServed(
+      LshProbeRewrite.topK(lshRuleIndexTable(spark, sfDir), queryVec(spark, sfDir), 5)
+        .select(col("vec_id"), round(col("score"), 4).as("score"),
+          lit("lsh").as("index_used")),
+      Seq("LshProbeTopK"))("the gate must serve through the rule")
 
   /** Incremental index maintenance: the stored bucket table absorbs an
     * append-only delta by hashing ONLY the new rows with the SAME
@@ -1332,12 +1080,26 @@ object Queries {
     * tables, and PQ replays ADC off the trained codebook that Verify
     * inlines into the oracle SQL ([[oracleSubstitutions]]).
     */
-  // PQ codebooks and SQ scales are BUILD ARTIFACTS of a corpus
-  // snapshot (trained once, served from memory thereafter) — cached
-  // per (session, dataset) like the LSH bucketed layout, so the
-  // recall evaluations bench the measurement, not the re-training
-  private val pqTrainCache = new SessionCache[String, graft.index.PqKnn.Codebooks]
+  /** The dataset's trained PQ codebooks (8 sub-spaces × 256
+    * centroids) — a BUILD ARTIFACT of a corpus snapshot: trained once
+    * per (session, dataset) and read by every consumer (ann_pq,
+    * ann_ivfpq, ann_recall, the PQ and IVF-PQ rule layouts, and the
+    * oracle substitution). The driver-side Lloyd trainer costs ~0.7-1 s
+    * per run (r18 job ledgers); run 1 of a fresh session still pays it,
+    * visibly, in the bench's runs_sec forensics. */
+  private val pqCodebookCache = new SessionCache[String, graft.index.PqKnn.Codebooks]
+  private def pqCodebooks(spark: SparkSession, sfDir: String): graft.index.PqKnn.Codebooks =
+    pqCodebookCache.getOrElseUpdate(spark, sfDir)(
+      graft.index.PqKnn.train(Tables.embeddings(spark, sfDir),
+        col("vec_id"), col("embedding"), dim = 64))
+
+  /** The dataset's trained SQ8 scales, the same build artifact for the
+    * SQ8 kind: read by ann_recall, ann_recall_exact and the SQ8 rule
+    * layout. */
   private val sqScalesCache = new SessionCache[String, Array[Double]]
+  private def sqScales(spark: SparkSession, sfDir: String): Array[Double] =
+    sqScalesCache.getOrElseUpdate(spark, sfDir)(
+      graft.index.SqKnn.trainScales(Tables.embeddings(spark, sfDir), col("embedding"), dim = 64))
   // cluster_balance's coarse k-means fit — same build-artifact
   // reasoning: trained once per (session, dataset), the gate and the
   // oracle substitution read the identical centroids
@@ -1395,11 +1157,8 @@ object Queries {
     * self-contained for DuckDB.
     */
   def oracleSubstitutions(spark: SparkSession, sfDir: String): Map[String, String] = {
-    val emb = Tables.embeddings(spark, sfDir)
-    val cb = pqTrainCache.getOrElseUpdate(spark, sfDir)(
-      graft.index.PqKnn.train(emb, col("vec_id"), col("embedding"), dim = 64))
     Map(
-      "__PQ_CODEBOOK_CTE__" -> OracleHashSql.pqCodebookCte(cb),
+      "__PQ_CODEBOOK_CTE__" -> OracleHashSql.pqCodebookCte(pqCodebooks(spark, sfDir)),
       "__KMEANS_CENTROIDS_CTE__" ->
         OracleHashSql.kmeansCentroidsCte(balanceCenters(spark, sfDir)),
       "__HNSW_WALK_ADJ__" ->
@@ -1465,13 +1224,10 @@ object Queries {
     // tuned default from the LshSweep grid (last in commit a10423e):
     // 1-bit multi-probe at 8×6 matches 16-table exact-bucket recall at
     // half the storage
-    val cb = pqTrainCache.getOrElseUpdate(spark, sfDir)(
-      graft.index.PqKnn.train(emb, col("vec_id"), col("embedding"), dim = 64))
-    val scales = sqScalesCache.getOrElseUpdate(spark, sfDir)(
-      graft.index.SqKnn.trainScales(emb, col("embedding"), 64))
     AnnEval.recallSinglePass(emb, "vec_id", "embedding", queries, k,
         graft.index.RandomHyperplaneLsh(8, 6, 42L), dim = 64, mpMaxHamming = 1,
-        stride = 53L, nprobe = 4, pq = Some(cb), sq = Some(scales))
+        stride = 53L, nprobe = 4, pq = Some(pqCodebooks(spark, sfDir)),
+        sq = Some(sqScales(spark, sfDir)))
       .orderBy(col("method"))
   }
 
@@ -1495,11 +1251,9 @@ object Queries {
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1)
       .take(20)
-    val scales = sqScalesCache.getOrElseUpdate(spark, sfDir)(
-      graft.index.SqKnn.trainScales(emb, col("embedding"), 64))
     AnnEval.recallSinglePass(emb, "vec_id", "embedding", queries, 10,
         graft.index.RandomHyperplaneLsh(8, 6, 42L), dim = 64, mpMaxHamming = 1,
-        stride = 53L, nprobe = 4, pq = None, sq = Some(scales))
+        stride = 53L, nprobe = 4, pq = None, sq = Some(sqScales(spark, sfDir)))
       .orderBy(col("method"))
   }
 
@@ -4662,9 +4416,7 @@ object Queries {
     knnServeInputCache.getOrElseUpdate(spark, sfDir) {
       val dir = streamTempDir("graft_knnserve_in_")
       Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(dir)))
-      val q = Tables.embeddings(spark, sfDir)
-        .where(col("embedding").isNotNull && col("vec_id") < 5)
-        .select(col("vec_id"), col("embedding"))
+      val q = servingRequests(spark, sfDir)
       (0L until 5L).foreach { i =>
         q.where(col("vec_id") === i).coalesce(1)
           .write.mode("append").parquet(dir.getAbsolutePath)
@@ -4739,23 +4491,22 @@ object Queries {
     runReplayForeachBatch(spark, inDir, qSchema, "knnserve_rule",
       onBatch = (batch, outDir) =>
         batch.select(col("vec_id"), col("embedding")).collect().foreach { r =>
-          val qId = r.getLong(0)
-          val qv = r.getSeq[Float](1)
-          val out = base
-            .where(col("vec_id") =!= lit(qId)) // serving excludes self
-            .withColumn("score",
-              graft.expressions.CosineSimilarity(col("embedding"), typedlit(qv)))
-            .orderBy(col("score").desc, col("vec_id").asc)
-            .limit(5)
-            .select(lit(qId).as("q_id"), col("vec_id").as("neighbor_id"),
-              col("score")) // RAW score to the sink; round at presentation
-          require(out.queryExecution.optimizedPlan.toString.contains("LshProbeTopK"),
-            s"LshProbeRewrite did not fire for request $qId — the serving " +
-              "stream must answer through the rule, not the exact scan")
-          out.write.mode("append").parquet(outDir)
+          serveRequestThroughRule(base, r.getLong(0), r.getSeq[Float](1).toArray)
+            .write.mode("append").parquet(outDir)
         },
       present = presentServeTopK)
   }
+
+  /** One serving-stream request answered by the declared top-k over the
+    * registered `base`, self excluded, RAW score to the sink (rounded at
+    * presentation), required to serve through the rule's probe. */
+  private def serveRequestThroughRule(base: DataFrame, qId: Long,
+                                      q: Array[Float]): DataFrame =
+    LshProbeRewrite.requireServed(
+      LshProbeRewrite.topK(base.where(col("vec_id") =!= lit(qId)), q, 5)
+        .select(lit(qId).as("q_id"), col("vec_id").as("neighbor_id"), col("score")),
+      Seq("LshProbeTopK"))(
+      s"request $qId: the serving stream must answer through the rule's probe")
 
   /** The shared presentation of the serving-stream sinks (r14 verdict
     * stretch #8 — three gates repeated this block verbatim): re-rank
@@ -4823,27 +4574,13 @@ object Queries {
     * per-request-served. The `require` makes a silent non-rewrite (the
     * cross join actually executing) a loud failure.
     */
-  def knnServeBatchedRule(spark: SparkSession, sfDir: String): DataFrame = {
-    val base = lshRuleIndexTable(spark, sfDir) // registers + injects the rule
-    val requests = Tables.embeddings(spark, sfDir)
-      .where(col("embedding").isNotNull && col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val declared = requests.crossJoin(base)
-      .where(col("vec_id") =!= col("q_id"))
-      .withColumn("cos",
-        graft.expressions.CosineSimilarity(col("embedding"), col("q_emb")))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id").asc)))
-      .where(col("rn") <= 5)
-      .select(col("q_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        (round(col("cos"), 4) + lit(0.0)).as("score"))
-      .orderBy(col("q_id"), col("rn"))
-    val plan = declared.queryExecution.optimizedPlan.toString
-    require(plan.contains("bucket_part") && !plan.contains("Join Cross,"),
-      "the batched declaration was not rewritten to the broadcast bucket " +
-        "serve — the gate would be timing the cross join it exists to avoid")
-    declared
-  }
+  def knnServeBatchedRule(spark: SparkSession, sfDir: String): DataFrame =
+    // q_bkt: the request side's hashed bucket, which only the broadcast
+    // bucket serve has (the layout's own bucket_part is in any plan
+    // that scans it, rewritten or not)
+    servedBatchedTopK(spark, sfDir, lshRuleIndexTable(spark, sfDir), Seq("q_bkt"))(
+      "the batched declaration must be rewritten to the broadcast bucket " +
+        "serve — not time the cross join it exists to avoid")
 
   /** [[knnServeStreamRule]]'s IVF twin — the registration really IS
     * the index choice now: the request loop is byte-identical (plain
@@ -4863,20 +4600,8 @@ object Queries {
     runReplayForeachBatch(spark, inDir, qSchema, "knnserve_ivf",
       onBatch = (batch, outDir) =>
         batch.select(col("vec_id"), col("embedding")).collect().foreach { r =>
-          val qId = r.getLong(0)
-          val qv = r.getSeq[Float](1)
-          val out = base
-            .where(col("vec_id") =!= lit(qId)) // serving excludes self
-            .withColumn("score",
-              graft.expressions.CosineSimilarity(col("embedding"), typedlit(qv)))
-            .orderBy(col("score").desc, col("vec_id").asc)
-            .limit(5)
-            .select(lit(qId).as("q_id"), col("vec_id").as("neighbor_id"),
-              col("score")) // RAW score to the sink; round at presentation
-          require(out.queryExecution.optimizedPlan.toString.contains("LshProbeTopK"),
-            s"LshProbeRewrite did not fire for request $qId — the IVF serving " +
-              "stream must answer through the rule's centroid probe")
-          out.write.mode("append").parquet(outDir)
+          serveRequestThroughRule(base, r.getLong(0), r.getSeq[Float](1).toArray)
+            .write.mode("append").parquet(outDir)
         },
       present = presentServeTopK)
   }
@@ -5142,22 +4867,6 @@ object Queries {
     * survive compression (AnnEquivalenceSpec pins output == brute at
     * the gate SF), so this shares knn_brute's DuckDB oracle.
     */
-  /** The trained PQ codebooks for the gate corpus — a BUILD ARTIFACT
-    * of a corpus snapshot, session-cached per dataset exactly like the
-    * kmeans centroids (ivfRuleCentsCache), the LSH layouts and the
-    * split stores' persisted codebooks (r18: ann_pq/ann_ivfpq were the
-    * only PQ consumers still re-running the driver-side Lloyd trainer
-    * — ~0.7-1 s per invocation, measured as the dominant gap in their
-    * job ledgers — on every query over an UNCHANGED corpus; the
-    * at-rest stores persist this exact model next to their codes).
-    * Run 1 of a fresh session still pays the training, visibly, in the
-    * bench's runs_sec forensics; the median times the serve. */
-  private val pqCodebookCache = new SessionCache[String, graft.index.PqKnn.Codebooks]
-  private def pqCodebooks(spark: SparkSession, sfDir: String): graft.index.PqKnn.Codebooks =
-    pqCodebookCache.getOrElseUpdate(spark, sfDir)(
-      graft.index.PqKnn.train(Tables.embeddings(spark, sfDir),
-        col("vec_id"), col("embedding"), dim = 64, m = 8, k = 256))
-
   def annPq(spark: SparkSession, sfDir: String): DataFrame =
     graft.index.PqKnn.searchRefinedWith(Tables.embeddings(spark, sfDir), col("vec_id"),
         col("embedding"), queryVec(spark, sfDir), k = 5,
@@ -5275,19 +4984,17 @@ object Queries {
   def annPqSplitRule(spark: SparkSession, sfDir: String): DataFrame = {
     val path = pqSplitPath(spark, sfDir)
     val cb = graft.index.PqIndexStore().loadCodebooks(spark, path, dim = 64)
-    graft.plans.LshProbeRewrite.registerPqSplit(spark, path, cb,
+    LshProbeRewrite.registerPqSplit(spark, path, cb,
       shortlist = 100, idColName = "vec_id")
-    injectProbeRule(spark)
-    val out = graft.index.BruteForceKnn.search(
-        spark.read.parquet(s"$path/floats"), col("embedding"), col("vec_id"),
-        queryVec(spark, sfDir), k = 5)
-      .select(col("vec_id"), round(col("score"), 4).as("score"))
-    val plan = out.queryExecution.optimizedPlan.toString
-    require(plan.contains("ShortlistFetch") && plan.contains("adc_score"),
-      "the pq_split registration did not rewrite the plain top-k into the " +
-        "staged shortlist-fetch plan — the gate would be timing (and " +
-        "oracling) a full float scan")
-    out
+    LshProbeRewrite.inject(spark)
+    LshProbeRewrite.requireServed(
+      graft.index.BruteForceKnn.search(
+          spark.read.parquet(s"$path/floats"), col("embedding"), col("vec_id"),
+          queryVec(spark, sfDir), k = 5)
+        .select(col("vec_id"), round(col("score"), 4).as("score")),
+      Seq("ShortlistFetch", "adc_score"))(
+      "the pq_split registration must rewrite the plain top-k into the " +
+        "staged shortlist-fetch plan — not time (and oracle) a full float scan")
   }
 
   /** The split layout WITH float-side payload (r17, open thread (a) —
@@ -5353,23 +5060,19 @@ object Queries {
   def annPqSplitFilteredRule(spark: SparkSession, sfDir: String): DataFrame = {
     val path = pqSplitFilteredPath(spark, sfDir)
     val cb = graft.index.PqIndexStore().loadCodebooks(spark, path, dim = 64)
-    graft.plans.LshProbeRewrite.registerPqSplit(spark, path, cb,
+    LshProbeRewrite.registerPqSplit(spark, path, cb,
       shortlist = 100, idColName = "vec_id", guaranteeK = true)
-    injectProbeRule(spark)
-    val out = graft.index.BruteForceKnn.search(
-        spark.read.parquet(s"$path/floats").where(col("label") === 3),
-        col("embedding"), col("vec_id"), queryVec(spark, sfDir), k = 5)
-      .select(col("vec_id"), round(col("score"), 4).as("score"))
-    val plan = out.queryExecution.optimizedPlan.toString
-    require(plan.contains("ShortlistFetch") && plan.contains("adc_score"),
-      "the guaranteeK pq_split registration did not rewrite the filtered " +
-        "top-k into the staged plan — the gate would be timing a full " +
-        "filtered float scan")
-    require(plan.contains("LeftSemi"),
-      "the filtered rewrite lost its semi-join — a corpus-ranked shortlist " +
-        "under a user filter is the starvation shape this policy exists " +
-        "to close")
-    out
+    LshProbeRewrite.inject(spark)
+    // LeftSemi: a corpus-ranked shortlist under a user filter is the
+    // starvation shape this policy exists to close
+    LshProbeRewrite.requireServed(
+      graft.index.BruteForceKnn.search(
+          spark.read.parquet(s"$path/floats").where(col("label") === 3),
+          col("embedding"), col("vec_id"), queryVec(spark, sfDir), k = 5)
+        .select(col("vec_id"), round(col("score"), 4).as("score")),
+      Seq("ShortlistFetch", "adc_score", "LeftSemi"))(
+      "the guaranteeK pq_split registration must rewrite the filtered top-k " +
+        "into the filter-first staged plan — not time a full filtered float scan")
   }
 
   /** Document chunking — the reference's own document→chunk data model

@@ -244,11 +244,14 @@ final class HttpApi(spark: SparkSession, engine: Engine, embedder: Embedder,
           if (qText.isEmpty && qEmb.isEmpty)
             respond(ex, 400, Some(error("query_text or query_embedding required")))
           else {
+            val lshTables = Option(b.get("lsh_tables")).map(_.asInt()).getOrElse(8)
+            // a transient lsh search allocates tables × planes × dim floats
+            require(lshTables <= 64, s"lsh_tables $lshTables exceeds 64")
             val res = service.search(libId,
               queryText = qText, queryEmbedding = qEmb,
               k = Option(b.get("k")).map(_.asInt()).getOrElse(5),
               index = optText(b, "index").getOrElse("brute"),
-              lshTables = Option(b.get("lsh_tables")).map(_.asInt()).getOrElse(8),
+              lshTables = lshTables,
               lshPlanes = Option(b.get("lsh_planes")).map(_.asInt()).getOrElse(12),
               filters = filters(b))
             val o = putResult(mapper.createObjectNode(), res)

@@ -434,7 +434,7 @@ final case class HnswIndexStore(m: Int = 8, efConstruction: Int = 32) {
   /** [[search]] over a pre-listed nodes DataFrame — the serving-
     * residency form (r17, the REST bridge's HNSW kind): a serving
     * layer lists the layout's partition directories ONCE and reuses
-    * the FileIndex across queries (the lshRuleIndexCache lesson —
+    * the FileIndex across queries (the `Queries.lshLayoutCache` lesson —
     * re-listing per query costs more than the probe). */
   def searchNodes(nodes: DataFrame, query: Array[Float], k: Int,
                   ef: Int = 48): DataFrame = {

@@ -265,9 +265,7 @@ object PqKnn {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.graft.SqlShims.{column, expression, ofRows}
     import spark.implicits._
-    if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(spark)
+    graft.plans.LshProbeRewrite.injectStrategy(spark)
     val centDf = cents.toSeq.map { case (cid, v) => (cid, v.toSeq) }
       .toDF("c_cid", "cent")
     val probe = requests.where(col(embColName).isNotNull)
@@ -610,9 +608,7 @@ final case class PqIndexStore(m: Int = 8, numCentroids: Int = 256) {
     // the custom node needs its planner strategy in THIS session
     // (idempotent; the driver's Verify/Bench sessions are built
     // without GraftExtensions)
-    if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(spark)
+    graft.plans.LshProbeRewrite.injectStrategy(spark)
     val cb = loadCodebooks(spark, path, dim)
     val shortlist = searchEncoded(spark.read.parquet(s"$path/codes"), query, cb,
         candidates)
@@ -666,9 +662,7 @@ final case class PqIndexStore(m: Int = 8, numCentroids: Int = 256) {
                                  embColName: String, predicate: Column,
                                  query: Array[Float], k: Int, dim: Int,
                                  candidates: Int = 100): DataFrame = {
-    if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(spark)
+    graft.plans.LshProbeRewrite.injectStrategy(spark)
     val cb = loadCodebooks(spark, path, dim)
     val floats = spark.read.parquet(s"$path/floats")
     val passIds = floats.where(predicate).select(col(idColName).as("id"))
@@ -743,9 +737,7 @@ final case class PqIndexStore(m: Int = 8, numCentroids: Int = 256) {
                         maxFetch: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.graft.SqlShims.{column, expression, ofRows}
-    if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(spark)
+    graft.plans.LshProbeRewrite.injectStrategy(spark)
     val reqs = requests.where(col(embColName).isNotNull)
       .select(col(idColName).cast("long").as("q_id"), col(embColName).as("q_emb"))
       .withColumn("q_lut",

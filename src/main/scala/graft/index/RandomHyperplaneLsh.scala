@@ -40,6 +40,10 @@ final case class RandomHyperplaneLsh(
     numTables: Int = 8,
     numPlanes: Int = 12,
     seed: Long = 42L) {
+  require(numTables >= 1, s"numTables $numTables must be at least 1")
+  // a bucket id is an Int with one bit per plane: bit 31 is the sign
+  // and 1 << 32 wraps to bit 0, folding planes onto each other
+  require(numPlanes >= 1 && numPlanes <= 31, s"numPlanes $numPlanes must be in 1..31")
 
   /** planes(t)(p) is a unit-normalized hyperplane in R^dim. */
   def planes(dim: Int): Array[Array[Array[Float]]] = {

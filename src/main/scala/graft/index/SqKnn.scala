@@ -144,9 +144,7 @@ object SqKnn {
                    maxFetch: Int = 10000): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.graft.SqlShims.{column, expression, ofRows}
-    if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(spark)
+    graft.plans.LshProbeRewrite.injectStrategy(spark)
     val reqs = requests.where(col(embColName).isNotNull)
       .select(col(idColName).cast("long").as("q_id"), col(embColName).as("q_emb"))
       .withColumn("q_w", zip_with(

@@ -2,6 +2,7 @@ package graft.plans
 
 import graft.expressions.CosineSimilarity
 import graft.index.RandomHyperplaneLsh
+import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -431,6 +432,77 @@ object LshProbeRewrite extends Rule[LogicalPlan] {
     registry.remove(normalize(new java.io.File(path).getAbsolutePath)): Unit
 
   def clear(): Unit = registry.clear()
+
+  // ---- serving through a registration --------------------------------
+  // The one way a caller reaches a registered layout: inject the rule
+  // into the session, declare the plain top-k (per request or batched)
+  // with the helpers below, and check the optimized plan for the
+  // registration's markers. The rule matches exactly these shapes.
+
+  /** Adds this rule and [[LshProbeStrategy]] to `spark` once (the
+    * Verify/Bench sessions are built without [[graft.GraftExtensions]]).
+    * The check and the append run under the session's `experimental`
+    * lock, so concurrent serves adopting a layout append them once. */
+  def inject(spark: SparkSession): Unit = spark.experimental.synchronized {
+    if (!spark.experimental.extraOptimizations.contains(this))
+      spark.experimental.extraOptimizations = spark.experimental.extraOptimizations :+ this
+    injectStrategy(spark)
+  }
+
+  /** Adds only [[LshProbeStrategy]], for library serves that build the
+    * custom nodes themselves and never need the rewrite. */
+  def injectStrategy(spark: SparkSession): Unit = spark.experimental.synchronized {
+    if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[LshProbeStrategy]))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ LshProbeStrategy(spark)
+  }
+
+  /** The declared per-request top-k over a layout: cosine `score`
+    * against the literal `q`, ordered by (`score` desc, `idCol` asc),
+    * limited to k. With `placeholder` it also carries `index_used =
+    * "auto"`, which a guaranteed-k registration overwrites with the
+    * served level. */
+  def topK(layout: DataFrame, q: Array[Float], k: Int, idCol: String = "vec_id",
+           placeholder: Boolean = false): DataFrame = {
+    val scored = layout.withColumn("score",
+      CosineSimilarity(F.col("embedding"), F.typedlit(q.toSeq)))
+    (if (placeholder) scored.withColumn("index_used", F.lit("auto")) else scored)
+      .orderBy(F.col("score").desc, F.col(idCol).asc)
+      .limit(k)
+  }
+
+  /** The declared batched top-k: `requests` (`q_id`, `q_emb`) × layout,
+    * self excluded, cosine `cos`, `rn` = row_number per `q_id` by (`cos`
+    * desc, `idCol` asc), `rn <= k`. The batched rewrite replaces this
+    * quadratic declaration with the registration's one-plan serve. */
+  def batchedTopK(requests: DataFrame, layout: DataFrame, k: Int,
+                  idCol: String = "vec_id"): DataFrame =
+    requests
+      .crossJoin(layout)
+      .where(F.col(idCol) =!= F.col("q_id"))
+      .withColumn("cos", CosineSimilarity(F.col("embedding"), F.col("q_emb")))
+      .withColumn("rn", F.row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(F.col("q_id"))
+          .orderBy(F.col("cos").desc, F.col(idCol).asc)))
+      .where(F.col("rn") <= k)
+
+  /** `served` itself when its optimized plan contains every marker and,
+    * with a `placeholder`, no longer projects the `auto` placeholder;
+    * otherwise fails naming `what`. A declaration the rule did not
+    * rewrite still answers (the exact scan), so without this check a
+    * missing registration would pass as correct rows through the wrong
+    * component. */
+  def requireServed(served: DataFrame, markers: Seq[String],
+                    placeholder: Boolean = false)(what: => String): DataFrame = {
+    val plan = served.queryExecution.optimizedPlan.toString
+    val missing = markers.filterNot(plan.contains)
+    require(missing.isEmpty,
+      s"$what: the optimized plan lacks ${missing.mkString(", ")}\n${plan.take(1500)}")
+    require(!placeholder || !plan.contains("auto AS index_used"),
+      s"$what: the index_used placeholder survived — the engine must own the " +
+        "served-level value")
+    served
+  }
 
   private def registrationFor(plan: LogicalPlan): Option[IndexRegistration] =
     plan.collectFirst {

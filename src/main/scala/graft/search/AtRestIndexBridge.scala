@@ -1,6 +1,7 @@
 package graft.search
 
 import graft.index.{IndexGenerations, LshIndexStore, RandomHyperplaneLsh}
+import graft.plans.LshProbeRewrite
 import graft.state.{Engine, LibraryRow, LibrarySnapshot}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -93,7 +94,7 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
     // call bypassing the rule
     LshIndexStore(lsh, dim, parts).write(
       corpus.withColumn("hid", xxhash64(col("id"))), "embedding", path)
-    graft.plans.LshProbeRewrite.register(path, lsh, dim, parts,
+    LshProbeRewrite.register(path, lsh, dim, parts,
       guaranteeK = true)
     swapIn(spark, libraryId,
       Entry(path, snap.library, "lsh", spark.read.parquet(path)), existing)
@@ -122,7 +123,7 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
     val path = generationPath(snap, "ivf-")
     graft.index.IvfIndexStore(cents).write(
       corpus.withColumn("hid", xxhash64(col("id"))), "embedding", path): Unit
-    graft.plans.LshProbeRewrite.registerIvf(path, cents, nprobe, guaranteeK = true)
+    LshProbeRewrite.registerIvf(path, cents, nprobe, guaranteeK = true)
     swapIn(spark, libraryId,
       Entry(path, snap.library, "ivf", spark.read.parquet(path)), existing)
   }
@@ -175,12 +176,12 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
     * (register(new) → unregister(old) → retire(old); retirement defers
     * while serves hold leases). The layout DataFrame is cached per
     * entry: a serving layer lists the partition directories once and
-    * reuses the FileIndex (the lshRuleIndexCache lesson — re-listing
+    * reuses the FileIndex (the `Queries.lshLayoutCache` lesson — re-listing
     * per query costs more than the probe); partition pruning still
     * applies per query. */
   private def swapIn(spark: SparkSession, libraryId: String, entry: Entry,
                      existing: Option[Entry]): String = {
-    injectRule(spark)
+    LshProbeRewrite.inject(spark)
     // the generation being REPLACED is whatever the pointer published —
     // which covers replacements made by OTHER sessions (this instance's
     // own entry is a subset of that knowledge); retirement still defers
@@ -191,7 +192,7 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
     entries.put(libraryId, entry)
     writeCurrent(libraryId, entry)
     replaced.filter(p => new java.io.File(p).exists()).foreach { old =>
-      graft.plans.LshProbeRewrite.unregister(old)
+      LshProbeRewrite.unregister(old)
       IndexGenerations.retire(old): Unit // deferred while serves hold leases
     }
     entry.path
@@ -250,9 +251,9 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
           node.get("version").asInt() != lib.version || kind == "hnsw") return None
       val path = node.get("path").asText()
       if (!new java.io.File(path).exists()) return None
-      if (!graft.plans.LshProbeRewrite.isRegistered(path))
-        graft.plans.LshProbeRewrite.registerFromSidecar(path): Unit
-      injectRule(spark)
+      if (!LshProbeRewrite.isRegistered(path))
+        LshProbeRewrite.registerFromSidecar(path): Unit
+      LshProbeRewrite.inject(spark)
       val e = Entry(path, lib, kind, spark.read.parquet(path))
       entries.put(lib.id, e)
       Some(e)
@@ -263,18 +264,6 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
   private def liveEntry(spark: SparkSession, lib: LibraryRow): Option[Entry] =
     Option(entries.get(lib.id)).filter(_.serves(lib))
       .orElse(adoptCurrent(spark, lib))
-
-  /** Adds the rule and its strategy to the session once. The check and
-    * the append run under the session's `experimental` lock: concurrent
-    * serves adopting a generation would otherwise both append. */
-  private def injectRule(spark: SparkSession): Unit = spark.experimental.synchronized {
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.LshProbeRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.LshProbeRewrite
-    if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(spark)
-  }
 
   /** Serve one O12 query from the registered layout if `library` is
     * registered at its incarnation and version (else None — the caller
@@ -322,7 +311,7 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
       // HNSW has no filtered form at either arity (see registerHnsw)
       .filterNot(e => e.kind == "hnsw" && filters.nonEmpty)
       .map { e =>
-      injectRule(spark) // the serving session may not be the registering one
+      LshProbeRewrite.inject(spark) // the serving session may not be the registering one
       IndexGenerations.lease(e.path, holderOf(spark)) {
         import spark.implicits._
         val laddered = filters.nonEmpty
@@ -348,42 +337,26 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
             // one plan). The `require`s keep a silent non-rewrite
             // loud: a REST batch actually executing the quadratic
             // declaration is the failure this tier exists to avoid.
-            val layoutSide = filters.foldLeft(
-              e.layout.select(col("hid"), col("embedding"), col("metadata"))) {
-              case (df, (key, value)) =>
-                df.where(col("metadata").getItem(key) === lit(value))
-            }.select(col("hid"), col("embedding"))
-            var declared = reqs
-              .select(col("hid").as("q_id"), col("embedding").as("q_emb"))
-              .crossJoin(layoutSide)
-              .where(col("hid") =!= col("q_id"))
-              .withColumn("cos", graft.expressions.CosineSimilarity(
-                col("embedding"), col("q_emb")))
-              .withColumn("rn", org.apache.spark.sql.functions.row_number().over(
-                org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
-                  .orderBy(col("cos").desc, col("hid").asc)))
-              .where(col("rn") <= k)
-            declared =
-              if (laddered)
-                declared.select(col("q_id"), col("rn"),
-                  col("hid").as("neighbor_id"), col("cos"),
-                  lit("auto").as("index_used"))
-              else
-                declared.select(col("q_id"), col("rn"),
-                  col("hid").as("neighbor_id"), col("cos"))
-            val plan = declared.queryExecution.optimizedPlan.toString
-            // probe/ladder columns only exist in the REWRITTEN plan
-            // (the declared quadratic carries none); the serve's own
-            // tiny requests×centroids cross join is legitimate, so the
-            // check is presence-of-probe, not absence-of-cross-join
-            require(
-              if (laddered) plan.contains("min_dist")
-              else plan.contains("bucket_part") || plan.contains("c_cid"),
-              s"the ${library.id} batch declaration was not rewritten to the " +
-                s"registered batched serve:\n${plan.take(1500)}")
-            if (laddered)
-              require(!plan.contains("auto"),
-                "the index_used placeholder survived the batched ladder rewrite")
+            val layoutSide = LibrarySnapshot.where(
+                e.layout.select(col("hid"), col("embedding"), col("metadata")), filters)
+              .select(col("hid"), col("embedding"))
+            val envelope = Seq(col("q_id"), col("rn"), col("hid").as("neighbor_id"),
+              col("cos")) ++ (if (laddered) Seq(lit("auto").as("index_used")) else Nil)
+            // probe/ladder columns only exist in the REWRITTEN plan (the
+            // declared quadratic carries none): the request side's hashed
+            // bucket (q_bkt) or centroid ranking (c_cid), or the ladder's
+            // min_dist; the serve's own tiny requests×centroids cross join
+            // is legitimate, so the check is presence-of-probe, not
+            // absence-of-cross-join
+            val declared = LshProbeRewrite.requireServed(
+              LshProbeRewrite.batchedTopK(
+                  reqs.select(col("hid").as("q_id"), col("embedding").as("q_emb")),
+                  layoutSide, k, idCol = "hid")
+                .select(envelope: _*),
+              Seq(if (laddered) "min_dist" else if (e.kind == "ivf") "c_cid" else "q_bkt"),
+              placeholder = laddered)(
+              s"the ${library.id} batch declaration must be rewritten to the " +
+                "registered batched serve")
             // embed the ALREADY-REWRITTEN plan in the payload join: the
             // outer query re-optimizes its whole tree, and the declared
             // subtree inside a join does not re-match the batched shape
@@ -447,24 +420,14 @@ final class AtRestIndexBridge(baseDir: String = "target/at-rest-bridge",
         // or unioned candidate has no single honest `bucket` value) —
         // the probe rewrite still finds the layout columns on the scan
         // BELOW this projection
-        val filtered = filters.foldLeft(
-          e.layout.drop("table", "bucket", "bucket_part", "cluster_id")) {
-          case (df, (key, value)) =>
-            df.where(col("metadata").getItem(key) === lit(value))
-        }
         val laddered = filters.nonEmpty
-        val scored = filtered.withColumn("score",
-          graft.expressions.CosineSimilarity(col("embedding"), typedlit(qvec.toSeq)))
-        val out = (if (laddered) scored.withColumn("index_used", lit("auto"))
-                   else scored)
-          .orderBy(col("score").desc, col("id").asc)
-          .limit(k)
-        val plan = out.queryExecution.optimizedPlan.toString
-        require(
-          if (laddered) plan.contains("gk_level")
-          else plan.contains("LshProbeTopK"),
-          s"registered-tier serve for $libraryId did not go through the rule " +
-            s"(probe/ladder missing from the optimized plan):\n${plan.take(1800)}")
+        val out = LshProbeRewrite.requireServed(
+          LshProbeRewrite.topK(
+            LibrarySnapshot.where(
+              e.layout.drop("table", "bucket", "bucket_part", "cluster_id"), filters),
+            qvec, k, idCol = "id", placeholder = laddered),
+          Seq(if (laddered) "gk_level" else "LshProbeTopK"), placeholder = laddered)(
+          s"registered-tier serve for $libraryId must go through the rule's probe or ladder")
         pack(out, laddered, e.kind)
       }
 }

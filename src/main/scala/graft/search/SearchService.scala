@@ -4,7 +4,7 @@ import graft.embed.Embedder
 import graft.functions.VectorFunctions
 import graft.index.{BruteForceKnn, IndexCache, RandomHyperplaneLsh}
 import graft.state.{Engine, LibrarySnapshot}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One search hit (reference result packing O13,
@@ -50,6 +50,9 @@ final class SearchService(spark: SparkSession, engine: Engine,
              lshTables: Int = 8,
              lshPlanes: Int = 12,
              filters: Map[String, String] = Map.empty): SearchResult = {
+    // validated before any work, whatever serves the query: an at-rest
+    // library never reads these planes
+    val lsh = RandomHyperplaneLsh(lshTables, lshPlanes)
     val snap = snapshot(libraryId)
     val version = snap.version
 
@@ -92,22 +95,11 @@ final class SearchService(spark: SparkSession, engine: Engine,
     if (index == "lsh") {
       val bridged = atRest.flatMap(
         _.tryServe(spark, snap.library, qvec, k, filters) { (df, laddered, kind) =>
-          val cols = Seq(col("id"), col("document_id"), col("library_id"),
-            col("text"), col("metadata"), col("score")) ++
-            (if (laddered) Seq(col("index_used")) else Nil)
-          val rows = rerank(df).limit(k).select(cols: _*).collect()
-          val hits = rows.map(r => Hit(r.getString(0), r.getString(1),
-            r.getString(2), r.getString(3), r.getMap[String, String](4).toMap,
-            r.getDouble(5))).toSeq
+          val rows = rerank(df).limit(k).select(hitColumns(laddered): _*).collect()
           // the ladder's served level (constant across one query's
           // rows) reaches the envelope — the O10 reporting contract
           // carried through the O12 surface
-          val used =
-            if (laddered)
-              rows.headOption.map(r => "at_rest_" + r.getString(6))
-                .getOrElse("at_rest_brute")
-            else s"${kind}_at_rest"
-          (hits, used)
+          (rows.map(hit).toSeq, atRestUsed(rows, laddered, kind))
         })
       bridged.foreach { case (hits, used) =>
         return SearchResult(hits, index, Some(used), version)
@@ -118,7 +110,6 @@ final class SearchService(spark: SparkSession, engine: Engine,
       case "brute" =>
         (BruteForceKnn.search(filtered, col("embedding"), col("id"), qvec, k), "brute")
       case "lsh" =>
-        val lsh = RandomHyperplaneLsh(lshTables, lshPlanes)
         indexCache match {
           // Version-keyed cached bucketing: hashing ran once per
           // (library, incarnation, version, params), from this query's
@@ -142,15 +133,35 @@ final class SearchService(spark: SparkSession, engine: Engine,
     // rerank must re-trim to k afterwards (interactive_workflow.py:346-349).
     val hits = rerank(hitsDF)
       .limit(k)
-      .select(col("id"), col("document_id"), col("library_id"), col("text"),
-        col("metadata"), col("score"))
+      .select(hitColumns(laddered = false): _*)
       .collect()
-      .map(r => Hit(r.getString(0), r.getString(1), r.getString(2), r.getString(3),
-        r.getMap[String, String](4).toMap, r.getDouble(5)))
+      .map(hit)
       .toSeq
 
     SearchResult(hits, index, Some(used), version)
   }
+
+  /** The columns a [[Hit]] is read from, plus the ladder's served level
+    * (`index_used`) when a guaranteed-k ladder served the rows. */
+  private def hitColumns(laddered: Boolean): Seq[org.apache.spark.sql.Column] =
+    (Seq("id", "document_id", "library_id", "text", "metadata", "score") ++
+      (if (laddered) Seq("index_used") else Nil)).map(col)
+
+  /** One collected row as a [[Hit]], read by column name. */
+  private def hit(r: Row): Hit =
+    Hit(r.getAs[String]("id"), r.getAs[String]("document_id"),
+      r.getAs[String]("library_id"), r.getAs[String]("text"),
+      r.getMap[String, String](r.fieldIndex("metadata")).toMap, r.getAs[Double]("score"))
+
+  /** The at-rest envelope's `index_used`: `<kind>_at_rest` for a plain
+    * probe; under a metadata filter, the ladder level the rows were
+    * served at (`at_rest_<level>`), `at_rest_brute` when the filtered
+    * pool was empty and the ladder ran out. */
+  private def atRestUsed(rows: Array[Row], laddered: Boolean, kind: String): String =
+    if (laddered)
+      rows.headOption.map(r => "at_rest_" + r.getAs[String]("index_used"))
+        .getOrElse("at_rest_brute")
+    else s"${kind}_at_rest"
 
   /** The library's snapshot: the cached entry, or built uncached. */
   private def snapshot(libraryId: String): LibrarySnapshot =
@@ -185,27 +196,15 @@ final class SearchService(spark: SparkSession, engine: Engine,
       else None
     batched match {
       case Some((df, laddered, kind)) =>
-        val cols = Seq(col("q_id"), col("rn"), col("id"), col("document_id"),
-          col("library_id"), col("text"), col("metadata"), col("score")) ++
-          (if (laddered) Seq(col("index_used")) else Nil)
-        val rows = df.select(cols: _*).collect().groupBy(_.getLong(0))
+        val rows = df.select(col("q_id") +: col("rn") +: hitColumns(laddered): _*)
+          .collect().groupBy(_.getLong(0))
         queryEmbeddings.indices.map { i =>
           val reqRows = rows.getOrElse(i.toLong, Array.empty)
             .sortBy(_.getInt(1)) // the serve's own per-request rank
-          val hits = reqRows
-            .map(r => Hit(r.getString(2), r.getString(3), r.getString(4),
-              r.getString(5), r.getMap[String, String](6).toMap, r.getDouble(7)))
-            .toSeq
           // per-REQUEST envelope: under a filter each request reports
-          // ITS served ladder level (the O10 contract at batch arity);
-          // a request whose filtered pool is empty exhausted the
-          // ladder to brute
-          val used =
-            if (laddered)
-              reqRows.headOption.map(r => "at_rest_" + r.getString(8))
-                .getOrElse("at_rest_brute")
-            else s"${kind}_at_rest"
-          SearchResult(hits, index, Some(used), version)
+          // ITS served ladder level (the O10 contract at batch arity)
+          SearchResult(reqRows.map(hit).toSeq, index,
+            Some(atRestUsed(reqRows, laddered, kind)), version)
         }
       case None =>
         queryEmbeddings.map(v => search(libraryId, queryEmbedding = Some(v),

@@ -647,4 +647,76 @@ class HttpApiSpec extends AnyFunSuite {
       } finally api.stop()
     } finally graft.plans.LshProbeRewrite.clear()
   }
+
+  test("out-of-range lsh_planes and lsh_tables answer 400 and the server keeps serving") {
+    withApi { base =>
+      val lib = req("POST", s"$base/vector_db/libraries", """{"name": "lshp"}""")
+      val libId = mapper.readTree(lib.body()).get("id").asText()
+      val doc = req("POST", s"$base/vector_db/libraries/$libId/documents", """{"title": "t"}""")
+      val docId = mapper.readTree(doc.body()).get("id").asText()
+      assert(req("POST", s"$base/vector_db/libraries/$libId/documents/$docId/chunks",
+        """{"text": "abc", "embedding": [1.0, 0.0, 0.5, 0.0]}""").statusCode() == 201)
+      def search(extra: String) = req("POST", s"$base/vector_db/libraries/$libId/search",
+        s"""{"query_embedding": [1.0, 0.0, 0.5, 0.0], "k": 1, "index": "lsh"$extra}""")
+      // 32 planes would shift 1 << 32 back onto bit 0; 0 tables probe nothing;
+      // 65 tables is past the route's allocation bound
+      Seq(""", "lsh_planes": 32""", """, "lsh_planes": 0""", """, "lsh_tables": 0""",
+          """, "lsh_tables": 65""").foreach { extra =>
+        val r = search(extra)
+        assert(r.statusCode() == 400, s"$extra answered ${r.statusCode()}: ${r.body()}")
+      }
+      val ok = search(""", "lsh_tables": 2, "lsh_planes": 4""")
+      assert(ok.statusCode() == 200, ok.body())
+      assert(mapper.readTree(ok.body()).get("hits").size() == 1)
+    }
+  }
+
+  test("a metadata filter whose value contains auto still serves from the at-rest tier") {
+    // the served-plan check looks for the index_used placeholder itself,
+    // not for the substring "auto" anywhere in the plan (a filter value
+    // is a literal in the plan too)
+    graft.plans.LshProbeRewrite.clear()
+    try {
+      val engine = new Engine()
+      engine.createLibrary(name = "Auto", id = Some("autolib"))
+      engine.addDocument("autolib", title = "d", id = Some("ad"))
+      val dim = 8
+      val rng = new scala.util.Random(5)
+      val corpus = (0 until 60).map { i =>
+        val v = Array.fill(dim)(rng.nextGaussian().toFloat)
+        engine.addChunk("autolib", "ad", text = s"t-$i", embedding = Some(v),
+          metadata = Map("mode" -> (if (i % 2 == 0) "automatic" else "manual")),
+          id = Some(f"c$i%02d")): Unit
+        v
+      }
+      val root = "target/test-index/at-rest-bridge-auto"
+      TestSpark.rmTree(new java.io.File(root))
+      graft.index.IndexGenerations.clear()
+      val bridge = new graft.search.AtRestIndexBridge(root)
+      bridge.register(spark, engine, "autolib", graft.index.RandomHyperplaneLsh(8, 4, 42L))
+      val api = new HttpApi(spark, engine, HashingEmbedder(dim = dim), atRest = Some(bridge))
+      val port = api.start()
+      try {
+        def json(v: Array[Float]) = v.map(_.toString).mkString("[", ",", "]")
+        val filter = """"filters": {"mode": "automatic"}"""
+        val single = req("POST", s"http://127.0.0.1:$port/vector_db/libraries/autolib/search",
+          s"""{"query_embedding": ${json(corpus(0))}, "k": 3, "index": "lsh", $filter}""")
+        assert(single.statusCode() == 200, single.body())
+        assert(mapper.readTree(single.body()).get("index_used").asText().startsWith("at_rest_"))
+        val batch = req("POST",
+          s"http://127.0.0.1:$port/vector_db/libraries/autolib/search_batch",
+          s"""{"query_embeddings": [${json(corpus(0))}, ${json(corpus(3))}], "k": 3,
+             |"index": "lsh", $filter}""".stripMargin)
+        assert(batch.statusCode() == 200, batch.body())
+        val results = mapper.readTree(batch.body()).get("results")
+        assert(results.size() == 2)
+        (0 until 2).foreach { i =>
+          assert(results.get(i).get("index_used").asText().startsWith("at_rest_"))
+          val it = results.get(i).get("hits").elements()
+          while (it.hasNext)
+            assert(it.next().get("metadata").get("mode").asText() == "automatic")
+        }
+      } finally api.stop()
+    } finally graft.plans.LshProbeRewrite.clear()
+  }
 }

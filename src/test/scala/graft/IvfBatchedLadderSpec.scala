@@ -102,12 +102,7 @@ class IvfBatchedLadderSpec extends AnyFunSuite {
     val p = "target/spec-index/ivf-batched-ladder"
     graft.index.IvfIndexStore(cents).write(
       layout.select(col("vec_id"), col("embedding")), "embedding", p): Unit
-    if (!s.experimental.extraOptimizations.contains(graft.plans.LshProbeRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.LshProbeRewrite
-    if (!s.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(s)
+    graft.plans.LshProbeRewrite.inject(s)
     try {
       graft.plans.LshProbeRewrite.clear()
       graft.plans.LshProbeRewrite.registerIvf(p, cents, nprobe = 1, guaranteeK = true)
@@ -171,12 +166,7 @@ class IvfBatchedLadderSpec extends AnyFunSuite {
       .join(codes, "vec_id")
       .repartition(col("cluster_id"))
       .write.mode("overwrite").partitionBy("cluster_id").parquet(p)
-    if (!s.experimental.extraOptimizations.contains(graft.plans.LshProbeRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.LshProbeRewrite
-    if (!s.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(s)
+    graft.plans.LshProbeRewrite.inject(s)
     try {
       graft.plans.LshProbeRewrite.clear()
       graft.plans.LshProbeRewrite.registerIvfPq(p, cents, nprobe = 1, cb,
@@ -237,9 +227,7 @@ class IvfBatchedLadderSpec extends AnyFunSuite {
     val p = "target/spec-index/ivf-batched-ladder-nogk"
     graft.index.IvfIndexStore(cents).write(
       layout.select(col("vec_id"), col("embedding")), "embedding", p): Unit
-    if (!s.experimental.extraOptimizations.contains(graft.plans.LshProbeRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.LshProbeRewrite
+    graft.plans.LshProbeRewrite.inject(s)
     try {
       graft.plans.LshProbeRewrite.clear()
       graft.plans.LshProbeRewrite.registerIvf(p, cents, nprobe = 1, guaranteeK = false)
@@ -263,6 +251,9 @@ class IvfBatchedLadderSpec extends AnyFunSuite {
       graft.plans.LshProbeRewrite.clear()
       s.experimental.extraOptimizations =
         s.experimental.extraOptimizations.filterNot(_ == graft.plans.LshProbeRewrite)
+      s.experimental.extraStrategies =
+        s.experimental.extraStrategies.filterNot(
+          _.isInstanceOf[graft.plans.LshProbeStrategy])
     }
   }
 }

@@ -84,12 +84,7 @@ class LshProbeRewriteSpec extends AnyFunSuite {
     // arm + child-side dedupe keys (r12). Run WITHOUT GraftExtensions:
     // the public experimental hooks are how a stock session opts in.
     val s = TestSpark.spark
-    if (!s.experimental.extraOptimizations.contains(LshProbeRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ LshProbeRewrite
-    if (!s.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(s)
+    LshProbeRewrite.inject(s)
     try {
       LshProbeRewrite.clear()
       val lsh = RandomHyperplaneLsh(8, 12, 42L)
@@ -123,12 +118,7 @@ class LshProbeRewriteSpec extends AnyFunSuite {
 
   test("a maxHamming=1 registration serves the 1-bit multi-probe candidate set") {
     val s = TestSpark.spark
-    if (!s.experimental.extraOptimizations.contains(LshProbeRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ LshProbeRewrite
-    if (!s.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(s)
+    LshProbeRewrite.inject(s)
     try {
       LshProbeRewrite.clear()
       val lsh = RandomHyperplaneLsh(8, 12, 42L)
@@ -163,12 +153,7 @@ class LshProbeRewriteSpec extends AnyFunSuite {
     val s = TestSpark.spark
     val ivfPath = "target/test-index/rewrite-ivf"
     TestSpark.rmTree(new java.io.File(ivfPath))
-    if (!s.experimental.extraOptimizations.contains(LshProbeRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ LshProbeRewrite
-    if (!s.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(s)
+    LshProbeRewrite.inject(s)
     try {
       LshProbeRewrite.clear()
       val emb = Tables.embeddings(s, "/root/testdata/sf0.001")
@@ -210,12 +195,7 @@ class LshProbeRewriteSpec extends AnyFunSuite {
     val s = TestSpark.spark
     val ivfPath = "target/test-index/rewrite-ivf-gk"
     TestSpark.rmTree(new java.io.File(ivfPath))
-    if (!s.experimental.extraOptimizations.contains(LshProbeRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ LshProbeRewrite
-    if (!s.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(s)
+    LshProbeRewrite.inject(s)
     try {
       LshProbeRewrite.clear()
       val emb = Tables.embeddings(s, "/root/testdata/sf0.001")
@@ -524,12 +504,7 @@ class LshProbeRewriteSpec extends AnyFunSuite {
     // KnnJoin.lshServeBatched / ivfServeBatched under a registration
     val s = TestSpark.spark
     val sfDir = "/root/testdata/sf0.001"
-    if (!s.experimental.extraOptimizations.contains(LshProbeRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ LshProbeRewrite
-    if (!s.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(s)
+    LshProbeRewrite.inject(s)
     val emb = Tables.embeddings(s, sfDir).where(col("embedding").isNotNull)
     val requests = emb.limit(7)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
@@ -624,12 +599,7 @@ class LshProbeRewriteSpec extends AnyFunSuite {
     // KnnJoin.lshServeFilteredAdaptiveBatched, placeholder overwritten
     val s = TestSpark.spark
     val sfDir = "/root/testdata/sf0.001"
-    if (!s.experimental.extraOptimizations.contains(LshProbeRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ LshProbeRewrite
-    if (!s.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(s)
+    LshProbeRewrite.inject(s)
     val emb = Tables.embeddings(s, sfDir).where(col("embedding").isNotNull)
     val lsh = graft.index.RandomHyperplaneLsh(8, 12, 42L)
     val p = "target/test-index/rewrite-batched-gk"
@@ -705,6 +675,54 @@ class LshProbeRewriteSpec extends AnyFunSuite {
         .limit(5)
       assert(oblivious.queryExecution.optimizedPlan.toString.contains("LshProbeTopK"))
       LshProbeRewrite.clear()
+    }
+  }
+
+  test("inject from 8 threads on one session adds the rule and the strategy once") {
+    // a fresh session: its own experimental methods, none injected yet
+    val s = TestSpark.spark.newSession()
+    val start = new java.util.concurrent.CyclicBarrier(8)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val done = (1 to 8).map(_ => pool.submit(new Runnable {
+        def run(): Unit = { start.await(); LshProbeRewrite.inject(s) }
+      }))
+      done.foreach(_.get(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdownNow(): Unit
+    assert(s.experimental.extraOptimizations.count(_ == LshProbeRewrite) == 1)
+    assert(s.experimental.extraStrategies.count(_.isInstanceOf[graft.plans.LshProbeStrategy]) == 1)
+  }
+
+  test("requireServed fails on a declaration the rule left alone and on a surviving placeholder") {
+    val s = TestSpark.spark
+    LshProbeRewrite.inject(s)
+    try {
+      LshProbeRewrite.clear()
+      val q = s.read.parquet(indexPath).where(col("vec_id") === 0)
+        .select(col("embedding")).head().getSeq[Float](0).toArray
+      // the ladder binds layout-oblivious projections only
+      def declared = LshProbeRewrite.topK(
+          s.read.parquet(indexPath).where(col("label") =!= 3), q, 5, placeholder = true)
+        .select(col("vec_id"), col("score"), col("index_used"))
+      // unregistered: the exact scan runs, with the placeholder in place
+      val notServed = intercept[IllegalArgumentException](
+        LshProbeRewrite.requireServed(declared, Seq("gk_level"))("unregistered"))
+      assert(notServed.getMessage.contains("lacks gk_level"))
+      val survived = intercept[IllegalArgumentException](
+        LshProbeRewrite.requireServed(declared, Nil, placeholder = true)("unregistered"))
+      assert(survived.getMessage.contains("placeholder survived"))
+      // a guaranteed-k registration serves the ladder and owns index_used
+      LshProbeRewrite.register(indexPath, RandomHyperplaneLsh(8, 12, 42L), 64,
+        guaranteeK = true)
+      val served = LshProbeRewrite.requireServed(declared, Seq("gk_level"),
+        placeholder = true)("registered")
+      assert(served.collect().map(_.getAs[String]("index_used")).forall(_ != "auto"))
+    } finally {
+      LshProbeRewrite.clear()
+      s.experimental.extraOptimizations =
+        s.experimental.extraOptimizations.filterNot(_ == LshProbeRewrite)
+      s.experimental.extraStrategies =
+        s.experimental.extraStrategies.filterNot(_.isInstanceOf[graft.plans.LshProbeStrategy])
     }
   }
 }
