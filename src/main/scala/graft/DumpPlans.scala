@@ -17,13 +17,16 @@ object DumpPlans {
   /** Tokens of an explain that change from run to run over the same
     * plans, each with its mask (a regex replacement: `$1` is the
     * pattern's first group). Codegen and AQE stage ids follow the order
-    * in which stages happen to be planned or materialized. */
+    * in which stages happen to be planned or materialized; a broadcast
+    * stage's `sizeInBytes` follows the driver heap (the broadcast
+    * relation is sized against it), its `rowCount` does not. */
   private val volatileTokens: Seq[(Regex, String)] = Seq(
     raw"#\d+".r -> "#n",                                          // expression ids
     raw"\[plan_id=\d+\]".r -> "[plan_id=n]",
     raw"\*\(\d+\)".r -> "*(n)",                                  // codegen stage ids
     raw"\[codegen id : \d+\]".r -> "[codegen id : n]",
     raw"(QueryStage\n(?:Output .*\n)?Arguments: )\d+".r -> "$1n",  // AQE stage ids
+    raw"(BroadcastQueryStage \(\d+\), Statistics\(sizeInBytes=)[^,)]+".r -> "$1n",
     raw"\$$\$$Lambda(\$$\d+)?/0x[0-9a-f]+".r -> raw"\$$\$$Lambda",  // lambda classes
     raw"(?<=[\w$$;\[])@[0-9a-f]{1,8}\b".r -> "@n",                // identity hashes
     raw"Queries\.scala:\d+".r -> "Queries.scala:n")

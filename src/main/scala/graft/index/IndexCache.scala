@@ -18,7 +18,9 @@ import org.apache.spark.sql.functions.col
   *  - a snapshot entry: the library's [[LibrarySnapshot]], whose frame
   *    of embedded chunks is Spark-cached once, so every search at that
   *    version plans over an `InMemoryRelation` instead of re-encoding
-  *    the store, and answers the empty/dim probe on the driver;
+  *    the store, and answers the empty/dim probe on the driver. The
+  *    snapshot ships its rows to the executors once, as a broadcast, so
+  *    a task over the cached frame carries a slice index, not rows;
   *  - a bucketed frame per (numTables, numPlanes, seed): the LSH buckets
   *    derived from that snapshot's frame, Spark-cached, so repeated
   *    probes skip both the hash computation and the source scan.
@@ -31,8 +33,12 @@ import org.apache.spark.sql.functions.col
   * incarnations) of the library being (re)built, then LRU-evict
   * globally until the map is under `maxEntries` — so the cache is
   * bounded even when every hit is a distinct library. All map access is
-  * serialized on a plain lock (builds are lazy plan construction, so
-  * holding it is cheap).
+  * serialized on a plain lock (builds are lazy plan construction and
+  * one broadcast of the snapshot's rows, so holding it is cheap).
+  * Eviction unpersists a frame but leaves the snapshot's broadcast
+  * alone: a request still scanning an evicted frame recomputes it from
+  * the broadcast, which Spark's `ContextCleaner` releases once nothing
+  * references the frame.
   */
 final class IndexCache(maxEntries: Int = 64) {
   import IndexCache.{Entry, Key}

@@ -35,6 +35,8 @@ final case class SearchResult(hits: Seq[Hit], index: String,
   * score → TakeOrderedAndProject(k): one Spark job. The empty-after-
   * filter check and the dim probe are answered on the driver from the
   * snapshot's rows, not by a job, and nothing re-encodes the store.
+  * The snapshot's rows reach the executors as one broadcast per
+  * snapshot, so the query's tasks carry slice indices, not rows.
   */
 final class SearchService(spark: SparkSession, engine: Engine,
                           embedder: Option[Embedder] = None,

@@ -1,5 +1,7 @@
 package graft.state
 
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
@@ -15,6 +17,17 @@ import org.apache.spark.sql.functions.{col, lit}
   * later plan over it starts from an `InMemoryRelation`. Frame order is
   * archived rows first, then resident rows in store order (the order
   * [[Engine.chunksDF]] serves).
+  *
+  * The resident rows reach the executors once, as one broadcast per
+  * snapshot: a partition of the frame is a slice index, and its task
+  * reads that slice from the broadcast. A task of any plan over the
+  * frame (or a frame derived from it) so carries no rows, whereas a
+  * `parallelize(rows)` partition would carry, and make every task
+  * deserialize, its slice of the store even when the task only reads
+  * cached blocks. The broadcast is never destroyed here: a frame
+  * evicted from a cache while a request still scans it recomputes from
+  * it, and Spark's `ContextCleaner` releases it once no frame
+  * references it.
   */
 final class LibrarySnapshot private (val library: LibraryRow, val frame: DataFrame,
                                      resident: Vector[ChunkRow], spilled: Boolean) {
@@ -56,10 +69,28 @@ object LibrarySnapshot {
     // split for a local table scan
     val slices = math.min(math.max(rows.size, 1), spark.sparkContext.defaultParallelism)
     val resident = org.apache.spark.sql.graft.SqlShims.sizedFrame(
-      spark.createDataset(spark.sparkContext.parallelize(rows, slices)).toDF(), rows.size.toLong)
+      spark.createDataset(broadcastSlices(spark.sparkContext, rows, slices)).toDF(),
+      rows.size.toLong)
     val frame = Engine.liveArchived(spark, s).map(
       _.where(col("library_id") === libraryId && col("embedding").isNotNull)
         .unionByName(resident)).getOrElse(resident)
     new LibrarySnapshot(lib, frame, rows, spilled = s.spillSegments.nonEmpty)
+  }
+
+  /** `rows` in `slices` partitions, split where `parallelize(rows,
+    * slices)` splits them, but shipped as one broadcast: partition `i`
+    * is the index `i`, and its task reads rows `[i·n/slices,
+    * (i+1)·n/slices)` from the broadcast. The broadcast holds an array,
+    * not the `Vector`: Spark sizes a broadcast value by walking it, and
+    * it samples a large array but walks every row of a `Vector`'s
+    * 32-element leaves (at 8,000 chunks on 4 cpus, a broadcast of the
+    * `Vector` took 140-190 ms, of the array 55-70 ms). */
+  private def broadcastSlices(sc: SparkContext, rows: Vector[ChunkRow],
+                              slices: Int): RDD[ChunkRow] = {
+    val shipped = sc.broadcast(rows.toArray)
+    val n = rows.size.toLong
+    sc.parallelize(0 until slices, slices).flatMap { i =>
+      shipped.value.iterator.slice((i * n / slices).toInt, ((i + 1) * n / slices).toInt)
+    }
   }
 }

@@ -62,12 +62,7 @@ class BatchedPqServeSpec extends AnyFunSuite {
   }
 
   test("the batched declaration over registered floats rewrites to the staged batched serve") {
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.LshProbeRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.LshProbeRewrite
-    if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(spark)
+    graft.plans.LshProbeRewrite.inject(spark)
     val p = "target/test-index/batched-pq-split" // built by the earlier test
     val store = PqIndexStore()
     val cb = store.loadCodebooks(spark, p, dim = 64)
@@ -144,9 +139,7 @@ class BatchedPqServeSpec extends AnyFunSuite {
     }
     assert(got == want, s"batched IVF-PQ serve diverges from exact IVF:\n$got\nvs\n$want")
     // and through the rule: the declared cross join rewrites
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.LshProbeRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.LshProbeRewrite
+    graft.plans.LshProbeRewrite.inject(spark)
     import org.apache.spark.sql.expressions.{Window => W}
     try {
       graft.plans.LshProbeRewrite.clear()
@@ -200,12 +193,7 @@ class BatchedPqServeSpec extends AnyFunSuite {
     assert(got == want, s"batched SQ8 serve diverges from brute:\n$got\nvs\n$want")
 
     // the declared batched shape over the registered fused table
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.LshProbeRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.LshProbeRewrite
-    if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(spark)
+    graft.plans.LshProbeRewrite.inject(spark)
     import org.apache.spark.sql.expressions.{Window => W}
     try {
       graft.plans.LshProbeRewrite.clear()

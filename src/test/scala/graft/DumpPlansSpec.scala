@@ -46,4 +46,17 @@ class DumpPlansSpec extends AnyFunSuite {
     val once = DumpPlans.normalize("a#1 b#22L [plan_id=7] *(4)")
     assert(DumpPlans.normalize(once) == once)
   }
+
+  test("normalize masks a broadcast stage's size, which follows the driver heap, and keeps its rowCount") {
+    def stage(size: String) =
+      s"""   :     +- BroadcastQueryStage (29), Statistics(sizeInBytes=$size, rowCount=31)
+         |   +- ShuffleQueryStage (26), Statistics(sizeInBytes=362.1 KiB, rowCount=250)
+         |""".stripMargin
+    val at4g = DumpPlans.normalize(stage("16.0 MiB"))
+    assert(at4g == DumpPlans.normalize(stage("32.0 MiB")))
+    assert(at4g ==
+      """   :     +- BroadcastQueryStage (29), Statistics(sizeInBytes=n, rowCount=31)
+        |   +- ShuffleQueryStage (26), Statistics(sizeInBytes=362.1 KiB, rowCount=250)
+        |""".stripMargin)
+  }
 }

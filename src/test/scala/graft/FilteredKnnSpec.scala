@@ -189,12 +189,7 @@ class FilteredKnnSpec extends AnyFunSuite {
     // the rule-served output must equal searchFilteredAdaptive's
     // decision for decision (same counts, boundary, set, level).
     val s = spark
-    if (!s.experimental.extraOptimizations.contains(graft.plans.LshProbeRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.LshProbeRewrite
-    if (!s.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(s)
+    graft.plans.LshProbeRewrite.inject(s)
     try {
       graft.plans.LshProbeRewrite.clear()
       graft.plans.LshProbeRewrite.register(layoutPath, lsh, dim, guaranteeK = true)
@@ -245,12 +240,7 @@ class FilteredKnnSpec extends AnyFunSuite {
     // placeholder still gets the escalation (guaranteed k), just no
     // level column — the rewrite must not depend on the slot existing
     val s = spark
-    if (!s.experimental.extraOptimizations.contains(graft.plans.LshProbeRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.LshProbeRewrite
-    if (!s.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(s)
+    graft.plans.LshProbeRewrite.inject(s)
     try {
       graft.plans.LshProbeRewrite.clear()
       graft.plans.LshProbeRewrite.register(layoutPath, lsh, dim, guaranteeK = true)
@@ -285,12 +275,7 @@ class FilteredKnnSpec extends AnyFunSuite {
     // the probe doesn't have: the plan must be BIT-IDENTICAL (modulo
     // exprIds) to the guaranteeK=false registration's
     val s = spark
-    if (!s.experimental.extraOptimizations.contains(graft.plans.LshProbeRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ graft.plans.LshProbeRewrite
-    if (!s.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(s)
+    graft.plans.LshProbeRewrite.inject(s)
     try {
       val baseDf = s.read.parquet(layoutPath)
       def topk = baseDf

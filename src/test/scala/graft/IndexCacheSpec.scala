@@ -1,9 +1,10 @@
 package graft
 
 import graft.embed.HashingEmbedder
-import graft.index.{IndexCache, RandomHyperplaneLsh}
+import graft.index.{BruteForceKnn, IndexCache, RandomHyperplaneLsh}
 import graft.search.SearchService
 import graft.state.Engine
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -105,5 +106,37 @@ class IndexCacheSpec extends AnyFunSuite {
     }
     assert(cache.bucketed(e, spark, "L", lsh, 8)
       .select("id").collect().map(_.getString(0)).toSet == Set("new a", "new b"))
+  }
+
+  test("a snapshot evicted while in use still answers") {
+    val e = new Engine()
+    val emb = HashingEmbedder(dim = 8)
+    val libs = Seq("A", "B", "C").map { name =>
+      val lib = e.createLibrary(name).id
+      val doc = e.addDocument(lib, "d").id
+      (0 until 40).foreach { i =>
+        val text = s"$name text $i"
+        e.addChunk(lib, doc, text, Some(emb.embed(text)))
+      }
+      lib
+    }
+    val cache = new IndexCache(maxEntries = 2)
+    val held = cache.snapshot(e, spark, libs.head)
+    assert(held.frame.count() == 40) // A's blocks are cached
+    libs.tail.foreach(lib => cache.snapshot(e, spark, lib))
+    assert(!cache.frames.exists(_ eq held.frame)) // A was evicted
+    assert(held.frame.storageLevel == StorageLevel.NONE)
+    val q = emb.embed("A text 3")
+    def cos(v: Array[Float]): Double = {
+      val dot = v.zip(q).map { case (a, b) => a.toDouble * b }.sum
+      dot / math.sqrt(v.map(x => x.toDouble * x).sum * q.map(x => x.toDouble * x).sum)
+    }
+    val want = e.state.chunks.filter(_.library_id == libs.head)
+      .map(c => (c.id, cos(c.embedding.get))).sortBy { case (id, s) => (-s, id) }.take(5)
+    val got = BruteForceKnn.search(held.frame, col("embedding"), col("id"), q, 5)
+      .select("id", "score").collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+    assert(got.map(_._1) == want.map(_._1), s"$got vs $want")
+    got.zip(want).foreach { case ((_, g), (_, w)) => assert(math.abs(g - w) < 1e-5) }
+    cache.clear()
   }
 }

@@ -19,12 +19,7 @@ class RegistrationSidecarSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def withRule[A](f: => A): A = {
-    if (!spark.experimental.extraOptimizations.contains(LshProbeRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ LshProbeRewrite
-    if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(spark)
+    LshProbeRewrite.inject(spark)
     try f
     finally LshProbeRewrite.clear()
   }

@@ -1,11 +1,14 @@
 package graft
 
 import graft.embed.{Embedder, HashingEmbedder}
-import graft.index.IndexCache
+import graft.index.{BruteForceKnn, IndexCache, RandomHyperplaneLsh}
 import graft.search.SearchService
 import graft.state.Engine
 import org.apache.spark.sql.graft.ListenerBusDrain
+import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.serializer.JavaSerializer
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
@@ -220,5 +223,35 @@ class SearchServiceSpec extends AnyFunSuite {
       spark.sparkContext.removeSparkListener(jobListener)
       spark.listenerManager.unregister(planListener)
     }
+  }
+
+  test("a search task over a cached snapshot carries no rows") {
+    val e = new Engine()
+    val lib = e.createLibrary("wide").id
+    val doc = e.addDocument(lib, "d").id
+    (0 until 2000).foreach { i =>
+      val text = s"chunk number $i of the wide library"
+      e.addChunk(lib, doc, text, Some(embedder.embed(text)))
+    }
+    val cache = new IndexCache()
+    val snap = cache.snapshot(e, spark, lib)
+    val q = embedder.embed("chunk number 7 of the wide library")
+    val lsh = RandomHyperplaneLsh(8, 12)
+    val probe = cache.bucketed(snap, lsh, 16)
+      .where(lsh.candidateFilter(lsh.queryBuckets(q, 16))).drop("buckets")
+    val searches = Seq(
+      "brute" -> BruteForceKnn.search(snap.frame, col("embedding"), col("id"), q, 5),
+      "lsh" -> BruteForceKnn.search(probe, col("embedding"), col("id"), q, 5))
+    // every RDD a task of the query reads through, down to the rows' source
+    def lineage(rdd: RDD[_]): Seq[RDD[_]] = rdd +: rdd.dependencies.flatMap(d => lineage(d.rdd))
+    val ser = new JavaSerializer(spark.sparkContext.getConf).newInstance()
+    for ((name, df) <- searches) {
+      assert(df.collect().length == 5, name)
+      for (rdd <- lineage(df.queryExecution.toRdd); p <- rdd.partitions) {
+        val bytes = ser.serialize(p).remaining()
+        assert(bytes < 4096, s"$name: partition ${p.index} of $rdd serializes to $bytes bytes")
+      }
+    }
+    cache.clear()
   }
 }

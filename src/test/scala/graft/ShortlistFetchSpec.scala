@@ -16,10 +16,7 @@ class ShortlistFetchSpec extends AnyFunSuite {
   val spark = TestSpark.spark
   import spark.implicits._
 
-  private def injectStrategy(): Unit =
-    if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(spark)
+  private def injectStrategy(): Unit = graft.plans.LshProbeRewrite.injectStrategy(spark)
 
   private val tablePath = {
     val p = "target/test-shortlist-fetch/table"

@@ -31,14 +31,7 @@ class SplitFilteredSpec extends AnyFunSuite {
     p
   }
 
-  private def inject(): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.LshProbeRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.LshProbeRewrite
-    if (!spark.experimental.extraStrategies.exists(_.isInstanceOf[graft.plans.LshProbeStrategy]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.LshProbeStrategy(spark)
-  }
+  private def inject(): Unit = graft.plans.LshProbeRewrite.inject(spark)
 
   private def bruteFiltered(pred: org.apache.spark.sql.Column, k: Int) =
     graft.index.BruteForceKnn
