@@ -75,11 +75,6 @@ object Bench {
     * suspect's slow fresh run classifies `ambient` (r14 verdict #1b). */
   private[graft] val canaryGate = "q1_pricing_summary"
 
-  private def rmTreeQuiet(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTreeQuiet))
-    f.delete(): Unit
-  }
-
   /** Fork one suspect's confirmation run into a FRESH JVM ([[BenchOne]]
     * on this JVM's own classpath and flags) and parse its warm medians
     * — the suspect's and the [[canaryGate]]'s, timed in the same JVM.
@@ -143,7 +138,7 @@ object Bench {
       }
       median(name).map(m => BenchBudget.FreshRun(m, median(canaryGate).filter(_ => name != canaryGate)))
     } catch { case _: Throwable => None }
-    finally rmTreeQuiet(workDir)
+    finally FileTree.delete(workDir)
   }
 
   def main(args: Array[String]): Unit = {

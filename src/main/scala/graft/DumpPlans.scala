@@ -245,7 +245,7 @@ object DumpPlans {
     }
 
     // knn_lsh_cached's interesting plan: the probe over the STORED
-    // bucket columns of the session-cached layout — no per-query
+    // bucket columns of the gate's own layout artifact — no per-query
     // hashing UDF anywhere in the plan; the bucket filter prunes the
     // cached corpus before the cosine rerank's TakeOrderedAndProject.
     locally {
@@ -253,17 +253,14 @@ object DumpPlans {
       import graft.index.RandomHyperplaneLsh
       import org.apache.spark.sql.functions._
       val lsh = RandomHyperplaneLsh(8, 12, 42L)
-      val bucketed = lsh.withBuckets(
-        Tables.embeddings(spark, sfDir).where(col("embedding").isNotNull),
-        VectorFunctions.l2Normalize(col("embedding")), 64).cache()
       val q = Queries.queryVec(spark, sfDir)
-      val probe = bucketed.where(lsh.candidateFilter(lsh.queryBuckets(q, q.length)))
+      val probe = Queries.lshBucketed(spark, sfDir)
+        .where(lsh.candidateFilter(lsh.queryBuckets(q, q.length)))
         .drop("buckets")
         .withColumn("score", VectorFunctions.cosine(col("embedding"), typedlit(q.toSeq)))
         .orderBy(col("score").desc, col("vec_id").asc)
         .limit(5)
       sb.append(s"\n## knn_lsh_cached probe (stored-bucket filter over the cached layout)\n\n```\n${explainOf(probe)}\n```\n")
-      bucketed.unpersist()
     }
 
     // flagship custom pieces need setup: at-rest index + rule registration,

@@ -100,19 +100,20 @@ object Queries {
     * rebuild-free). Identical candidate set and rerank to [[knnLsh]],
     * so it shares knn_lsh's DuckDB oracle.
     */
-  // session-scoped like Tables.load: stopped sessions are explicitly
-  // evicted instead of handing out plans bound to a stopped context
-  private val lshBucketedCache = new SessionCache[String, DataFrame]
   def knnLshCached(spark: SparkSession, sfDir: String): DataFrame = {
-    val lsh = RandomHyperplaneLsh(8, 12, 42L)
-    val bucketed = lshBucketedCache.getOrElseUpdate(spark, sfDir)(
-      lsh.withBuckets(
-        Tables.embeddings(spark, sfDir).where(col("embedding").isNotNull),
-        VectorFunctions.l2Normalize(col("embedding")), 64).cache())
-    val (hits, used) =
-      lsh.searchBucketed(bucketed, col("embedding"), col("vec_id"), queryVec(spark, sfDir), 5)
+    val (hits, used) = RandomHyperplaneLsh(8, 12, 42L)
+      .searchBucketed(lshBucketed(spark, sfDir), col("embedding"), col("vec_id"),
+        queryVec(spark, sfDir), 5)
     hits.select(col("vec_id"), round(col("score"), 4).as("score"), lit(used).as("index_used"))
   }
+
+  /** [[knnLshCached]]'s layout: the non-null corpus with its stored
+    * 8×12 bucket columns, a session artifact per dataset. */
+  private[graft] def lshBucketed(spark: SparkSession, sfDir: String): DataFrame =
+    Artifacts.frame(spark, sfDir, "lsh-bucketed")(
+      RandomHyperplaneLsh(8, 12, 42L).withBuckets(
+        Tables.embeddings(spark, sfDir).where(col("embedding").isNotNull),
+        VectorFunctions.l2Normalize(col("embedding")), 64))
 
   /** The optimizer-rule serving path ([[graft.plans.LshProbeRewrite]]):
     * the user writes a PLAIN exact top-k — `ORDER BY cosine(emb, q)
@@ -137,13 +138,12 @@ object Queries {
   // all of them per query — measured 3.8 s and 2 s of GC per probe at
   // sf0.1, vs the probe's own ~0.1 s. A serving layer lists once and
   // reuses the FileIndex; partition pruning from the probe filter
-  // still applies per query. The cached Int is the layout's PHYSICAL
+  // still applies per query. The kept Int is the layout's PHYSICAL
   // partition count (r18: scale-adaptive, see
   // [[graft.index.LshIndexStore.adaptivePartitions]]) — every probe
   // over the layout must compute bucket_part with the SAME modulus the
-  // writer used, so the count travels with the FileIndex. Keyed by the
+  // writer used, so the count travels with the FileIndex. Scoped by the
   // layout path.
-  private val lshLayoutCache = new SessionCache[String, (DataFrame, Int)]
 
   /** The one builder of the rule-served 8×12 LSH gate layouts: writes
     * `corpus` to `path` once per session, registers the path under the
@@ -156,7 +156,7 @@ object Queries {
                         guaranteeK: Boolean = false)
                        (corpus: => DataFrame): (DataFrame, Int) = {
     val lsh = RandomHyperplaneLsh(8, 12, 42L)
-    val (base, parts) = lshLayoutCache.getOrElseUpdate(spark, path) {
+    val (base, parts) = Artifacts.value(spark, path, "lsh-layout") {
       val c = corpus
       val pp = graft.index.LshIndexStore.adaptivePartitions(c)
       graft.index.LshIndexStore(lsh, 64, pp).write(c, "embedding", path)
@@ -192,17 +192,10 @@ object Queries {
     * deterministic stride-53 sample — the exact model `ann_ivf` serves
     * and its DuckDB oracle replays, shared by every IVF layout over the
     * dataset and by ann_ivfpq. */
-  private val ivfRuleCentsCache = new SessionCache[String, Array[(Long, Array[Float])]]
   private def ivfRuleCents(spark: SparkSession, sfDir: String): Array[(Long, Array[Float])] =
-    ivfRuleCentsCache.getOrElseUpdate(spark, sfDir)(
+    Artifacts.value(spark, sfDir, "ivf-centroids")(
       IvfKnn.centroids(Tables.embeddings(spark, sfDir),
         col("vec_id"), col("embedding"), stride = 53L))
-
-  /** The rule-served IVF layouts, each with the centroids it was written
-    * with, keyed by layout path — same FileIndex-caching rationale as
-    * [[lshLayoutCache]]. */
-  private val ivfLayoutCache =
-    new SessionCache[String, (DataFrame, Array[(Long, Array[Float])])]
 
   /** The one builder of the rule-served IVF gate layouts: `build` writes
     * the layout at `path` once per session and returns its centroids;
@@ -213,7 +206,9 @@ object Queries {
   private def ivfLayout(spark: SparkSession, path: String, nprobe: Int,
                         guaranteeK: Boolean = false)
                        (build: => Array[(Long, Array[Float])]): DataFrame = {
-    val (base, cents) = ivfLayoutCache.getOrElseUpdate(spark, path) {
+    // kept with the centroids it was written with, scoped by the path —
+    // the same FileIndex rationale as the LSH layouts'
+    val (base, cents) = Artifacts.value(spark, path, "ivf-layout") {
       val c = build
       (spark.read.parquet(path), c)
     }
@@ -251,7 +246,6 @@ object Queries {
     * Small by design: the oracle's assignment replay is a corpus ×
     * centroids cross join in DuckDB.
     */
-  private val clusteredFixtureCache = new SessionCache[String, String]
   /** GENERATOR VERSION, encoded in the staged directory name (r14
     * ADVICE): the `_SUCCESS`-gated reuse below serves whatever parquet
     * sits at the path, so a generator change (seed, mixture shape,
@@ -265,7 +259,7 @@ object Queries {
   private[graft] def clusteredFixtureRelPath: String =
     s"target/gate-fixtures/clustered-n4000-c25-s010-$clusteredFixtureGen"
   private[graft] def clusteredFixtureDir(spark: SparkSession): String =
-    clusteredFixtureCache.getOrElseUpdate(spark, "v1") {
+    Artifacts.value(spark, clusteredFixtureRelPath, "clustered-fixture") {
       val dir = new java.io.File(clusteredFixtureRelPath)
       if (!new java.io.File(dir, "_SUCCESS").exists())
         Fixtures.gaussianMixture(spark, 4000L, 64, 25, 0.1)
@@ -461,17 +455,14 @@ object Queries {
       "the PQ gate must serve through the staged ADC rewrite", "adc_score")
   }
 
-  /** The fused codes+floats layouts of the scoring kinds (PQ, SQ8,
-    * IVF-PQ), keyed by path: each is written once per session, with the
-    * model read from its own memo ([[pqCodebooks]], [[sqScales]],
-    * [[ivfRuleCents]]). */
-  private val fusedLayoutCache = new SessionCache[String, DataFrame]
-
   /** The dataset's fused (vec_id, embedding, label, code) layout at
-    * `path`; `encode` maps the non-null corpus to its (id, code) rows. */
+    * `path`, one of the scoring kinds' (PQ, SQ8, IVF-PQ) codes+floats
+    * layouts: written once per session, with the model read from its
+    * own artifact ([[pqCodebooks]], [[sqScales]], [[ivfRuleCents]]);
+    * `encode` maps the non-null corpus to its (id, code) rows. */
   private def fusedLayout(spark: SparkSession, sfDir: String, path: String)
                          (encode: DataFrame => DataFrame): DataFrame =
-    fusedLayoutCache.getOrElseUpdate(spark, path) {
+    Artifacts.value(spark, path, "fused-layout") {
       val emb = Tables.embeddings(spark, sfDir).where(col("embedding").isNotNull)
       emb.select(col("vec_id"), col("embedding"), col("label"))
         .join(encode(emb).withColumnRenamed("id", "vec_id"), "vec_id")
@@ -580,7 +571,7 @@ object Queries {
     val cents = ivfRuleCents(spark, sfDir)
     val cb = pqCodebooks(spark, sfDir)
     val p = s"target/gate-index/ivfpq-rule-${math.abs(sfDir.hashCode)}"
-    val base = fusedLayoutCache.getOrElseUpdate(spark, p) {
+    val base = Artifacts.value(spark, p, "fused-layout") {
       val emb = Tables.embeddings(spark, sfDir).where(col("embedding").isNotNull)
       val codes = graft.index.PqKnn.encode(emb, col("vec_id"), col("embedding"), cb)
         .withColumnRenamed("id", "vec_id")
@@ -907,7 +898,7 @@ object Queries {
     * any one degrades to a corpus-ranked shortlist (starvation) or a
     * full filtered float cross join (the declared quadratic plan). */
   def knnFilteredBatchedPqRule(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = pqSplitFilteredPath(spark, sfDir)
+    val path = pqSplitPath(spark, sfDir, filtered = true)
     val cb = graft.index.PqIndexStore().loadCodebooks(spark, path, dim = 64)
     LshProbeRewrite.registerPqSplit(spark, path, cb,
       shortlist = 300, idColName = "vec_id", guaranteeK = true)
@@ -1020,19 +1011,17 @@ object Queries {
     * and an O(corpus) rebuild on every append — the reference rebuilds
     * in-process per query (search_service.py:122-125).
     */
-  // the AT-REST base layout: bucketed once per (session, sfDir) and
-  // Spark-cached, exactly like knnLshCached's full-corpus layout —
-  // without this the gate would re-run the bucket UDF over the base
-  // on every call and time an O(corpus) rebuild, the very cost the
-  // append path exists to avoid
-  private val lshAppendBaseCache = new SessionCache[String, DataFrame]
+  // the AT-REST base layout is a session artifact, exactly like
+  // knnLshCached's full-corpus layout — without it the gate would
+  // re-run the bucket UDF over the base on every call and time an
+  // O(corpus) rebuild, the very cost the append path exists to avoid
   def knnLshAppend(spark: SparkSession, sfDir: String): DataFrame = {
     val lsh = RandomHyperplaneLsh(8, 12, 42L)
     def emb = Tables.embeddings(spark, sfDir).where(col("embedding").isNotNull)
     def bucketed(df: DataFrame): DataFrame =
       lsh.withBuckets(df, VectorFunctions.l2Normalize(col("embedding")), 64)
-    val base = lshAppendBaseCache.getOrElseUpdate(spark, sfDir)(
-      bucketed(emb.where(col("vec_id") % 5 =!= 0)).cache())
+    val base = Artifacts.frame(spark, sfDir, "lsh-append-base")(
+      bucketed(emb.where(col("vec_id") % 5 =!= 0)))
     val delta = bucketed(emb.where(col("vec_id") % 5 === 0)) // the new arrivals
     val index = base.unionByName(delta)
     val (hits, used) =
@@ -1087,26 +1076,22 @@ object Queries {
     * oracle substitution). The driver-side Lloyd trainer costs ~0.7-1 s
     * per run (r18 job ledgers); run 1 of a fresh session still pays it,
     * visibly, in the bench's runs_sec forensics. */
-  private val pqCodebookCache = new SessionCache[String, graft.index.PqKnn.Codebooks]
   private def pqCodebooks(spark: SparkSession, sfDir: String): graft.index.PqKnn.Codebooks =
-    pqCodebookCache.getOrElseUpdate(spark, sfDir)(
+    Artifacts.value(spark, sfDir, "pq-codebooks")(
       graft.index.PqKnn.train(Tables.embeddings(spark, sfDir),
         col("vec_id"), col("embedding"), dim = 64))
 
   /** The dataset's trained SQ8 scales, the same build artifact for the
     * SQ8 kind: read by ann_recall, ann_recall_exact and the SQ8 rule
     * layout. */
-  private val sqScalesCache = new SessionCache[String, Array[Double]]
   private def sqScales(spark: SparkSession, sfDir: String): Array[Double] =
-    sqScalesCache.getOrElseUpdate(spark, sfDir)(
+    Artifacts.value(spark, sfDir, "sq8-scales")(
       graft.index.SqKnn.trainScales(Tables.embeddings(spark, sfDir), col("embedding"), dim = 64))
   // cluster_balance's coarse k-means fit — same build-artifact
   // reasoning: trained once per (session, dataset), the gate and the
   // oracle substitution read the identical centroids
-  private val kmeansCentersCache = new SessionCache[String, Array[Array[Double]]]
-
   private def balanceCenters(spark: SparkSession, sfDir: String): Array[Array[Double]] =
-    kmeansCentersCache.getOrElseUpdate(spark, sfDir)(
+    Artifacts.value(spark, sfDir, "kmeans-centers")(
       graft.index.MllibIndexes.kmeansIvfWithCenters(
         Tables.embeddings(spark, sfDir), "embedding", k = 8, maxIter = 3)._2)
 
@@ -1169,8 +1154,6 @@ object Queries {
         graft.pipeline.NaiveBayes.classValuesSql(nbModel(spark, sfDir)))
   }
 
-  private val hnswWalkCache = new SessionCache[String, Seq[graft.index.HnswWalk.WalkRow]]
-
   /** The persisted-graph walk trace, built once per (session, sfDir):
     * write a single-shard [[graft.index.HnswIndexStore]] over the
     * embeddings with the query vector (vec_id 0) HELD OUT — a query
@@ -1181,13 +1164,13 @@ object Queries {
     * need); durable serving over a kept store is [[annHnsw]]'s
     * searchMany path. */
   private def hnswWalkRows(spark: SparkSession, sfDir: String): Seq[graft.index.HnswWalk.WalkRow] =
-    hnswWalkCache.getOrElseUpdate(spark, sfDir) {
+    Artifacts.value(spark, sfDir, "hnsw-walk") {
       val dir = java.nio.file.Files.createTempDirectory("graft-hnsw-walk-").toFile
       try
         graft.index.HnswWalk.persistedWalk(spark,
           Tables.embeddings(spark, sfDir).where(col("vec_id") =!= 0),
           "vec_id", "embedding", queryVec(spark, sfDir), dir.toString)
-      finally rmTree(dir)
+      finally FileTree.delete(dir)
     }
 
   /** Hash-exact verification walk over the PERSISTED hierarchical
@@ -1648,7 +1631,7 @@ object Queries {
       present: DataFrame => DataFrame,
       filesPerTrigger: Int = 1,
       noDataBatches: Boolean = true): DataFrame = {
-    val base = streamTempDir(s"graft_${tag}_stream_run_")
+    val base = Artifacts.scratchDir(s"graft_${tag}_stream_run_")
     val outDir = s"${base.getAbsolutePath}/out"; val ckDir = s"${base.getAbsolutePath}/ck"
     // filesPerTrigger <= 0 → no cap: the whole replay arrives in ONE
     // micro-batch — fine for stateless/no-watermark transforms; the
@@ -1728,7 +1711,7 @@ object Queries {
         case Some(v) => spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v)
         case None => spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
       }
-      rmTree(base) // also on failure — no orphaned checkpoint/sink trees
+      FileTree.delete(base) // also on failure — no orphaned checkpoint/sink trees
     }
     out
   }
@@ -1754,7 +1737,7 @@ object Queries {
       present: DataFrame => DataFrame,
       cleanup: () => Unit = () => (),
       filesPerTrigger: Int = 1): DataFrame = {
-    val runDir = streamTempDir(s"graft_${tag}_run_")
+    val runDir = Artifacts.scratchDir(s"graft_${tag}_run_")
     val outDir = s"${runDir.getAbsolutePath}/out"; val ckDir = s"${runDir.getAbsolutePath}/ck"
     val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions)
@@ -1771,7 +1754,7 @@ object Queries {
     } finally {
       cleanup()
       spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-      rmTree(runDir) // also on failure — no orphaned checkpoint/sink trees
+      FileTree.delete(runDir) // also on failure — no orphaned checkpoint/sink trees
     }
   }
 
@@ -1780,7 +1763,7 @@ object Queries {
     * ONE data micro-batch; the append-mode releases then ride the
     * no-data batch Spark schedules when the watermark advances past
     * the data). It is immutable per dataset, so it is staged ONCE per
-    * (session, sfDir) like `Tables.load` — the staging write was ~⅔
+    * (session, sfDir) as a session artifact — the staging write was ~⅔
     * of the query's benched cost. The checkpoint and sink stay
     * per-call: the streaming run itself must be fresh for the
     * correctness gate.
@@ -1802,7 +1785,16 @@ object Queries {
     * hand-built multi-batch sequences in SessionStreamingSpec /
     * StreamJoinSpec, which control exactly what crosses each boundary.
     */
-  private val streamInputCache = new SessionCache[String, String]
+  private[graft] def stagedEventsReplayDir(spark: SparkSession, sfDir: String): String =
+    Artifacts.stagedDir(spark, sfDir, "graft_stream_in_") { dir =>
+      val ev = Tables.events(spark, sfDir)
+      // ONE file = one data micro-batch, sentinel row included: the
+      // watermark is computed from the batch max at batch end, so the
+      // append-mode release still happens across a batch boundary (in
+      // the scheduled no-data batch) — see the Scaladoc above.
+      ev.unionByName(sentinelRow(ev, maxTsMillis(ev))).coalesce(1)
+        .write.mode("overwrite").parquet(dir.getAbsolutePath)
+    }
 
   /** Max event time as epoch millis, robust to the driver-side type the
     * row extractor yields (`java.sql.Timestamp` for TimestampType,
@@ -1832,22 +1824,6 @@ object Queries {
       lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
       lit(0.0).as("value"), lit("{}").as("props"))
 
-  private[graft] def stagedEventsReplayDir(spark: SparkSession, sfDir: String): String =
-    streamInputCache.getOrElseUpdate(spark, sfDir) {
-      val dir = streamTempDir("graft_stream_in_")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(dir)))
-      val inDir = dir.getAbsolutePath
-      val ev = Tables.events(spark, sfDir)
-      val maxMs = maxTsMillis(ev)
-      // ONE file = one data micro-batch, sentinel row included: the
-      // watermark is computed from the batch max at batch end, so the
-      // append-mode release still happens across a batch boundary (in
-      // the scheduled no-data batch) — see the cache Scaladoc above.
-      ev.unionByName(sentinelRow(ev, maxMs)).coalesce(1)
-        .write.mode("overwrite").parquet(inDir)
-      inDir
-    }
-
   /** TWO-PHASE replay input: the events table split at its event-time
     * midpoint into two files (the sentinel rides the SECOND file), so
     * `maxFilesPerTrigger = 1` delivers two REAL data micro-batches —
@@ -1867,12 +1843,8 @@ object Queries {
     * no click evictable by the post-batch-1 watermark (2 h delay) can
     * still be needed by a half-2 purchase (1 h join interval).
     */
-  private val twoPhaseInputCache = new SessionCache[String, String]
-
   private[graft] def stagedEventsTwoPhaseReplayDir(spark: SparkSession, sfDir: String): String =
-    twoPhaseInputCache.getOrElseUpdate(spark, sfDir) {
-      val dir = streamTempDir("graft_stream_in2_")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(dir)))
+    Artifacts.stagedDir(spark, sfDir, "graft_stream_in2_") { dir =>
       val inDir = dir.getAbsolutePath
       val ev = Tables.events(spark, sfDir)
       val maxMs = maxTsMillis(ev)
@@ -1896,31 +1868,7 @@ object Queries {
         .foldLeft(0L)(math.max)
       parts().filterNot(f => before(f.getName))
         .foreach(f => f.setLastModified(dataMtime + 2000L))
-      inDir
     }
-
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) { val cs = f.listFiles(); if (cs != null) cs.foreach(rmTree) }
-    f.delete()
-  }
-
-  /** Scratch root for the streaming gates' per-run checkpoint/sink
-    * trees and staged replay inputs — EPHEMERAL BY CONSTRUCTION (each
-    * gate run creates, replays, reads back and deletes its tree), so
-    * their durability domain is the run, and the location is a knob
-    * (SPARK_GRAFT_STREAM_TMP), not a hardcoded temp dir. Measured
-    * honestly: pointing this at tmpfs did NOT move the gates' wall
-    * time on this machine — the checkpoint writes are small enough
-    * that the page cache absorbs them; the knob matters on hosts
-    * where the default temp filesystem is genuinely slow (or to aim a
-    * production deployment's checkpoints at durable shared storage).
-    */
-  private lazy val streamScratchRoot: java.nio.file.Path =
-    java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_STREAM_TMP",
-      System.getProperty("java.io.tmpdir")))
-
-  private def streamTempDir(prefix: String): java.io.File =
-    java.nio.file.Files.createTempDirectory(streamScratchRoot, prefix).toFile
 
   /** Shuffle/state partition count for the streaming gates' runs. The
     * gates' state is hundreds of keys, so every state-store instance
@@ -2293,7 +2241,7 @@ object Queries {
     // the convergence this gate pins (a single-batch replay would make
     // the upsert trivially equal to the batch aggregate).
     val inDir = stagedEventsTwoPhaseReplayDir(spark, sfDir)
-    val base = streamTempDir("graft_upsert_stream_run_")
+    val base = Artifacts.scratchDir("graft_upsert_stream_run_")
     val ckDir = s"${base.getAbsolutePath}/ck"
     val store = new java.util.concurrent.ConcurrentHashMap[(String, String), (Long, Double)]()
     val stream = spark.readStream.schema(ev.schema)
@@ -2320,7 +2268,7 @@ object Queries {
       try { q.processAllAvailable() } finally q.stop()
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-      rmTree(base) // also on failure — no orphaned checkpoint trees
+      FileTree.delete(base) // also on failure — no orphaned checkpoint trees
     }
     import scala.jdk.CollectionConverters._
     val rows = store.asScala.toSeq
@@ -2360,12 +2308,8 @@ object Queries {
     * sliding-window replay. The redelivery file's mtime is stamped
     * past the data file so FileStreamSource processes it second.
     */
-  private val dedupStreamInputCache = new SessionCache[String, String]
-
   private[graft] def stagedDedupReplayDir(spark: SparkSession, sfDir: String): String =
-    dedupStreamInputCache.getOrElseUpdate(spark, sfDir) {
-      val dir = streamTempDir("graft_dedup_stream_in_")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(dir)))
+    Artifacts.stagedDir(spark, sfDir, "graft_dedup_stream_in_") { dir =>
       val inDir = dir.getAbsolutePath
       val ev = Tables.events(spark, sfDir)
       ev.coalesce(1).write.mode("overwrite").parquet(inDir)
@@ -2378,7 +2322,6 @@ object Queries {
       val dataMtime = parts().filter(f => before(f.getName)).map(_.lastModified).max
       parts().filterNot(f => before(f.getName))
         .foreach(f => f.setLastModified(dataMtime + 2000L))
-      inDir
     }
 
   def eventsJsonK(spark: SparkSession, sfDir: String): DataFrame =
@@ -2602,13 +2545,11 @@ object Queries {
 
   // the fitted NB model is a build artifact of the corpus snapshot
   // (three aggregations, ≤ vocabCap × classes rows on the driver) —
-  // cached per (session, dataset) like the PQ codebook, so the gate
-  // benches scoring and the oracle substitution inlines the IDENTICAL
-  // trained constants
-  private val nbModelCache = new SessionCache[String, graft.pipeline.NaiveBayes.Model]
-
+  // a session artifact like the PQ codebook, so the gate benches
+  // scoring and the oracle substitution inlines the IDENTICAL trained
+  // constants
   private def nbModel(spark: SparkSession, sfDir: String): graft.pipeline.NaiveBayes.Model =
-    nbModelCache.getOrElseUpdate(spark, sfDir)(
+    Artifacts.value(spark, sfDir, "nb-model")(
       graft.pipeline.NaiveBayes.train(
         Tables.documents(spark, sfDir), "text", "lang"))
 
@@ -3099,24 +3040,18 @@ object Queries {
     * itself uses, scalable and exactly replayable (percentile ==
     * quantile_cont, parity proven by lineitem_quantiles).
     */
-  /** The scored table is computed ONCE and persisted per (session,
-    * dataset): bucketing inherently reads the scores twice (the
-    * threshold reduce, then the bucket projection), and without the
-    * persist each read re-runs the whole surprisal DAG — the corpus
-    * scored twice per call, which is exactly the duplicated-scan shape
+  /** The scored table is computed ONCE per (session, dataset), as a
+    * session artifact: bucketing inherently reads the scores twice (the
+    * threshold reduce, then the bucket projection), and without it
+    * each read re-runs the whole surprisal DAG — the corpus scored
+    * twice per call, which is exactly the duplicated-scan shape
     * CCNet's score-then-bucket split exists to avoid. Same
-    * build-artifact reasoning (and cache) as [[dedupComponents]]:
-    * score once, bucket/consume many times.
+    * build-artifact reasoning as [[dedupComponents]]: score once,
+    * bucket/consume many times.
     */
-  private val lmScoredCache = new SessionCache[String, DataFrame]
   private def lmScored(spark: SparkSession, sfDir: String): DataFrame =
-    lmScoredCache.getOrElseUpdate(spark, sfDir) {
-      val df = graft.pipeline.TrainingOps
-        .unigramSurprisal(Tables.documents(spark, sfDir), "doc_id", "text")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count() // materialize so both downstream reads hit the cache
-      df
-    }
+    Artifacts.frame(spark, sfDir, "lm-scored")(graft.pipeline.TrainingOps
+      .unigramSurprisal(Tables.documents(spark, sfDir), "doc_id", "text"))
   def perplexityBuckets(spark: SparkSession, sfDir: String): DataFrame = {
     val scored = lmScored(spark, sfDir)
     graft.pipeline.TrainingOps
@@ -3242,38 +3177,26 @@ object Queries {
     * still builds its shingles inside the timed window, keeping the
     * full-build cost visible in the suite.
     */
-  private val collapsedCorpusCache =
-    new SessionCache[String, (Dedup.CollapsedCorpus, DataFrame)]
   def simjoinPrefixCollapsed(spark: SparkSession, sfDir: String): DataFrame = {
-    val (c, postings) = collapsedCorpusCache.getOrElseUpdate(spark, sfDir) {
-      val c0 = Dedup.collapseCorpus(Tables.documents(spark, sfDir), "doc_id", "text", 3)
-      // membership + repSh stay lineage-truncated via localCheckpoint
-      // (r19): with a plain persist, every run's plans re-ANALYZE the
-      // whole collapse pipeline (md5 groups, min-id join, shingle UDF)
-      // that execution serves from the cache anyway; the checkpoint
-      // makes the snapshot artifacts plan LEAVES — the at-rest shape a
-      // resident engine reads from storage. repSh keeps serialized
-      // storage via an explicit persist-before-checkpoint is NOT
-      // possible (localCheckpoint owns the level), so the arrays ride
-      // the default MEMORY_AND_DISK: acceptable here because the
-      // postings index below absorbs the per-run heavy reads and the
-      // verify fetches arrays for candidates only.
-      val m = c0.membership.localCheckpoint(true)
-      val r = c0.repSh.localCheckpoint(true)
-      // the PREFIX-POSTING index over the representatives (r19, guide
-      // §1.2 / the r13 cost model above): the df-order + prefix build
-      // is a pure function of the snapshot — the two heaviest
-      // full-corpus passes of the join (ledger: 2 × ~13 s of task CPU
-      // at sf0.1) — so a resident engine materializes it WITH the
-      // collapse artifacts (AllPairs literature calls this the prefix
-      // index; same per-snapshot contract as the LSH layout and the
-      // PQ codebooks). Gate threshold is fixed at 0.5, which the
-      // postings are built for. The timed pass remains candidate
-      // expansion → intersect verify → membership re-expansion.
-      val p = Dedup.prefixPostings(r, 0.5).localCheckpoint(true)
-      (Dedup.CollapsedCorpus(m, r), p)
-    }
-    Dedup.prefixPairsOverCollapsed(c, 0.5, postings = Some(postings))
+    // membership and repSh are session frames: every run's plan reads
+    // them as cached-relation leaves and never re-analyzes the collapse
+    // pipeline (md5 groups, min-id join, shingle UDF) behind them — the
+    // at-rest shape a resident engine reads from storage
+    lazy val c0 = Dedup.collapseCorpus(Tables.documents(spark, sfDir), "doc_id", "text", 3)
+    val m = Artifacts.frame(spark, sfDir, "collapse-membership")(c0.membership)
+    val r = Artifacts.frame(spark, sfDir, "collapse-repsh")(c0.repSh)
+    // the PREFIX-POSTING index over the representatives (r19, guide
+    // §1.2 / the r13 cost model above): the df-order + prefix build
+    // is a pure function of the snapshot — the two heaviest
+    // full-corpus passes of the join (ledger: 2 × ~13 s of task CPU
+    // at sf0.1) — so a resident engine materializes it WITH the
+    // collapse artifacts (AllPairs literature calls this the prefix
+    // index; same per-snapshot contract as the LSH layout and the
+    // PQ codebooks). Gate threshold is fixed at 0.5, which the
+    // postings are built for. The timed pass remains candidate
+    // expansion → intersect verify → membership re-expansion.
+    val postings = Artifacts.frame(spark, sfDir, "collapse-postings")(Dedup.prefixPostings(r, 0.5))
+    Dedup.prefixPairsOverCollapsed(Dedup.CollapsedCorpus(m, r), 0.5, postings = Some(postings))
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
       .orderBy(col("id_a"), col("id_b"))
   }
@@ -3311,25 +3234,14 @@ object Queries {
     * files by doc_id mod 6 ∈ {1,3,5} — deterministic, disjoint, and
     * together exactly [[dedupIncremental]]'s batch side. Immutable per
     * dataset → staged once per (session, sfDir). */
-  private val ingestInputCache = new SessionCache[String, String]
   private def stagedIngestDocsDir(spark: SparkSession, sfDir: String): String =
-    ingestInputCache.getOrElseUpdate(spark, sfDir) {
-      val dir = streamTempDir("graft_ingest_in_")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(dir)))
+    Artifacts.stagedDir(spark, sfDir, "graft_ingest_in_") { dir =>
       val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
       Seq(1, 3, 5).foreach { m =>
         docs.where(pmod(col("doc_id"), lit(6)) === m).coalesce(1)
           .write.mode("append").parquet(dir.getAbsolutePath)
       }
-      dir.getAbsolutePath
     }
-
-  /** The at-rest corpus MinHash index ([[Dedup.corpusIndex]]) the
-    * ingest stream probes: built ONCE per corpus snapshot and resident
-    * thereafter (Spark-cached here; parquet-bucketed at 100 TB) — the
-    * whole point of the incremental shape is that no ingest ever
-    * re-shingles the corpus. */
-  private val ingestCorpusIndexCache = new SessionCache[String, (DataFrame, DataFrame)]
 
   /** CONTINUOUS-INGEST near-dup dedup as a stream — the production
     * form of [[dedupIncremental]]'s nightly-crawl story: document
@@ -3380,32 +3292,27 @@ object Queries {
   private def dedupIngestStreamImpl(spark: SparkSession, sfDir: String,
                                     withinBatch: Boolean): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-    val (shC, bandC) = ingestCorpusIndexCache.getOrElseUpdate(spark, sfDir) {
-      val (s, b) = Dedup.corpusIndex(
-        docs.where(col("doc_id") % 2 === 0), "doc_id", "text")
-      // size the resident index's partitioning to the snapshot, not to
-      // the session's shuffle width (r18): EVERY micro-batch probe
-      // scans both cached tables, and a 32-partition cache of a
-      // gate-SF index schedules 32 tasks × fixed per-task cost per
-      // scan per batch — the ledger measured 1.3-3.9 s of task time
-      // per probe against ~0.01 s of rows. At 100 TB the index is
-      // parquet-bucketed and its partitioning is storage-owned; the
-      // plan-stats-derived count below is the same scale-adaptive rule
-      // the LSH layout writer uses (~32 MB per partition, min 1).
-      def parts(df: DataFrame): Int =
-        (df.queryExecution.optimizedPlan.stats.sizeInBytes / (32L << 20))
-          .min(BigInt(spark.sparkContext.defaultParallelism)).max(BigInt(1)).toInt
-      // localCheckpoint, not cache (r19 — the VERDICT's "pre-analyzed
-      // cached static sides"): a .cache() keeps the index's FULL build
-      // lineage in the logical plan, so every micro-batch's one action
-      // re-analyzes the shingle/banding pipeline it will never execute;
-      // the checkpoint truncates the static side to a leaf, which is
-      // also the honest 100 TB shape (the at-rest index is parquet — a
-      // scan leaf — not a live lineage). Eager, so the snapshot
-      // materializes once here; content is deterministic either way.
-      (s.coalesce(parts(s)).localCheckpoint(true),
-        b.coalesce(parts(b)).localCheckpoint(true))
-    }
+    // the at-rest corpus MinHash index ([[Dedup.corpusIndex]]) the
+    // stream probes: two session frames, built ONCE per corpus snapshot
+    // (parquet-bucketed at 100 TB) — the whole point of the incremental
+    // shape is that no ingest ever re-shingles the corpus. Each
+    // micro-batch's one action plans over their cached-relation leaves
+    // and never re-analyzes the shingle/banding pipeline behind them.
+    lazy val (s, b) = Dedup.corpusIndex(docs.where(col("doc_id") % 2 === 0), "doc_id", "text")
+    // size the resident index's partitioning to the snapshot, not to
+    // the session's shuffle width (r18): EVERY micro-batch probe
+    // scans both cached tables, and a 32-partition cache of a
+    // gate-SF index schedules 32 tasks × fixed per-task cost per
+    // scan per batch — the ledger measured 1.3-3.9 s of task time
+    // per probe against ~0.01 s of rows. At 100 TB the index is
+    // parquet-bucketed and its partitioning is storage-owned; the
+    // plan-stats-derived count below is the same scale-adaptive rule
+    // the LSH layout writer uses (~32 MB per partition, min 1).
+    def parts(df: DataFrame): Int =
+      (df.queryExecution.optimizedPlan.stats.sizeInBytes / (32L << 20))
+        .min(BigInt(spark.sparkContext.defaultParallelism)).max(BigInt(1)).toInt
+    val shC = Artifacts.frame(spark, sfDir, "ingest-index-shingles")(s.coalesce(parts(s)))
+    val bandC = Artifacts.frame(spark, sfDir, "ingest-index-bands")(b.coalesce(parts(b)))
     val inDir = stagedIngestDocsDir(spark, sfDir)
     val qSchema = docs.select(col("doc_id"), col("text")).schema
     runReplayForeachBatch(spark, inDir, qSchema,
@@ -3457,17 +3364,14 @@ object Queries {
     *
     * The labeled component table is a BUILD ARTIFACT of a corpus
     * snapshot (a dedup pipeline computes it once, then every consumer
-    * reads it), so it is session-cached per dataset like the LSH
+    * reads it), so it is a session frame per dataset like the LSH
     * bucketed layout; the bench's runs_sec array shows the one-time
     * iterative build in run 1 and the at-rest serve thereafter.
     */
-  private val componentsCache = new SessionCache[String, DataFrame]
   def dedupComponents(spark: SparkSession, sfDir: String): DataFrame = {
-    val labels = componentsCache.getOrElseUpdate(spark, sfDir) {
+    val labels = Artifacts.frame(spark, sfDir, "dedup-components") {
       val pairs = Dedup.minhashNearDups(Tables.documents(spark, sfDir), "doc_id", "text", 0.5)
-      val l = Dedup.duplicateComponents(pairs.select(col("id_a"), col("id_b"))).cache()
-      l.count() // materialize so the persisted table, not the lineage, serves
-      l
+      Dedup.duplicateComponents(pairs.select(col("id_a"), col("id_b")))
     }
     labels.select(col("id").as("doc_id"), col("label").as("component_id"))
       .orderBy(col("doc_id"))
@@ -4411,17 +4315,13 @@ object Queries {
     * serving loop (search_service.py:83-156). Immutable per dataset →
     * staged once per (session, sfDir), like the events replay.
     */
-  private val knnServeInputCache = new SessionCache[String, String]
   private def stagedKnnQueryDir(spark: SparkSession, sfDir: String): String =
-    knnServeInputCache.getOrElseUpdate(spark, sfDir) {
-      val dir = streamTempDir("graft_knnserve_in_")
-      Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(dir)))
+    Artifacts.stagedDir(spark, sfDir, "graft_knnserve_in_") { dir =>
       val q = servingRequests(spark, sfDir)
       (0L until 5L).foreach { i =>
         q.where(col("vec_id") === i).coalesce(1)
           .write.mode("append").parquet(dir.getAbsolutePath)
       }
-      dir.getAbsolutePath
     }
 
   /** Vector search AS A SERVING STREAM: query vectors arrive on a
@@ -4873,6 +4773,38 @@ object Queries {
         pqCodebooks(spark, sfDir), candidates = 100)
       .select(col("vec_id"), round(col("score"), 4).as("score"))
 
+  /** One split layout per session×SF, shared by the two-plan and
+    * single-plan serve gates — the build is a one-time snapshot cost
+    * and the gates time the SERVE, so neither should pay (or hide) a
+    * rebuild the other already did. `filtered` is the layout WITH
+    * float-side payload (r17, open thread (a) — the scoring kinds'
+    * filtered policy needs metadata to predicate on): same trainer and
+    * codes side, but [[graft.index.PqKnn.writeSplit]] carries `label`
+    * on the floats side, in a separate directory so the unfiltered
+    * twins' frozen scan profiles (float table width) are untouched. */
+  private def pqSplitPath(spark: SparkSession, sfDir: String,
+                          filtered: Boolean = false): String = {
+    val p = s"target/gate-index/pq-split${if (filtered) "f" else ""}-${math.abs(sfDir.hashCode)}"
+    Artifacts.value(spark, p, "pq-split-layout") {
+      val emb = Tables.embeddings(spark, sfDir).where(col("embedding").isNotNull)
+      // the STORE writes the float side too (r16: the id-clustered
+      // layout is a store-owned contract — writeSplit range-partitions
+      // and id-sorts, so row-group min/max skipping holds by
+      // construction, never by caller discipline). Serving must fetch
+      // from DISK with the pushed filter: reading the session-cached
+      // embeddings table would satisfy the rows but hide the pushdown
+      // mechanism this gate pins — Spark's CacheManager substitutes any
+      // matching plan fragment, and PushedFilters never appear on an
+      // InMemoryTableScan. PqServeProbe measures ~10× fewer rows read
+      // vs the same filter over an unsorted single-file layout, and the
+      // ratio grows with the file count (at 100 TB, 100 shortlist ids
+      // touch ≤100 of ~100k files).
+      graft.index.PqIndexStore().writeSplit(emb, col("vec_id"), col("embedding"),
+        dim = 64, p, payload = if (filtered) Seq(col("label")) else Nil)
+      p
+    }
+  }
+
   /** [[annPq]] served from the SPLIT at-rest layout (r15 open thread
     * #2, the fused rule rewrite's documented I/O residual closed):
     * the shortlist stage scans the [[graft.index.PqIndexStore]] CODES
@@ -4891,33 +4823,6 @@ object Queries {
     * one-time snapshot costs (session-cached); the timed run is the
     * served probe. PqServeProbe prices the I/O claim at 1M rows.
     */
-  private val pqSplitPathCache = new SessionCache[String, String]
-  /** One split layout per session×SF, shared by the two-plan and
-    * single-plan serve gates — the build is a one-time snapshot cost
-    * and the gates time the SERVE, so neither should pay (or hide) a
-    * rebuild the other already did. */
-  private def pqSplitPath(spark: SparkSession, sfDir: String): String = {
-    val p = s"target/gate-index/pq-split-${math.abs(sfDir.hashCode)}"
-    pqSplitPathCache.getOrElseUpdate(spark, sfDir) {
-      val emb = Tables.embeddings(spark, sfDir).where(col("embedding").isNotNull)
-      // the STORE writes the float side too (r16: the id-clustered
-      // layout is a store-owned contract — writeSplit range-partitions
-      // and id-sorts, so row-group min/max skipping holds by
-      // construction, never by caller discipline). Serving must fetch
-      // from DISK with the pushed filter: reading the session-cached
-      // embeddings table would satisfy the rows but hide the pushdown
-      // mechanism this gate pins — Spark's CacheManager substitutes any
-      // matching plan fragment, and PushedFilters never appear on an
-      // InMemoryTableScan. PqServeProbe measures ~10× fewer rows read
-      // vs the same filter over an unsorted single-file layout, and the
-      // ratio grows with the file count (at 100 TB, 100 shortlist ids
-      // touch ≤100 of ~100k files).
-      graft.index.PqIndexStore().writeSplit(emb, col("vec_id"), col("embedding"),
-        dim = 64, p)
-      p
-    }
-  }
-
   def annPqSplit(spark: SparkSession, sfDir: String): DataFrame = {
     val path = pqSplitPath(spark, sfDir)
     val out = graft.index.PqIndexStore().searchRefinedSplit(spark, path,
@@ -4997,23 +4902,6 @@ object Queries {
         "staged shortlist-fetch plan — not time (and oracle) a full float scan")
   }
 
-  /** The split layout WITH float-side payload (r17, open thread (a) —
-    * the scoring kinds' filtered policy needs metadata to predicate
-    * on): same trainer and codes side as [[pqSplitPath]]'s layout, but
-    * [[graft.index.PqKnn.writeSplit]] carries `label` on the floats
-    * side. Separate directory from the unfiltered twins so their
-    * frozen scan profiles (float table width) are untouched. */
-  private val pqSplitFilteredPathCache = new SessionCache[String, String]
-  private def pqSplitFilteredPath(spark: SparkSession, sfDir: String): String = {
-    val p = s"target/gate-index/pq-splitf-${math.abs(sfDir.hashCode)}"
-    pqSplitFilteredPathCache.getOrElseUpdate(spark, sfDir) {
-      val emb = Tables.embeddings(spark, sfDir).where(col("embedding").isNotNull)
-      graft.index.PqIndexStore().writeSplit(emb, col("vec_id"), col("embedding"),
-        dim = 64, p, payload = Seq(col("label")))
-      p
-    }
-  }
-
   /** FILTERED split-PQ serving, library form (r17 — guaranteed-k for
     * the scoring kinds): the metadata predicate runs FIRST on a narrow
     * (id + label) float projection, the surviving ids semi-join into
@@ -5032,7 +4920,7 @@ object Queries {
     * (filter-first, not corpus-ranked) and the staged fetch must
     * appear (not a full float scan). */
   def annPqSplitFiltered(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = pqSplitFilteredPath(spark, sfDir)
+    val path = pqSplitPath(spark, sfDir, filtered = true)
     val out = graft.index.PqIndexStore().searchRefinedSplitFiltered(spark, path,
         "vec_id", "embedding", col("label") === 3, queryVec(spark, sfDir),
         k = 5, dim = 64, candidates = 100)
@@ -5058,7 +4946,7 @@ object Queries {
     * registration owns recall-under-filter for the scoring kinds the
     * way guaranteeK LSH/IVF registrations own the escalation ladder. */
   def annPqSplitFilteredRule(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = pqSplitFilteredPath(spark, sfDir)
+    val path = pqSplitPath(spark, sfDir, filtered = true)
     val cb = graft.index.PqIndexStore().loadCodebooks(spark, path, dim = 64)
     LshProbeRewrite.registerPqSplit(spark, path, cb,
       shortlist = 100, idColName = "vec_id", guaranteeK = true)
@@ -5244,6 +5132,26 @@ object Queries {
     engine
   }
 
+  /** An engine whose one library, `corpus`, mirrors the embeddings
+    * table chunk for chunk: one document `d0`, chunk `c<vec_id>` per
+    * non-null embedding in vec_id order, with `metadata(vec_id)`. */
+  private def corpusEngine(spark: SparkSession, sfDir: String,
+                           metadata: Long => Map[String, String]): graft.state.Engine = {
+    val engine = new graft.state.Engine()
+    engine.createLibrary(name = "corpus", id = Some("corpus"))
+    engine.addDocument("corpus", title = "d0", id = Some("d0"))
+    Tables.embeddings(spark, sfDir).where(col("embedding").isNotNull)
+      .select(col("vec_id"), col("embedding")).collect()
+      .sortBy(_.getLong(0))
+      .foreach { r =>
+        val id = r.getLong(0)
+        engine.addChunk("corpus", "d0", text = s"chunk-$id",
+          embedding = Some(r.getSeq[Float](1).toArray),
+          metadata = metadata(id), id = Some(s"c$id")): Unit
+      }
+    engine
+  }
+
   /** The reference's O12 REST search envelope served from the
     * REGISTERED at-rest tier (r16; the r15 verdict's #5 — the last
     * unification gap: `index="lsh"` REST searches answered from the
@@ -5260,23 +5168,10 @@ object Queries {
     * chosen set, rerank, reported level): the whole REST path — engine
     * state → bridge → rule → ladder → envelope — must reproduce the
     * library ladder's decisions bit for bit. */
-  private val o12BridgeCache = new SessionCache[String, graft.search.SearchService]
   def searchO12Registered(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val svc = o12BridgeCache.getOrElseUpdate(spark, sfDir) {
-      val engine = new graft.state.Engine()
-      engine.createLibrary(name = "corpus", id = Some("corpus"))
-      engine.addDocument("corpus", title = "d0", id = Some("d0"))
-      Tables.embeddings(spark, sfDir).where(col("embedding").isNotNull)
-        .select(col("vec_id"), col("embedding")).collect()
-        .sortBy(_.getLong(0))
-        .foreach { r =>
-          val id = r.getLong(0)
-          engine.addChunk("corpus", "d0", text = s"chunk-$id",
-            embedding = Some(r.getSeq[Float](1).toArray),
-            metadata = Map("m47" -> (id % 47).toString),
-            id = Some(s"c$id")): Unit
-        }
+    val svc = Artifacts.value(spark, sfDir, "o12-bridge") {
+      val engine = corpusEngine(spark, sfDir, id => Map("m47" -> (id % 47).toString))
       val bridge = new graft.search.AtRestIndexBridge(
         s"target/gate-index/at-rest-bridge-${math.abs(sfDir.hashCode)}")
       bridge.register(spark, engine, "corpus")
@@ -5310,22 +5205,10 @@ object Queries {
     * beam's recall over this corpus is exact at the gate SFs (the
     * ann_hnsw equivalence, pinned again by the require below), so the
     * gate shares knn_brute's oracle with the envelope literal on top. */
-  private val o12HnswBridgeCache = new SessionCache[String, graft.search.SearchService]
   def searchO12Hnsw(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val svc = o12HnswBridgeCache.getOrElseUpdate(spark, sfDir) {
-      val engine = new graft.state.Engine()
-      engine.createLibrary(name = "corpus", id = Some("corpus"))
-      engine.addDocument("corpus", title = "d0", id = Some("d0"))
-      Tables.embeddings(spark, sfDir).where(col("embedding").isNotNull)
-        .select(col("vec_id"), col("embedding")).collect()
-        .sortBy(_.getLong(0))
-        .foreach { r =>
-          val id = r.getLong(0)
-          engine.addChunk("corpus", "d0", text = s"chunk-$id",
-            embedding = Some(r.getSeq[Float](1).toArray),
-            id = Some(s"c$id")): Unit
-        }
+    val svc = Artifacts.value(spark, sfDir, "o12-hnsw-bridge") {
+      val engine = corpusEngine(spark, sfDir, _ => Map.empty)
       val bridge = new graft.search.AtRestIndexBridge(
         s"target/gate-index/at-rest-bridge-hnsw-${math.abs(sfDir.hashCode)}")
       bridge.registerHnsw(spark, engine, "corpus")

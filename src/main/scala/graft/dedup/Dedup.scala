@@ -2,6 +2,7 @@ package graft.dedup
 
 import graft.functions.{TextFunctions, VectorFunctions}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.graft.SqlShims
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for a training-data pipeline. Each has the
@@ -41,7 +42,7 @@ object Dedup {
   private def scratchCache(tag: String, df: DataFrame): DataFrame = {
     // sweep entries of stopped sessions so the registry never pins a
     // dead session (or its last cached frame) for the JVM lifetime —
-    // the same listener-free eviction SessionCache uses (r12 review)
+    // the same listener-free eviction Artifacts uses (r12 review)
     scratch.keySet.removeIf(k => k._1.sparkContext.isStopped)
     val prev = scratch.put((df.sparkSession, tag), df)
     // blocking: a lazy unpersist leaves async block eviction running
@@ -974,13 +975,15 @@ object Dedup {
     * Scale shape per round: one equi-join + one min-aggregate
     * (hash-min) and one self-equi-join (jump), all shuffled on vertex
     * id — the same key every round, so AQE reuses the partitioning.
-    * Each round materializes with `localCheckpoint` (NOT a bare
-    * persist): the jump step references m twice and m references the
-    * previous labels, so the LOGICAL plan would double per round —
-    * exponential in rounds — unless lineage is actually truncated.
-    * Checkpointing caps the plan at one round's shape regardless of
-    * round count (the iterative-DataFrame idiom GraphFrames uses for
-    * the same reason).
+    * Each round materializes as a cached frame read back through a
+    * one-node plan leaf ([[RoundLeaf]]), not as a bare persist: the
+    * jump step references m twice and m references the previous
+    * labels, so the LOGICAL plan would double per round — exponential
+    * in rounds — unless every round's plan starts from a leaf. The leaf
+    * caps the plan at one round's shape regardless of round count (the
+    * iterative-DataFrame truncation GraphFrames gets from checkpoints),
+    * while a lost block still recomputes from the RDD lineage behind
+    * the cache.
     *
     * NON-CONVERGENCE IS LOUD: if the iteration cap is the stopper the
     * call throws IllegalStateException rather than returning
@@ -996,19 +999,19 @@ object Dedup {
   def duplicateComponents(pairs: DataFrame, maxIter: Int = 25): DataFrame =
     duplicateComponentsWithRounds(pairs, maxIter)._1
 
-  /** Frees the storage blocks behind a `localCheckpoint(true)`-built
-    * DataFrame. `Dataset.unpersist` cannot do this — local checkpoints
-    * live as RDD-level persists outside the CacheManager — so the
-    * block release goes through the LogicalRDD the checkpoint returned.
-    * Only safe once every consumer is itself materialized: the lineage
-    * is truncated, so the freed RDD cannot be recomputed.
-    */
-  private def freeLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => () // not a checkpoint product; nothing to free
-    }
+  /** One round's frame, cached and counted, and its rows as a
+    * one-node plan leaf over the cached scan ([[SqlShims.sizedFrame]])
+    * for the next round to build on. Not the cached relation itself
+    * ([[SqlShims.cachedLeaf]]): a relation prints its cached plan,
+    * which prints the previous round's relation, twice through the jump
+    * self-join, so every AQE plan update of a long run would format a
+    * string that doubles per round (a 9-round run ran out of heap).
+    * `free` drops the round's cache entry. */
+  private final class RoundLeaf(df: DataFrame) {
+    private val cached = df.cache()
+    val leaf: DataFrame = SqlShims.sizedFrame(cached, cached.count())
+    def free(): Unit = cached.unpersist(blocking = false): Unit
+  }
 
   /** [[duplicateComponents]] plus the number of rounds actually run —
     * the observable the O(log diameter) convergence spec asserts on.
@@ -1017,55 +1020,55 @@ object Dedup {
     val edges = pairs.select(col("id_a").cast("long").as("u"), col("id_b").cast("long").as("v"))
       .union(pairs.select(col("id_b").cast("long"), col("id_a").cast("long")))
       .distinct().persist()
-    var labels = edges.select(col("u").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint(true)
+    var round = new RoundLeaf(edges.select(col("u").as("id")).distinct()
+      .withColumn("label", col("id")))
     var changed = true
     var it = 0
     while (changed && it < maxIter) {
+      val labels = round.leaf
       // hash-min: every vertex takes the min label over its closed
       // neighborhood
       val nbrMin = edges.join(labels, edges("v") === labels("id"))
         .select(edges("u").as("id"), col("label"))
       // materialized BEFORE the jump self-join: a self-join over the
       // live union plan trips Catalyst's Union constraint rewrite on
-      // the deduplicated expr-ids, and the checkpoint is needed for
-      // lineage truncation anyway (see the Scaladoc)
-      val m = labels.select(col("id"), col("label")).union(nbrMin)
-        .groupBy(col("id")).agg(min(col("label")).as("label"))
-        .localCheckpoint(true)
+      // the deduplicated expr-ids, and the leaf is needed for plan
+      // truncation anyway (see the Scaladoc)
+      val mRound = new RoundLeaf(labels.select(col("id"), col("label")).union(nbrMin)
+        .groupBy(col("id")).agg(min(col("label")).as("label")))
+      val m = mRound.leaf
       // pointer jump: label'(v) = m(m(v)). The inner join is total:
       // every label VALUE is a vertex id (min over closed-neighborhood
       // labels, inductively vertex ids), so it has a row in m.
-      val next = m
+      val next = new RoundLeaf(m
         .join(m.toDF("pid", "plabel"), col("label") === col("pid"))
-        .select(col("id"), col("plabel").as("label"))
-        .localCheckpoint(true)
+        .select(col("id"), col("plabel").as("label")))
       // convergence is an EXISTENCE question, not a count: isEmpty
       // stops at the first changed row (limit-1 under the hood)
       // instead of scanning every vertex per round
-      changed = !next.join(labels.withColumnRenamed("label", "prev"), "id")
+      changed = !next.leaf.join(labels.withColumnRenamed("label", "prev"), "id")
         .where(col("label") =!= col("prev")).isEmpty
       // next is eagerly materialized and the convergence check above
       // was the last read of the previous round's blocks — free them
       // now, or a long run holds every round's full vertex-label table
-      // (2 checkpoints per round) resident at once
-      freeLocalCheckpoint(labels)
-      freeLocalCheckpoint(m)
-      labels = next
+      // (2 cached frames per round) resident at once
+      round.free()
+      mRound.free()
+      round = next
       it += 1
     }
     edges.unpersist()
     if (changed) {
       // nothing will ever read the partial labels — free their
-      // checkpoint blocks too, or every failed invocation leaks one
-      // full vertex-label table for the session lifetime
-      freeLocalCheckpoint(labels)
+      // cached blocks too, or every failed invocation leaks one full
+      // vertex-label table for the session lifetime
+      round.free()
       throw new IllegalStateException(
         s"duplicateComponents did not converge in $maxIter rounds — " +
           "labels would be partially propagated (split components). " +
           "Raise maxIter; with pointer jumping, rounds ~ log2(component diameter).")
     }
-    (labels, it)
+    (round.leaf, it)
   }
 
   /** Scale path: hyperplane-LSH bucket blocking, pairs only within

@@ -52,14 +52,6 @@ object IndexGenerations {
   private def key(p: String): String =
     new java.io.File(p).getAbsolutePath.stripSuffix("/")
 
-  private def rmTree(p: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    rm(new java.io.File(p))
-  }
-
   /** On-disk twin of the in-memory retire-pending flag (r16, roadmap
     * thread #4): a crash between "retire deferred" and "last lease
     * released" used to leak the directory with nothing recording the
@@ -148,7 +140,7 @@ object IndexGenerations {
       // the lease-count check and the retired flip happen in ONE
       // critical section (r16 ADVICE: a check-then-act partition let a
       // concurrent lease() land between the liveLeases read and the
-      // rmTree — deleting the directory under an active reader); a
+      // delete — deleting the directory under an active reader); a
       // lease that raced in wins, and the marker stays for a later
       // sweep. lease() itself synchronizes on the same Gen and refuses
       // once retired, so no new reader can slip in after the flip.
@@ -162,7 +154,7 @@ object IndexGenerations {
           false
         else { g.retirePending = false; g.retired = true; true }
       }
-      if (deleteNow) rmTree(k)
+      if (deleteNow) graft.FileTree.delete(new java.io.File(k))
       (f.getPath, deleteNow)
     }
     (results.collect { case (p, true) => p }.toSeq,
@@ -217,7 +209,7 @@ object IndexGenerations {
               g.retirePending = false; g.retired = true; true
             } else false
           }
-          if (doIt) rmTree(k)
+          if (doIt) graft.FileTree.delete(new java.io.File(k))
         }
       }
     }
@@ -247,7 +239,7 @@ object IndexGenerations {
       else if (g.leases == 0 && !foreignLive) { g.retired = true; true }
       else { g.retirePending = true; false }
     }
-    if (deleteNow) rmTree(k)
+    if (deleteNow) graft.FileTree.delete(new java.io.File(k))
     else if (!isRetired(k))
       // deferred: persist the intent so a crash before the last lease
       // release cannot leak the directory silently (sweep() finishes

@@ -277,8 +277,8 @@ final class Engine(clock: () => Instant = () => Instant.now(),
           if (after == 0) {
             ref.set(s.copy(spillSegments = Vector.empty))
             spillBlooms.clear()
-            s.spillSegments.foreach(p => rmTree(new java.io.File(p)))
-            rmTree(new java.io.File(seg))
+            s.spillSegments.foreach(p => graft.FileTree.delete(new java.io.File(p)))
+            graft.FileTree.delete(new java.io.File(seg))
           } else {
             // build the new Bloom BEFORE publishing, delete old segments
             // only AFTER — at every step the published state points at
@@ -289,17 +289,12 @@ final class Engine(clock: () => Instant = () => Instant.now(),
             ref.set(s.copy(spillSegments = Vector(seg)))
             spillBlooms.clear()
             spillBlooms += bf
-            s.spillSegments.foreach(p => rmTree(new java.io.File(p)))
+            s.spillSegments.foreach(p => graft.FileTree.delete(new java.io.File(p)))
           }
           Some((before, after))
         }
       }
     }
-
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) { val cs = f.listFiles(); if (cs != null) cs.foreach(rmTree) }
-    f.delete()
-  }
 
   /** Is `chunkId` archived in the spilled tier under the CURRENT
     * incarnation of its parent document? (Rare path: only probed after

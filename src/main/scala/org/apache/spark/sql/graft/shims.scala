@@ -28,6 +28,17 @@ object SqlShims {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** A cached `df` as its cached relation: the `InMemoryRelation` the
+    * CacheManager holds for it, as the whole plan of a new DataFrame.
+    * A plan over it analyzes one leaf instead of `df`'s build, and a
+    * lost block still recomputes from the lineage the relation keeps.
+    * `df` must have been cached in its session. */
+  def cachedLeaf(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    ofRows(session, session.sharedState.cacheManager
+      .lookupCachedData(df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).get.cachedRepresentation)
+  }
+
   /** `df`'s rows as a leaf plan that reports a LocalRelation's size
     * estimate (the schema's default row size × `rows`, the caller's
     * exact row count) instead of the unknown-size default of an

@@ -17,11 +17,6 @@ object TestSpark {
     s
   }
 
-  /** Shared recursive temp-dir delete — the suite had grown six
-    * private near-copies (each needing to remember the null-check on
-    * listFiles for a dir deleted underneath it). */
-  def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) { val cs = f.listFiles(); if (cs != null) cs.foreach(rmTree) }
-    f.delete()
-  }
+  /** Recursive temp-dir delete: the main source's one helper. */
+  def rmTree(f: java.io.File): Unit = FileTree.delete(f)
 }
