@@ -42,14 +42,25 @@ object Artifacts {
       SqlShims.cachedLeaf(df)
     }
 
-  /** A staged replay input: a new directory under [[scratchRoot]] that
-    * `write` fills, deleted when the JVM exits. Returns its path. */
+  /** A staged replay input: a new directory under [[scratchRoot]]
+    * holding `batches` as one parquet file each, deleted when the JVM
+    * exits. Returns its path. A file source replays files in mtime
+    * order, so each file's mtime is stamped 2 s past the one before
+    * (coarser than any filesystem's mtime granule): the replay order
+    * is the order of `batches`. */
   def stagedDir(spark: SparkSession, scope: String, prefix: String)
-               (write: java.io.File => Unit): String =
+               (batches: => Seq[DataFrame]): String =
     value(spark, scope, prefix) {
       val dir = scratchDir(prefix)
       Runtime.getRuntime.addShutdownHook(new Thread(() => FileTree.delete(dir)))
-      write(dir)
+      def files = dir.listFiles().filter(_.getName.endsWith(".parquet")).toSet
+      batches.foldLeft(Long.MinValue) { (prevMtime, batch) =>
+        val before = files
+        batch.coalesce(1).write.mode("append").parquet(dir.getAbsolutePath)
+        val file = (files -- before).head
+        if (prevMtime != Long.MinValue) file.setLastModified(prevMtime + 2000L)
+        file.lastModified
+      }
       dir.getAbsolutePath
     }
 
@@ -63,7 +74,7 @@ object Artifacts {
     * whose default temp filesystem is slow (or to aim a production
     * deployment's checkpoints at durable shared storage).
     */
-  private lazy val scratchRoot: java.nio.file.Path =
+  private[graft] lazy val scratchRoot: java.nio.file.Path =
     java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_STREAM_TMP",
       System.getProperty("java.io.tmpdir")))
 

@@ -285,8 +285,7 @@ object DumpPlans {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       Seq("p_orders", "p_lineitem").foreach { t =>
         spark.sql(s"DROP TABLE IF EXISTS $t")
-        def rm(f: java.io.File): Unit = { if (f.isDirectory) f.listFiles.foreach(rm); f.delete() }
-        rm(new java.io.File(s"spark-warehouse/$t"))
+        FileTree.delete(new java.io.File(s"spark-warehouse/$t"))
       }
       BucketedTables.writeBucketed(Tables.orders(spark, sfDir), "p_orders", "o_orderkey", 8, Some("o_orderkey"))
       BucketedTables.writeBucketed(Tables.lineitem(spark, sfDir), "p_lineitem", "l_orderkey", 8, Some("l_orderkey"))

@@ -6,9 +6,10 @@ import graft.index.{BruteForceKnn, IvfKnn, RandomHyperplaneLsh}
 import graft.multimodal.Multimodal
 import graft.plans.LshProbeRewrite
 import graft.state.Engine
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Every operator from SURVEY §2 plus the training-data-pipeline
   * extensions, each as a deterministic, oracle-checkable query over the
@@ -1607,8 +1608,8 @@ object Queries {
       // no events → no windows; also no sentinel to key the watermark off
       return ev.limit(0).select(lit("").as("wstart"), col("event_type"),
         lit(0L).as("n_events"), lit(0.0).as("sum_value"))
-    runReplayToSink(spark, inDir, ev.schema, "sliding",
-      graft.streaming.EventStreams.slidingCounts,
+    runReplay(spark, inDir, ev.schema)(
+      appendSink(graft.streaming.EventStreams.slidingCounts),
       sink => sink
         .where(col("event_type") =!= "sentinel")
         .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm:ss").as("wstart"),
@@ -1616,147 +1617,79 @@ object Queries {
         .orderBy(col("wstart"), col("event_type")))
   }
 
-  /** Shared runner of the append-mode streaming gates: a bounded
-    * replay input streams through `transform` into a fresh per-run
-    * checkpoint + parquet sink; the sink is read back, `present`ed,
-    * and the (small — every gate presents an aggregate) result is
-    * pinned on the driver so the run tree can be deleted. The
-    * checkpoint and sink stay PER-CALL on purpose: the gate must
-    * exercise a fresh streaming run every time, only the input
-    * staging is once-per-session.
+  /** Runs one bounded replay of the staged files under `inDir` and
+    * returns its result, pinned on the driver.
+    *
+    * `sink` turns the replay stream into a writer that leaves its
+    * output as parquet under the directory it is given: a file sink
+    * ([[appendSink]]) or a `foreachBatch` body ([[batchSink]]). The
+    * runner gives it a new checkpoint, runs it with
+    * `Trigger.AvailableNow` to the end of the staged files
+    * (`filesPerTrigger` files per micro-batch; 0 puts them all in
+    * one), reads the output back and collects `present` of it.
+    *
+    * While the stream runs, its shuffles and state stores use
+    * [[replayShufflePartitions]] partitions, and no-data micro-batches
+    * run iff `noDataBatches` (off only for sinks that never depend on
+    * a watermark release). Both settings are restored when the call
+    * returns or throws; no other setting is touched, so a session-set
+    * state-store provider applies to the run. The checkpoint and
+    * output are new on every call and deleted when it returns or
+    * throws; only the input is staged once per session. The settings
+    * are session-wide: two replays must not run at once on one session.
     */
-  private def runReplayToSink(spark: SparkSession, inDir: String,
-      schema: org.apache.spark.sql.types.StructType, tag: String,
-      transform: DataFrame => DataFrame,
-      present: DataFrame => DataFrame,
-      filesPerTrigger: Int = 1,
-      noDataBatches: Boolean = true): DataFrame = {
-    val base = Artifacts.scratchDir(s"graft_${tag}_stream_run_")
-    val outDir = s"${base.getAbsolutePath}/out"; val ckDir = s"${base.getAbsolutePath}/ck"
-    // filesPerTrigger <= 0 → no cap: the whole replay arrives in ONE
-    // micro-batch — fine for stateless/no-watermark transforms; the
-    // watermarked gates keep 1 so each staged FILE is a micro-batch
-    // and the sentinel-advanced watermark releases state across a real
-    // batch boundary (the scheduled no-data batch).
-    // noDataBatches = false suppresses that release batch — valid ONLY
-    // for transforms whose sink never depends on watermark release
-    // (the eager-emitting INNER stream-stream join: eviction still
-    // runs inside data batch 2 against batch 1's watermark, but no row
-    // is ever EMITTED by watermark passage, so the release batch is
-    // pure machinery — ~0.9 s of it, measured by StreamCostProbe).
-    val reader0 = spark.readStream.schema(schema)
-    val reader = if (filesPerTrigger > 0)
-      reader0.option("maxFilesPerTrigger", filesPerTrigger) else reader0
-    val stream = reader.parquet(inDir)
-    // The gates' state is tiny (hundreds of users / window keys), so a
-    // 32-partition state store is pure per-task overhead: each
-    // micro-batch pays 32 state-store open/commit cycles to move a few
-    // hundred rows. Run the stream's shuffles at streamShufflePartitions
-    // (default 2 — see its Scaladoc for the 8-vs-2-vs-1 measurement;
-    // the checkpoint is per-call, so the choice never conflicts with a
-    // prior run's state layout) and restore the session's setting
-    // after. At production scale this knob is sized to state volume,
-    // not set globally. NOT REENTRANT: the set/restore mutates
-    // session-global conf, which is safe for the sequential gate
-    // runner (and Verify/Bench, which run queries one at a time) but
-    // would race if gates ever executed concurrently on a shared
-    // session — scope a dedicated spark.newSession() per query before
-    // introducing that.
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions)
-    // State-store provider knob (SPARK_GRAFT_STREAM_STATESTORE=rocksdb):
-    // RocksDB is the right answer when state exceeds executor memory —
-    // the 100 TB sizing rule — but for these gates' hundreds-of-keys
-    // state the measured result is the opposite (native column-family
-    // setup per store instance per micro-batch dominates; see README's
-    // streaming-cost note), so the in-memory default stays.
-    val savedProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    if (sys.env.get("SPARK_GRAFT_STREAM_STATESTORE").contains("rocksdb"))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val savedNoData = spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noDataBatches.toString)
-    // Sink knob (SPARK_GRAFT_STREAM_SINK=memory), kept as a MEASURED
-    // NEGATIVE result like the RocksDB/tmpfs knobs above: the memory
-    // sink funnels every row through the driver and was SLOWER than the
-    // parquet sink + read-back at sf0.1 (enrich 0.9 → 1.7 s,
-    // attribution 3.1 → 3.6 s) — the per-gate floor is micro-batch
-    // machinery, not sink I/O, so the production parquet sink stays the
-    // benched path.
-    val useMemorySink = sys.env.get("SPARK_GRAFT_STREAM_SINK").contains("memory")
-    val out = try {
-      val sinkName = s"graft_${tag}_sink"
-      val w0 = transform(stream)
-        .writeStream.outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      val w =
-        if (useMemorySink) w0.format("memory").queryName(sinkName)
-          .option("checkpointLocation", ckDir)
-        else w0.format("parquet")
-          .option("path", outDir).option("checkpointLocation", ckDir)
-      val q = w.start()
-      try { q.awaitTermination() } finally q.stop()
-      val sunk = if (useMemorySink) spark.table(sinkName)
-        else spark.read.parquet(outDir)
-      val result = present(sunk)
-      val rows = result.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+  private[graft] def runReplay(spark: SparkSession, inDir: String,
+      schema: org.apache.spark.sql.types.StructType,
+      filesPerTrigger: Int = 1, noDataBatches: Boolean = true)(
+      sink: (DataFrame, String) => DataStreamWriter[Row],
+      present: DataFrame => DataFrame): DataFrame = {
+    val run = Artifacts.scratchDir("graft_replay_run_")
+    val out = s"${run.getAbsolutePath}/out"
+    val settings = Seq(
+      "spark.sql.shuffle.partitions" -> replayShufflePartitions.toString,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString)
+    val saved = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
+      val reader = spark.readStream.schema(schema)
+      val stream = (if (filesPerTrigger > 0) reader.option("maxFilesPerTrigger", filesPerTrigger)
+                    else reader).parquet(inDir)
+      val q = sink(stream, out)
+        .option("checkpointLocation", s"${run.getAbsolutePath}/ck")
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination() finally q.stop()
+      val result = present(spark.read.parquet(out))
+      spark.createDataFrame(java.util.Arrays.asList(result.collect(): _*), result.schema)
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-      savedProvider match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
       }
-      savedNoData match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None => spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-      }
-      FileTree.delete(base) // also on failure — no orphaned checkpoint/sink trees
+      FileTree.delete(run)
     }
-    out
   }
 
-  /** Shared runner of the foreachBatch streaming gates (the ingest
-    * dedup + the two kNN serving streams): a bounded file-source
-    * replay (one staged file per micro-batch) drives `onBatch`, which
-    * writes whatever the gate sinks to `outDir`; the sink is read
-    * back, `present`ed, and pinned on the driver so the per-run
-    * checkpoint/sink tree can be deleted. Same contract as
-    * [[runReplayToSink]] (fresh streaming run per call, staging
-    * once-per-session, stream shuffles at [[streamShufflePartitions]],
-    * NOT REENTRANT for the same session-global-conf reason) — this one
-    * exists because foreachBatch gates own their sink writes, so the
-    * append-mode runner's writeStream-to-parquet shape doesn't fit.
-    * Factored in r14: three gates hand-rolled this scaffold, and the
-    * boundary-semantics bugs the streamed gates guard against live
-    * exactly in this machinery.
-    */
-  private def runReplayForeachBatch(spark: SparkSession, inDir: String,
-      schema: org.apache.spark.sql.types.StructType, tag: String,
-      onBatch: (DataFrame, String) => Unit,
-      present: DataFrame => DataFrame,
-      cleanup: () => Unit = () => (),
-      filesPerTrigger: Int = 1): DataFrame = {
-    val runDir = Artifacts.scratchDir(s"graft_${tag}_run_")
-    val outDir = s"${runDir.getAbsolutePath}/out"; val ckDir = s"${runDir.getAbsolutePath}/ck"
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions)
-    try {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", filesPerTrigger).parquet(inDir)
-        .writeStream.option("checkpointLocation", ckDir)
-        .foreachBatch((batch: DataFrame, _: Long) => onBatch(batch, outDir))
-        .start()
-      try { q.processAllAvailable() } finally q.stop()
-      val result = present(spark.read.parquet(outDir))
-      val rows = result.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
-    } finally {
-      cleanup()
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-      FileTree.delete(runDir) // also on failure — no orphaned checkpoint/sink trees
-    }
-  }
+  /** Shuffle and state-store partitions of a replay. The gates' state
+    * is hundreds to thousands of keys, so each partition past a few
+    * only adds per-micro-batch open/commit and scheduling cost: 8 → 2
+    * cut the stream-stream joins (four state stores per partition)
+    * ~28% warm (4.6 → 3.3 s outer, 4.1 → 3.0 s inner), and 1 lost the
+    * remaining parallelism and was slower. A production stream sizes
+    * this to its state volume. */
+  private val replayShufflePartitions = 2
+
+  /** A replay sink that appends `transform` of the stream to a parquet
+    * file sink. */
+  private def appendSink(transform: DataFrame => DataFrame)
+                        (stream: DataFrame, out: String): DataStreamWriter[Row] =
+    transform(stream).writeStream.outputMode("append").format("parquet").option("path", out)
+
+  /** A replay sink that hands each micro-batch to `body`, which writes
+    * its own part of the output. */
+  private def batchSink(body: (DataFrame, String) => Unit)
+                       (stream: DataFrame, out: String): DataStreamWriter[Row] =
+    stream.writeStream.foreachBatch((batch: DataFrame, _: Long) => body(batch, out))
 
   /** The shared replay INPUT of the single-phase streaming gates
     * (events copy + the watermark-release sentinel, ONE parquet file →
@@ -1786,14 +1719,13 @@ object Queries {
     * StreamJoinSpec, which control exactly what crosses each boundary.
     */
   private[graft] def stagedEventsReplayDir(spark: SparkSession, sfDir: String): String =
-    Artifacts.stagedDir(spark, sfDir, "graft_stream_in_") { dir =>
+    Artifacts.stagedDir(spark, sfDir, "graft_stream_in_") {
       val ev = Tables.events(spark, sfDir)
       // ONE file = one data micro-batch, sentinel row included: the
       // watermark is computed from the batch max at batch end, so the
       // append-mode release still happens across a batch boundary (in
       // the scheduled no-data batch) — see the Scaladoc above.
-      ev.unionByName(sentinelRow(ev, maxTsMillis(ev))).coalesce(1)
-        .write.mode("overwrite").parquet(dir.getAbsolutePath)
+      Seq(ev.unionByName(sentinelRow(ev, maxTsMillis(ev))))
     }
 
   /** Max event time as epoch millis, robust to the driver-side type the
@@ -1844,44 +1776,18 @@ object Queries {
     * still be needed by a half-2 purchase (1 h join interval).
     */
   private[graft] def stagedEventsTwoPhaseReplayDir(spark: SparkSession, sfDir: String): String =
-    Artifacts.stagedDir(spark, sfDir, "graft_stream_in2_") { dir =>
-      val inDir = dir.getAbsolutePath
+    Artifacts.stagedDir(spark, sfDir, "graft_stream_in2_") {
       val ev = Tables.events(spark, sfDir)
       val maxMs = maxTsMillis(ev)
       val minMs = tsMillis(ev.agg(min(col("ts"))).head().get(0), "min")
       val midMs = minMs + (maxMs - minMs) / 2
-      def parts(): Array[java.io.File] =
-        dir.listFiles().filter(f => f.isFile && f.getName.endsWith(".parquet"))
       // unix_millis keeps sub-second precision — a cast-to-long floors
-      // to whole seconds and would leak boundary rows into both halves
-      ev.where(unix_millis(col("ts")) < midMs).coalesce(1)
-        .write.mode("overwrite").parquet(inDir)
-      val before = parts().map(_.getName).toSet
-      ev.where(unix_millis(col("ts")) >= midMs)
-        .unionByName(sentinelRow(ev, maxMs)).coalesce(1)
-        .write.mode("append").parquet(inDir)
-      // FileStreamSource replays files in modification-time order; the
-      // second half (with the sentinel) must come LAST or its rows are
-      // dropped as late data. Don't rely on the two writes landing in
-      // distinct mtime granules — stamp the second file explicitly.
-      val dataMtime = parts().filter(f => before(f.getName)).map(_.lastModified)
-        .foldLeft(0L)(math.max)
-      parts().filterNot(f => before(f.getName))
-        .foreach(f => f.setLastModified(dataMtime + 2000L))
+      // to whole seconds and would leak boundary rows into both halves.
+      // The second half (with the sentinel) must replay LAST or its
+      // rows are dropped as late data.
+      Seq(ev.where(unix_millis(col("ts")) < midMs),
+        ev.where(unix_millis(col("ts")) >= midMs).unionByName(sentinelRow(ev, maxMs)))
     }
-
-  /** Shuffle/state partition count for the streaming gates' runs. The
-    * gates' state is hundreds of keys, so every state-store instance
-    * beyond a handful is pure per-micro-batch overhead (open/commit
-    * cycles + task scheduling that move no rows). Measured on the
-    * stream-stream joins (which run FOUR state stores per partition):
-    * 8 → 2 partitions cut warm wall time ~28% (4.6 → 3.3 s outer,
-    * 4.1 → 3.0 s inner); 1 partition loses the remaining parallelism
-    * and regresses. At production scale this is sized to state
-    * volume — the env override IS that knob.
-    */
-  private lazy val streamShufflePartitions: String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "2")
 
   /** Streaming exact dedup through the correctness gate
     * ([[graft.streaming.EventStreams.dedupedEvents]]): replay the
@@ -1906,16 +1812,15 @@ object Queries {
     // No-data batches off: dropDuplicatesWithinWatermark emits each
     // first-seen row in the batch it ARRIVES — the watermark only
     // evicts state, never releases rows — so the release batch can
-    // never contribute to the sink (see runReplayToSink). Eviction
+    // never contribute to the sink (see runReplay). Eviction
     // itself is still exercised: batch 2's redelivered rows are
     // filtered against batch-1 state under batch-1's watermark.
-    runReplayToSink(spark, stagedDedupReplayDir(spark, sfDir), ev.schema, "dedup",
-      graft.streaming.EventStreams.dedupedEvents,
+    runReplay(spark, stagedDedupReplayDir(spark, sfDir), ev.schema, noDataBatches = false)(
+      appendSink(graft.streaming.EventStreams.dedupedEvents),
       sink => sink
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
-        .orderBy(col("event_type")),
-      noDataBatches = false)
+        .orderBy(col("event_type")))
   }
 
   /** Stream-static enrichment through the gate
@@ -1935,18 +1840,17 @@ object Queries {
     if (ev.isEmpty)
       return ev.limit(0).select(lit("").as("segment"),
         lit(0L).as("n_events"), lit(0.0).as("sum_value"))
-    runReplayToSink(spark, stagedEventsReplayDir(spark, sfDir), ev.schema, "enrich",
-      stream => graft.streaming.EventStreams
-        .enrichedWithSegment(stream, Tables.customer(spark, sfDir)),
+    // stateless stream-static join, no watermark: per-batch results
+    // are independent, so one big micro-batch is semantically
+    // identical to N small ones — skip the per-file trigger cycles
+    runReplay(spark, stagedEventsReplayDir(spark, sfDir), ev.schema, filesPerTrigger = 0)(
+      appendSink(stream => graft.streaming.EventStreams
+        .enrichedWithSegment(stream, Tables.customer(spark, sfDir))),
       sink => sink
         .where(col("event_type") =!= "sentinel")
         .groupBy(coalesce(col("c_mktsegment"), lit("UNKNOWN")).as("segment"))
         .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
-        .orderBy(col("segment")),
-      // stateless stream-static join, no watermark: per-batch results
-      // are independent, so one big micro-batch is semantically
-      // identical to N small ones — skip the per-file trigger cycles
-      filesPerTrigger = 0)
+        .orderBy(col("segment")))
   }
 
   /** Batch twin of [[eventsAttributionStream]]: interval self-join of
@@ -2014,14 +1918,13 @@ object Queries {
     // join state, and batch 2 runs eviction against batch 1's
     // watermark — real cross-batch join coverage. No-data batches off:
     // the inner join emits every match eagerly, so the release batch
-    // contributes nothing to the sink (see runReplayToSink).
-    runReplayToSink(spark, stagedEventsTwoPhaseReplayDir(spark, sfDir), ev.schema, "attr",
-      stream => {
+    // contributes nothing to the sink (see runReplay).
+    runReplay(spark, stagedEventsTwoPhaseReplayDir(spark, sfDir), ev.schema, noDataBatches = false)(
+      appendSink(stream => {
         val (clicks, purchases) = attributionSides(stream)
         graft.streaming.EventStreams.clickAttribution(clicks, purchases)
-      },
-      attributionRollup,
-      noDataBatches = false)
+      }),
+      attributionRollup)
   }
 
   /** Shared rollup for the OUTER attribution pair: every purchasing
@@ -2063,11 +1966,11 @@ object Queries {
     if (ev.isEmpty)
       return ev.limit(0).select(col("user_id"), lit(0L).as("n_rows"),
         lit(0L).as("n_matched"), lit(0L).as("n_purchases"), lit(0L).as("n_unmatched"))
-    runReplayToSink(spark, stagedEventsReplayDir(spark, sfDir), ev.schema, "attro",
-      stream => {
+    runReplay(spark, stagedEventsReplayDir(spark, sfDir), ev.schema)(
+      appendSink(stream => {
         val (clicks, purchases) = attributionSides(stream)
         graft.streaming.EventStreams.clickAttributionOuter(clicks, purchases)
-      },
+      }),
       attributionOuterRollup)
   }
 
@@ -2109,10 +2012,10 @@ object Queries {
     if (ev.isEmpty)
       return ev.limit(0).select(lit("").as("step"), lit(0L).as("n_users"))
     import spark.implicits._
-    runReplayToSink(spark, inDir, ev.schema, "funnel",
-      stream => graft.streaming.EventStreams.funnelReach(spark,
+    runReplay(spark, inDir, ev.schema)(
+      appendSink(stream => graft.streaming.EventStreams.funnelReach(spark,
         stream.select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value")).as[graft.streaming.Event]).toDF(),
+          col("event_type"), col("value")).as[graft.streaming.Event]).toDF()),
       sink => Seq(("1_view", 1), ("2_click", 2), ("3_purchase", 3))
         .map { case (name, lvl) =>
           sink.where(col("reached") >= lvl)
@@ -2149,10 +2052,10 @@ object Queries {
       return ev.limit(0).select(lit("").as("cohort_day"),
         lit(0L).as("offset_d"), lit(0L).as("n_users"))
     import spark.implicits._
-    runReplayToSink(spark, inDir, ev.schema, "retention",
-      stream => graft.streaming.EventStreams.retentionDays(spark,
+    runReplay(spark, inDir, ev.schema)(
+      appendSink(stream => graft.streaming.EventStreams.retentionDays(spark,
         stream.select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value")).as[graft.streaming.Event]).toDF(),
+          col("event_type"), col("value")).as[graft.streaming.Event]).toDF()),
       sink => sink
         .where(col("user_id") >= 0)
         .select(col("cohort_day"), explode(col("offsets")).as("offset_d"))
@@ -2167,10 +2070,10 @@ object Queries {
       return ev.limit(0).select(col("user_id"),
         lit(0L).as("n_sessions"), lit(0L).as("n_events"))
     import spark.implicits._
-    runReplayToSink(spark, stagedEventsReplayDir(spark, sfDir), ev.schema, "sess",
-      stream => graft.streaming.EventStreams.sessionize(spark,
+    runReplay(spark, stagedEventsReplayDir(spark, sfDir), ev.schema)(
+      appendSink(stream => graft.streaming.EventStreams.sessionize(spark,
         stream.select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value")).as[graft.streaming.Event]).toDF(),
+          col("event_type"), col("value")).as[graft.streaming.Event]).toDF()),
       sink => sink
         .where(col("user_id") >= 0)
         .groupBy(col("user_id"))
@@ -2200,11 +2103,11 @@ object Queries {
     // Two-phase replay: sessions spanning the event-time midpoint
     // split across micro-batches and must merge inside the session
     // state store — the machinery this gate exists to exercise.
-    runReplayToSink(spark, stagedEventsTwoPhaseReplayDir(spark, sfDir), ev.schema, "sesswin",
-      stream => stream
+    runReplay(spark, stagedEventsTwoPhaseReplayDir(spark, sfDir), ev.schema)(
+      appendSink(stream => stream
         .withWatermark("ts", "1 hour")
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-        .agg(count(lit(1)).as("n_events")),
+        .agg(count(lit(1)).as("n_events"))),
       sink => sink
         .where(col("user_id") >= 0) // the sentinel's own session never closes anyway
         .groupBy(col("user_id"))
@@ -2219,17 +2122,16 @@ object Queries {
     * replay is bounded (aggregate state = windows × types rows; an
     * unbounded production deployment adds `withWatermark` so closed
     * windows' state expires, same operator otherwise) — and
-    * foreachBatch UPSERTS each micro-batch's changed rows into a
-    * serving table keyed by (hour, event_type). Keyed last-write-wins upserts make
-    * the final table equal the batch aggregate even though values
-    * were emitted incrementally across batches — no sentinel or
-    * watermark release needed, a row is allowed to be written twice.
-    * The sink is a driver-side map standing in for the KV serving
-    * store; that is the honest shape BECAUSE the upserted table is
-    * an aggregate bounded by (windows × types), not by event volume
-    * — per-batch updated rows are similarly bounded. A lost or
-    * misattributed update leaves a stale row and flips the gate
-    * hash against [[eventsHourly]]'s oracle.
+    * foreachBatch UPSERTS each micro-batch's changed rows, tagged
+    * with the batch id, into a log keyed by (hour, event_type); the
+    * read-back keeps each key's latest row. Keyed last-write-wins
+    * upserts make the final table equal the batch aggregate even
+    * though values were emitted incrementally across batches — no
+    * sentinel or watermark release needed, a row is allowed to be
+    * written twice. Update mode emits only changed keys, so each
+    * batch's log part is bounded by (windows × types), not by event
+    * volume. A lost or misattributed update leaves a stale row and
+    * flips the gate hash against [[eventsHourly]]'s oracle.
     */
   def eventsHourlyUpsertStream(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
@@ -2240,45 +2142,25 @@ object Queries {
     // emitted in BOTH batches and must converge by last-write-wins —
     // the convergence this gate pins (a single-batch replay would make
     // the upsert trivially equal to the batch aggregate).
-    val inDir = stagedEventsTwoPhaseReplayDir(spark, sfDir)
-    val base = Artifacts.scratchDir("graft_upsert_stream_run_")
-    val ckDir = s"${base.getAbsolutePath}/ck"
-    val store = new java.util.concurrent.ConcurrentHashMap[(String, String), (Long, Double)]()
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(inDir)
-    val agg = stream
-      .groupBy(date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm:ss").as("hour"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-    // same tiny-state reasoning as runReplayToSink: hour×type keys
-    // number in the thousands, so 8 state partitions beat 32
-    val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions)
-    try {
-      val q = agg.writeStream.outputMode("update")
-        .option("checkpointLocation", ckDir)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // runs on the driver; `batch` holds only the keys whose
-          // aggregate CHANGED this micro-batch (bounded by windows×types)
-          batch.collect().foreach { r =>
-            store.put((r.getString(0), r.getString(1)), (r.getLong(2), r.getDouble(3)))
-          }
-        }
-        .start()
-      try { q.processAllAvailable() } finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", savedParts)
-      FileTree.delete(base) // also on failure — no orphaned checkpoint trees
-    }
-    import scala.jdk.CollectionConverters._
-    val rows = store.asScala.toSeq
-      .filter { case ((_, tpe), _) => tpe != "sentinel" }
-      .map { case ((hour, tpe), (n, sum)) =>
-        (hour, tpe, n, BigDecimal(sum).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble)
-      }
-    import spark.implicits._
-    rows.toDF("hour", "event_type", "n_events", "sum_value")
-      .orderBy(col("hour"), col("event_type"))
+    val latest = Window.partitionBy(col("hour"), col("event_type"))
+      .orderBy(col("batch_id").desc)
+    runReplay(spark, stagedEventsTwoPhaseReplayDir(spark, sfDir), ev.schema)(
+      (stream, out) => stream
+        .groupBy(date_format(date_trunc("hour", col("ts")), "yyyy-MM-dd HH:mm:ss").as("hour"),
+          col("event_type"))
+        .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
+        .writeStream.outputMode("update")
+        // `batch` holds only the keys whose aggregate CHANGED this
+        // micro-batch (bounded by windows×types)
+        .foreachBatch((batch: DataFrame, id: Long) =>
+          batch.withColumn("batch_id", lit(id)).write.mode("append").parquet(out)),
+      sink => sink
+        .where(col("event_type") =!= "sentinel")
+        .withColumn("rk", row_number().over(latest))
+        .where(col("rk") === 1)
+        .select(col("hour"), col("event_type"), col("n_events"),
+          round(col("sum_value"), 2).as("sum_value"))
+        .orderBy(col("hour"), col("event_type")))
   }
 
   /** The BUILT-IN session-window operator as a third, independent
@@ -2303,25 +2185,15 @@ object Queries {
       .agg(count(lit(1)).as("n_sessions"), sum(col("n")).as("n_events"))
       .orderBy(col("user_id"))
 
-  /** Replay input of [[eventsDedupStream]] (events copy + the last
-    * hour redelivered), staged once per (session, sfDir) like the
-    * sliding-window replay. The redelivery file's mtime is stamped
-    * past the data file so FileStreamSource processes it second.
+  /** Replay input of [[eventsDedupStream]] (events copy, then the
+    * last hour redelivered), staged once per (session, sfDir) like the
+    * sliding-window replay.
     */
   private[graft] def stagedDedupReplayDir(spark: SparkSession, sfDir: String): String =
-    Artifacts.stagedDir(spark, sfDir, "graft_dedup_stream_in_") { dir =>
-      val inDir = dir.getAbsolutePath
+    Artifacts.stagedDir(spark, sfDir, "graft_dedup_stream_in_") {
       val ev = Tables.events(spark, sfDir)
-      ev.coalesce(1).write.mode("overwrite").parquet(inDir)
       val maxMs = maxTsMillis(ev)
-      def parts(): Array[java.io.File] =
-        dir.listFiles().filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      val before = parts().map(_.getName).toSet
-      ev.where(col("ts") >= lit(new java.sql.Timestamp(maxMs - 3600L * 1000)))
-        .coalesce(1).write.mode("append").parquet(inDir)
-      val dataMtime = parts().filter(f => before(f.getName)).map(_.lastModified).max
-      parts().filterNot(f => before(f.getName))
-        .foreach(f => f.setLastModified(dataMtime + 2000L))
+      Seq(ev, ev.where(col("ts") >= lit(new java.sql.Timestamp(maxMs - 3600L * 1000))))
     }
 
   def eventsJsonK(spark: SparkSession, sfDir: String): DataFrame =
@@ -3234,13 +3106,10 @@ object Queries {
     * files by doc_id mod 6 ∈ {1,3,5} — deterministic, disjoint, and
     * together exactly [[dedupIncremental]]'s batch side. Immutable per
     * dataset → staged once per (session, sfDir). */
-  private def stagedIngestDocsDir(spark: SparkSession, sfDir: String): String =
-    Artifacts.stagedDir(spark, sfDir, "graft_ingest_in_") { dir =>
+  private[graft] def stagedIngestDocsDir(spark: SparkSession, sfDir: String): String =
+    Artifacts.stagedDir(spark, sfDir, "graft_ingest_in_") {
       val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-      Seq(1, 3, 5).foreach { m =>
-        docs.where(pmod(col("doc_id"), lit(6)) === m).coalesce(1)
-          .write.mode("append").parquet(dir.getAbsolutePath)
-      }
+      Seq(1, 3, 5).map(m => docs.where(pmod(col("doc_id"), lit(6)) === m))
     }
 
   /** CONTINUOUS-INGEST near-dup dedup as a stream — the production
@@ -3315,8 +3184,7 @@ object Queries {
     val bandC = Artifacts.frame(spark, sfDir, "ingest-index-bands")(b.coalesce(parts(b)))
     val inDir = stagedIngestDocsDir(spark, sfDir)
     val qSchema = docs.select(col("doc_id"), col("text")).schema
-    runReplayForeachBatch(spark, inDir, qSchema,
-      if (withinBatch) "ingest_wb" else "ingest",
+    runReplay(spark, inDir, qSchema)(
       // ONE driver action per micro-batch (r19, guide §1.2/§5): the
       // ledger attributed this gate's floor to per-batch PLANNING — 4
       // actions/batch (isEmpty + the broadcast-bound counts inside the
@@ -3327,7 +3195,7 @@ object Queries {
       // replay batches are sixths of the documents table) so the probe
       // skips its per-batch count + scratch-cache churn. Plan choice
       // only; rows are oracle-pinned unchanged.
-      onBatch = (batch, outDir) => {
+      batchSink { (batch, outDir) =>
         val cross = Dedup
           .incrementalNearDupsAgainst(shC, bandC, batch, "doc_id", "text", 0.5,
             smallBatch = Some(true))
@@ -3345,7 +3213,7 @@ object Queries {
           .agg(count(lit(1)).as("n_matches"), round(max(col("jaccard")), 4).as("best_j"))
           .write.mode("append").parquet(outDir)
       },
-      present = _.orderBy(col("batch_id")))
+      _.orderBy(col("batch_id")))
   }
 
   def dedupSimhash(spark: SparkSession, sfDir: String): DataFrame =
@@ -4315,13 +4183,10 @@ object Queries {
     * serving loop (search_service.py:83-156). Immutable per dataset →
     * staged once per (session, sfDir), like the events replay.
     */
-  private def stagedKnnQueryDir(spark: SparkSession, sfDir: String): String =
-    Artifacts.stagedDir(spark, sfDir, "graft_knnserve_in_") { dir =>
+  private[graft] def stagedKnnQueryDir(spark: SparkSession, sfDir: String): String =
+    Artifacts.stagedDir(spark, sfDir, "graft_knnserve_in_") {
       val q = servingRequests(spark, sfDir)
-      (0L until 5L).foreach { i =>
-        q.where(col("vec_id") === i).coalesce(1)
-          .write.mode("append").parquet(dir.getAbsolutePath)
-      }
+      (0L until 5L).map(i => q.where(col("vec_id") === i))
     }
 
   /** Vector search AS A SERVING STREAM: query vectors arrive on a
@@ -4340,29 +4205,23 @@ object Queries {
     * micro-batches flips the hash.
     */
   def knnServeStream(spark: SparkSession, sfDir: String): DataFrame = {
-    // The served corpus is RESIDENT for the query's duration — the
-    // steady-state of a serving engine (the reference holds its whole
-    // library in process memory; the 100 TB analog is a cached/stored
-    // index, not a cold scan per request). Without the persist, every
-    // one of the 5 request micro-batches re-decodes the embeddings
-    // parquet from scratch. Unpersisted in the finally: residency is
-    // scoped to the serving run, not leaked into the session.
-    val emb = Tables.embeddings(spark, sfDir).where(col("embedding").isNotNull).persist()
+    // The served corpus is resident: Tables.embeddings is a session
+    // frame, so every request micro-batch scans its cached relation.
+    val emb = Tables.embeddings(spark, sfDir).where(col("embedding").isNotNull)
     val inDir = stagedKnnQueryDir(spark, sfDir)
     val qSchema = emb.select(col("vec_id"), col("embedding")).schema
-    runReplayForeachBatch(spark, inDir, qSchema, "knnserve",
+    runReplay(spark, inDir, qSchema)(
       // no isEmpty pre-probe (r19, guide §1.2): it was a full extra
       // driver action (plan + job) per micro-batch; an empty request
       // batch just writes an empty top-k — same sink contents
-      onBatch = (batch, outDir) =>
+      batchSink((batch, outDir) =>
         graft.index.KnnJoin.exact(batch, emb, "vec_id", "embedding", 5)
-          .write.mode("append").parquet(outDir),
-      present = sunk => sunk
+          .write.mode("append").parquet(outDir)),
+      sunk => sunk
         // + 0.0 collapses IEEE negative zero (see embeddingPool)
         .select(col("q_id"), col("rn"), col("neighbor_id"),
           (round(col("cos"), 4) + lit(0.0)).as("score"))
-        .orderBy(col("q_id"), col("rn")),
-      cleanup = () => emb.unpersist())
+        .orderBy(col("q_id"), col("rn")))
   }
 
   /** [[knnServeStream]]'s twin THROUGH THE OPTIMIZER RULE: each request
@@ -4388,13 +4247,13 @@ object Queries {
     val inDir = stagedKnnQueryDir(spark, sfDir)
     val qSchema = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding")).schema
-    runReplayForeachBatch(spark, inDir, qSchema, "knnserve_rule",
-      onBatch = (batch, outDir) =>
+    runReplay(spark, inDir, qSchema)(
+      batchSink((batch, outDir) =>
         batch.select(col("vec_id"), col("embedding")).collect().foreach { r =>
           serveRequestThroughRule(base, r.getLong(0), r.getSeq[Float](1).toArray)
             .write.mode("append").parquet(outDir)
-        },
-      present = presentServeTopK)
+        }),
+      presentServeTopK)
   }
 
   /** One serving-stream request answered by the declared top-k over the
@@ -4448,16 +4307,15 @@ object Queries {
     val inDir = stagedKnnQueryDir(spark, sfDir)
     val qSchema = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding")).schema
-    runReplayForeachBatch(spark, inDir, qSchema, "knnserve_batched",
+    runReplay(spark, inDir, qSchema, filesPerTrigger = 2)(
       // no isEmpty pre-probe — see knnServeStream (one action/batch)
-      onBatch = (batch, outDir) =>
+      batchSink((batch, outDir) =>
         graft.index.KnnJoin.lshServeBatched(batch, base, lsh, 64, k = 5,
             numPhysicalPartitions = parts)
           .select(col("q_id"), col("neighbor_id"),
             col("cos").as("score")) // RAW score to the sink; round at presentation
-          .write.mode("append").parquet(outDir),
-      present = presentServeTopK,
-      filesPerTrigger = 2)
+          .write.mode("append").parquet(outDir)),
+      presentServeTopK)
   }
 
   /** The batched serve through the OPTIMIZER RULE (r16, README thread
@@ -4497,13 +4355,13 @@ object Queries {
     val inDir = stagedKnnQueryDir(spark, sfDir)
     val qSchema = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding")).schema
-    runReplayForeachBatch(spark, inDir, qSchema, "knnserve_ivf",
-      onBatch = (batch, outDir) =>
+    runReplay(spark, inDir, qSchema)(
+      batchSink((batch, outDir) =>
         batch.select(col("vec_id"), col("embedding")).collect().foreach { r =>
           serveRequestThroughRule(base, r.getLong(0), r.getSeq[Float](1).toArray)
             .write.mode("append").parquet(outDir)
-        },
-      present = presentServeTopK)
+        }),
+      presentServeTopK)
   }
 
   /** [[knnServeStreamBatched]] at the 1-BIT MULTI-PROBE policy (r15
@@ -4526,16 +4384,15 @@ object Queries {
     val inDir = stagedKnnQueryDir(spark, sfDir)
     val qSchema = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding")).schema
-    runReplayForeachBatch(spark, inDir, qSchema, "knnserve_batched_mp",
+    runReplay(spark, inDir, qSchema, filesPerTrigger = 2)(
       // no isEmpty pre-probe — see knnServeStream (one action/batch)
-      onBatch = (batch, outDir) =>
+      batchSink((batch, outDir) =>
         graft.index.KnnJoin.lshServeBatched(batch, base, lsh, 64, k = 5,
             numPhysicalPartitions = parts, maxHamming = 1)
           .select(col("q_id"), col("neighbor_id"),
             col("cos").as("score")) // RAW score to the sink; round at presentation
-          .write.mode("append").parquet(outDir),
-      present = presentServeTopK,
-      filesPerTrigger = 2)
+          .write.mode("append").parquet(outDir)),
+      presentServeTopK)
   }
 
   /** [[knnServeStreamIvf]]'s BATCHED form — the third serving policy
@@ -4558,15 +4415,14 @@ object Queries {
     val inDir = stagedKnnQueryDir(spark, sfDir)
     val qSchema = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding")).schema
-    runReplayForeachBatch(spark, inDir, qSchema, "knnserve_batched_ivf",
+    runReplay(spark, inDir, qSchema, filesPerTrigger = 2)(
       // no isEmpty pre-probe — see knnServeStream (one action/batch)
-      onBatch = (batch, outDir) =>
+      batchSink((batch, outDir) =>
         graft.index.KnnJoin.ivfServeBatched(batch, base, cents, nprobe = 2, k = 5)
           .select(col("q_id"), col("neighbor_id"),
             col("cos").as("score")) // RAW score to the sink; round at presentation
-          .write.mode("append").parquet(outDir),
-      present = presentServeTopK,
-      filesPerTrigger = 2)
+          .write.mode("append").parquet(outDir)),
+      presentServeTopK)
   }
 
   /** Sparse random projection 64→16

@@ -51,12 +51,12 @@ class ArtifactsSpec extends AnyFunSuite {
     assert((frame() eq frame()) && frames == 1)
 
     var writes = 0
-    def staged() = Artifacts.stagedDir(spark, "artifacts-spec-c", "graft_artifacts_spec_") { dir =>
+    def staged() = Artifacts.stagedDir(spark, "artifacts-spec-c", "graft_artifacts_spec_") {
       writes += 1
-      java.nio.file.Files.writeString(dir.toPath.resolve("x"), "x"): Unit
+      Seq(spark.range(3).toDF())
     }
     val dir = staged()
-    assert(staged() == dir && writes == 1 && new java.io.File(dir, "x").isFile)
+    assert(staged() == dir && writes == 1 && spark.read.parquet(dir).count() == 3)
   }
 
   test("entries of a stopped session are released") {

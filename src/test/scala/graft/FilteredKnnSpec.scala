@@ -29,16 +29,19 @@ class FilteredKnnSpec extends AnyFunSuite {
   private val qVec = Array.fill(dim)(rng.nextGaussian().toFloat)
   private val randVecs = Array.fill(3000)(Array.fill(dim)(rng.nextGaussian().toFloat))
 
-  private def minHamming(v: Array[Float]): Int = {
+  private lazy val planes = lsh.planes(dim)
+
+  /** The min over tables of the Hamming distance between the buckets
+    * of `v` and `w`, hashed with the index's own planes. */
+  private def minHamming(v: Array[Float], w: Array[Float]): Int = {
     val vn = graft.functions.VectorFunctions.l2NormalizeArr(v)
-    val qn = graft.functions.VectorFunctions.l2NormalizeArr(qVec)
-    lsh.planes(dim).map { tp =>
-      Integer.bitCount(lsh.hash(vn.toSeq, tp) ^ lsh.hash(qn.toSeq, tp))
+    val wn = graft.functions.VectorFunctions.l2NormalizeArr(w)
+    planes.map { tp =>
+      Integer.bitCount(lsh.hash(vn.toSeq, tp) ^ lsh.hash(wn.toSeq, tp))
     }.min
   }
 
-  private lazy val classes: Map[Long, Int] = // id -> min Hamming
-    randVecs.zipWithIndex.map { case (v, i) => (100L + i, minHamming(v)) }.toMap
+  private lazy val classes: Map[Long, Int] = classesFor(qVec) // id -> min Hamming
   private lazy val oneBitIds = classes.collect { case (id, h) if h == 1 => id }.toSeq.sorted
   private lazy val farIds = classes.collect { case (id, h) if h >= 2 => id }.toSeq.sorted
 
@@ -108,19 +111,12 @@ class FilteredKnnSpec extends AnyFunSuite {
     // request equals the per-request ladder's. Request ids are NOT
     // corpus ids, so self-exclusion is vacuous and the two forms must
     // agree exactly (same filter, same counts, same boundary).
-    def minHammingTo(v: Array[Float], w: Array[Float]): Int = {
-      val vn = graft.functions.VectorFunctions.l2NormalizeArr(v)
-      val wn = graft.functions.VectorFunctions.l2NormalizeArr(w)
-      lsh.planes(dim).map { tp =>
-        Integer.bitCount(lsh.hash(vn.toSeq, tp) ^ lsh.hash(wn.toSeq, tp))
-      }.min
-    }
     // R1: the first corpus random vector that is FAR from the qVec copy
     // block (so R0's copies can't pollute its counts), short of k exact
     // copies, but with a full ball — all three conditions verified by
     // hashing, never assumed
     val r1Vec = randVecs.find { v =>
-      minHammingTo(v, qVec) >= 2 && {
+      minHamming(v, qVec) >= 2 && {
         val cls = classesFor(v)
         cls.count(_._2 == 0) < k && cls.count(_._2 == 1) >= 5
       }
@@ -133,10 +129,10 @@ class FilteredKnnSpec extends AnyFunSuite {
     }.take(6)
     val s0 = (0L until 10L) ++ r1Exact ++ r1OneBit.take(5) ++ fillers
     val r2Vec = randVecs.indices.map(randVecs(_)).find { v =>
-      minHammingTo(v, qVec) >= 2 &&
+      minHamming(v, qVec) >= 2 &&
         s0.count { id =>
           val cv = if (id < 100) qVec else randVecs((id - 100).toInt)
-          minHammingTo(cv, v) <= 1
+          minHamming(cv, v) <= 1
         } < k
     }.get
     val filterIds = s0
@@ -170,16 +166,8 @@ class FilteredKnnSpec extends AnyFunSuite {
     }
   }
 
-  private def classesFor(w: Array[Float]): Map[Long, Int] = {
-    def minHammingTo(v: Array[Float]): Int = {
-      val vn = graft.functions.VectorFunctions.l2NormalizeArr(v)
-      val wn = graft.functions.VectorFunctions.l2NormalizeArr(w)
-      lsh.planes(dim).map { tp =>
-        Integer.bitCount(lsh.hash(vn.toSeq, tp) ^ lsh.hash(wn.toSeq, tp))
-      }.min
-    }
-    randVecs.zipWithIndex.map { case (v, i) => (100L + i, minHammingTo(v)) }.toMap
-  }
+  private def classesFor(w: Array[Float]): Map[Long, Int] =
+    randVecs.zipWithIndex.map { case (v, i) => (100L + i, minHamming(v, w)) }.toMap
 
   test("registration-level guaranteeK: a PLAIN filtered top-k escalates through the rule at every rung") {
     // r16 (r15 verdict #1): the caller writes ONLY

@@ -36,4 +36,15 @@ class MainsSpec extends AnyFunSuite {
     }
     assert(builders == Seq("LocalSpark.scala"))
   }
+
+  test("main source reads exactly five environment variables, each by a literal name") {
+    val texts = sources.map(_._2)
+    val named = """sys\.env(?:\.\w+)?\(\s*"(\w+)"""".r
+    val names = texts.flatMap(t => named.findAllMatchIn(t).map(_.group(1)))
+    assert(texts.map(t => """sys\.env\b""".r.findAllIn(t).size).sum == names.size,
+      "a sys.env read without a literal name")
+    assert(!texts.exists(_.contains("System.getenv")))
+    assert(names.toSet == Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_BUDGET",
+      "SPARK_GRAFT_BENCH_OUT", "SPARK_GRAFT_STREAM_TMP"))
+  }
 }

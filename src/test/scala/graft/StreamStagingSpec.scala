@@ -1,15 +1,16 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the replay-input layouts every streaming gate reads
-  * ([[Queries.stagedEventsReplayDir]] /
-  * [[Queries.stagedEventsTwoPhaseReplayDir]]): the round-12 batch
-  * restructure made these load-bearing — a regression here (sentinel
+/** Pins the replay-input layouts every streaming gate reads (the five
+  * `Queries.staged*Dir` inputs) and the session settings the replay
+  * runner ([[Queries.runReplay]]) scopes: a regression here (sentinel
   * in the wrong file, a boundary row in both halves, mtime ordering
-  * lost) silently changes what the gates exercise or drops rows as
-  * late data, while the oracle hashes may even keep passing.
+  * lost, a setting leaked into the session) silently changes what the
+  * gates exercise or drops rows as late data, while the oracle hashes
+  * may even keep passing.
   */
 class StreamStagingSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
@@ -79,5 +80,75 @@ class StreamStagingSpec extends AnyFunSuite {
       .agg(min(unix_millis(col("ts")))).head().getLong(0)
     assert(minSecond >= maxFirst - 3600L * 1000,
       "a second-half row would be dropped as late data")
+  }
+
+  test("every staged replay input is one file per batch, replayed in write order") {
+    val ev = Tables.events(spark, sfDir)
+    val staged = Seq(
+      Queries.stagedEventsReplayDir(spark, sfDir) -> 1,
+      Queries.stagedEventsTwoPhaseReplayDir(spark, sfDir) -> 2,
+      Queries.stagedDedupReplayDir(spark, sfDir) -> 2,
+      Queries.stagedIngestDocsDir(spark, sfDir) -> 3,
+      Queries.stagedKnnQueryDir(spark, sfDir) -> 5)
+    val byMtime = staged.map { case (dir, batches) =>
+      val files = parquetFiles(dir).sortBy(_.lastModified)
+      assert(files.length === batches, dir)
+      assert(files.map(_.lastModified).sliding(2).forall(p => p.length < 2 || p(0) < p(1)),
+        s"$dir: equal mtimes leave the replay order undefined")
+      files.map(f => spark.read.parquet(f.getAbsolutePath))
+    }
+    // the batches replay in the order they were written
+    val Seq(_, _, dedup, ingest, knn) = byMtime
+    assert(dedup(0).count() === ev.count(), "the full copy replays first")
+    val maxMs = ev.agg(max(unix_millis(col("ts")))).head().getLong(0)
+    assert(dedup(1).where(unix_millis(col("ts")) < maxMs - 3600L * 1000).count() === 0,
+      "the redelivered last hour replays second")
+    ingest.zip(Seq(1, 3, 5)).foreach { case (f, m) =>
+      assert(f.where(pmod(col("doc_id"), lit(6)) =!= m).count() === 0)
+    }
+    assert(knn.map(_.select(col("vec_id")).collect().map(_.getLong(0)).toSeq) ===
+      (0L until 5L).map(Seq(_)))
+  }
+
+  test("the replay runner scopes its settings and run tree to the call, also when a batch throws") {
+    val scoped = Seq("spark.sql.shuffle.partitions", "spark.sql.streaming.noDataMicroBatches.enabled")
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    def settings = scoped.map(spark.conf.getOption)
+    def runTrees = Option(Artifacts.scratchRoot.toFile.listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.startsWith("graft_replay_run_")).toSet
+    val inDir = Queries.stagedKnnQueryDir(spark, sfDir)
+    val schema = spark.read.parquet(inDir).schema
+    val before = settings
+    val treesBefore = runTrees
+    val savedProvider = spark.conf.getOption(provider)
+    spark.conf.set(provider, hdfs)
+    try {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Option[String]]]()
+      val ok = Queries.runReplay(spark, inDir, schema, noDataBatches = false)(
+        (stream, out) => stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+          seen.add(scoped.map(batch.sparkSession.conf.getOption))
+          batch.write.mode("append").parquet(out)
+        },
+        identity)
+      assert(ok.count() === 5)
+      assert(seen.size === 5)
+      assert(seen.iterator().next() === Seq(Some("2"), Some("false")))
+      val e = intercept[Exception] {
+        Queries.runReplay(spark, inDir, schema)(
+          (stream, _) => stream.writeStream.foreachBatch { (_: DataFrame, _: Long) =>
+            throw new IllegalStateException("batch body failed")
+          },
+          identity)
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage.contains("batch body failed")), e.toString)
+      assert(settings === before)
+      assert(spark.conf.get(provider) === hdfs, "the runner must leave a session-set provider alone")
+      assert(runTrees === treesBefore, "a run tree outlived its call")
+    } finally savedProvider match {
+      case Some(v) => spark.conf.set(provider, v)
+      case None => spark.conf.unset(provider)
+    }
   }
 }
