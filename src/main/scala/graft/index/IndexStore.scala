@@ -21,17 +21,29 @@ import org.apache.spark.sql.functions._
   * staleness semantics: mutations write a new version, readers pin
   * theirs.
   *
-  * Two more load-bearing knobs:
-  *  - physical partition key is `bucket % numPhysicalPartitions`
-  *    (default 256), not the raw 2^numPlanes bucket — a 4096-way
-  *    partitionBy explodes file counts (measured 30×+ slower writes);
-  *    the exact `bucket` column prunes row groups inside the coarse
-  *    partition (rows are sorted by it within partitions);
+  * Three more load-bearing knobs:
+  *  - physical partition key is `bucket % numPhysicalPartitions`, not
+  *    the raw 2^numPlanes bucket — a 4096-way partitionBy explodes file
+  *    counts (measured 30×+ slower writes). The constructor's 256 is the
+  *    cluster-scale count; the gate layouts and the at-rest bridge pass
+  *    [[LshIndexStore.adaptivePartitions]] instead, which at gate and
+  *    library sizes is one partition per table;
   *  - `repartition(partition key)` before the write so each partition
   *    directory is one task's single file, not tasks × partitions
-  *    slivers.
+  *    slivers;
+  *  - rows are sorted by `bucket` inside each file, and each file is
+  *    written as row groups of about [[LshIndexStore.RowGroupBytes]],
+  *    so a pushed `bucket IN (...)` filter skips the row groups whose
+  *    min/max miss the probed buckets. Parquet's 128 MiB default would
+  *    make a table's whole file one row group, so every probe would read
+  *    all of it (an 8,000-chunk library: all 64,000 layout rows).
   */
 object LshIndexStore {
+
+  /** Parquet row-group size of a layout file: small enough that a
+    * table's file holds tens of row groups at 8,000 rows, so the probe's
+    * pushed `bucket` filter prunes inside it. */
+  private val RowGroupBytes: Int = 128 << 10
 
   /** SCALE-ADAPTIVE physical partition count (r18 optimization round,
     * guide §2/§6): the fixed 256-way default is a constant tuned for
@@ -104,6 +116,7 @@ final case class LshIndexStore(lsh: RandomHyperplaneLsh, dim: Int,
       .repartition(col("table"), col("bucket_part"))
       .sortWithinPartitions(col("table"), col("bucket_part"), col("bucket"))
       .write.mode(mode)
+      .option("parquet.block.size", LshIndexStore.RowGroupBytes.toLong)
       .partitionBy("table", "bucket_part")
       .parquet(path)
   }
@@ -132,12 +145,7 @@ final case class LshIndexStore(lsh: RandomHyperplaneLsh, dim: Int,
     */
   def search(spark: SparkSession, path: String, embCol: String, idCol: String,
              query: Array[Float], k: Int): DataFrame = {
-    val qNorm = {
-      val n = math.sqrt(query.map(x => x.toDouble * x.toDouble).sum)
-      if (n == 0.0) query else query.map(x => (x / n).toFloat)
-    }
-    val ps = lsh.planes(dim)
-    val qBuckets = ps.map(tp => lsh.hash(qNorm.toSeq, tp))
+    val qBuckets = lsh.queryBuckets(query, dim)
     val pruneOr = qBuckets.zipWithIndex.map { case (qb, t) =>
       col("table") === t && col("bucket_part") === qb % numPhysicalPartitions
     }.reduce(_ || _)
@@ -185,23 +193,15 @@ final case class LshIndexStore(lsh: RandomHyperplaneLsh, dim: Int,
   def searchFilteredAdaptive(layout: DataFrame, embCol: String, idCol: String,
                              userFilter: Column, query: Array[Float],
                              k: Int): DataFrame = {
-    val qNorm = {
-      val n = math.sqrt(query.map(x => x.toDouble * x.toDouble).sum)
-      if (n == 0.0) query else query.map(x => (x / n).toFloat)
-    }
-    val qBuckets = lsh.planes(dim).map(tp => lsh.hash(qNorm.toSeq, tp))
-    def ball(b: Int, maxHamming: Int): Seq[Int] =
-      if (maxHamming <= 0) Seq(b)
-      else b +: (0 until lsh.numPlanes).map(p => b ^ (1 << p))
+    val qBuckets = lsh.queryBuckets(query, dim)
     def candidatesAt(maxHamming: Int): DataFrame = {
-      val pruneOr = qBuckets.zipWithIndex.map { case (qb, t) =>
+      val sets = lsh.probeSets(qBuckets, maxHamming).zipWithIndex
+      val pruneOr = sets.map { case (set, t) =>
         col("table") === t && col("bucket_part").isin(
-          ball(qb, maxHamming).map(b => math.floorMod(b, numPhysicalPartitions))
-            .distinct.map(Int.box): _*)
+          set.map(b => math.floorMod(b, numPhysicalPartitions)).distinct.map(Int.box): _*)
       }.reduce(_ || _)
-      val exactOr = qBuckets.zipWithIndex.map { case (qb, t) =>
-        col("table") === t && col("bucket").isin(
-          ball(qb, maxHamming).distinct.map(Int.box): _*)
+      val exactOr = sets.map { case (set, t) =>
+        col("table") === t && col("bucket").isin(set.distinct.map(Int.box): _*)
       }.reduce(_ || _)
       layout.where(pruneOr && exactOr && userFilter)
         .drop("table", "bucket", "bucket_part")

@@ -1,5 +1,6 @@
 package graft.index
 
+import graft.expressions.LshBucketProbe
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -24,12 +25,12 @@ import org.apache.spark.sql.functions._
   *    <= 10,000 rows, rerun brute force and report
   *    `index_used = "brute"` (search_service.py:127-131).
   *
-  * Scale shape: the candidate probe is a conjunction-free OR filter
-  * over precomputed per-table bucket columns — a filtered scan, no
-  * shuffle, no explode (row count never multiplies by T). At 100 TB the
-  * bucketed table would be written partitioned by (table-0 bucket) so
-  * the probe prunes files; the rerank is TakeOrderedAndProject over
-  * C << N candidates.
+  * Scale shape: the candidate probe is one predicate over the
+  * precomputed per-table bucket array ([[candidateFilter]]) — a
+  * filtered scan, no shuffle, no explode (row count never multiplies
+  * by T). At 100 TB the bucketed table would be written partitioned
+  * by (table-0 bucket) so the probe prunes files; the rerank is
+  * TakeOrderedAndProject over C << N candidates.
   *
   * We deliberately do NOT reproduce Python's Mersenne-Twister Gaussian
   * stream; we keep our own seeded stream (java.util.Random) and assert
@@ -91,31 +92,22 @@ final case class RandomHyperplaneLsh(
   }
 
   /** Candidate filter: any table's bucket matches the query's bucket in
-    * that table — the set-union across tables of lsh.py:80-83, expressed
-    * as an OR predicate (each row appears at most once; no dedup
-    * needed).
+    * that table — the set-union across tables of lsh.py:80-83, one
+    * [[graft.expressions.LshBucketProbe]] over the `buckets` column
+    * (each row appears at most once; no dedup needed). The buckets are
+    * the predicate's data, so every query runs the same generated code.
     */
   def candidateFilter(queryBuckets: Array[Int]): Column =
-    queryBuckets.zipWithIndex
-      .map { case (qb, t) => col("buckets").getItem(t) === lit(qb) }
-      .reduce(_ || _)
+    LshBucketProbe(col("buckets"), probeSets(queryBuckets, maxHamming = 0))
 
-  /** Multi-probe candidate filter: per table, also probe the buckets at
-    * Hamming distance <= `probeBits` bit flips from the query's bucket
-    * (flipping the sign bit of the planes the query is closest to would
-    * be the classic refinement; flipping all single bits is the simple,
-    * deterministic superset). Recall grows ~(1 + P·probes/2^?) per
-    * table at probe-count cost, with no extra tables and no rebuild —
-    * the standard trade once tables are at rest.
-    */
-  def multiProbeFilter(queryBuckets: Array[Int], probeBits: Int = 1): Column = {
-    require(probeBits <= 1, "only 0/1-bit probes supported")
-    queryBuckets.zipWithIndex.map { case (qb, t) =>
-      val candidates: Seq[Int] =
-        if (probeBits == 0) Seq(qb)
-        else qb +: (0 until numPlanes).map(b => qb ^ (1 << b))
-      col("buckets").getItem(t).isin(candidates.map(Int.box): _*)
-    }.reduce(_ || _)
+  /** The probed buckets per table: the query's own bucket, plus, with
+    * `maxHamming = 1` (1-bit multi-probe), every bucket one sign flip
+    * away. Only 0 and 1 are supported: the 1-bit ball is numPlanes + 1
+    * buckets per table, and wider balls grow combinatorially. */
+  def probeSets(queryBuckets: Array[Int], maxHamming: Int): Seq[Seq[Int]] = {
+    require(maxHamming == 0 || maxHamming == 1, s"maxHamming $maxHamming: only 0 or 1 supported")
+    queryBuckets.toSeq.map(b =>
+      if (maxHamming == 0) Seq(b) else b +: (0 until numPlanes).map(p => b ^ (1 << p)))
   }
 
   /** Single-pass candidate predicate for a TRANSIENT probe (no at-rest

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.expressions.CosineSimilarity
+import graft.expressions.{CosineSimilarity, LshBucketProbe}
 import graft.index.RandomHyperplaneLsh
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.catalyst.expressions._
@@ -18,10 +18,12 @@ import org.apache.spark.sql.types.IntegerType
   *
   * Matches `LIMIT k (SORT cosine_similarity(emb, <literal qvec>) DESC
   * (PROJECT ... (scan of a registered index table)))` and injects the
-  * candidate Filter `bucket = h0(q) OR buckets[t] = ht(q) ...` under
-  * the Project. The scan must carry the `bucket`/`buckets` columns
-  * written by [[graft.index.LshIndexStore]]; the bucket predicate then
-  * prunes partitions/row groups exactly like the hand-built probe.
+  * candidate Filter (see `lshProbeFilter`: a partition-column
+  * disjunction, the [[LshBucketProbe]] over (`table`, `bucket`), and
+  * `bucket IN (probed buckets)`) under the Project. The scan must
+  * carry the `table`/`bucket`/`bucket_part` columns written by
+  * [[graft.index.LshIndexStore]]; the filter then prunes directories
+  * and row groups like the hand-built probe.
   *
   * NOTE this is an opt-in APPROXIMATE rewrite: registering a path
   * declares "serve ANN from this index". Unregistered plans are
@@ -521,7 +523,8 @@ object LshProbeRewrite extends Rule[LogicalPlan] {
   private val layoutNames = Set("table", "bucket", "bucket_part", "cluster_id")
 
   /** A plan that already constrains any LAYOUT column (`table`,
-    * `bucket`, `bucket_part`, `cluster_id` — by equality or IN-list) is
+    * `bucket`, `bucket_part`, `cluster_id` — by equality or IN-list),
+    * or carries an [[LshBucketProbe]] (this rule's own probe), is
     * a hand-built probe: stacking the registered policy's filter on top
     * would NARROW the caller's candidate set (r15 catch: the adaptive
     * filtered ladder's brute rung scans `table = 0` of the registered
@@ -534,15 +537,10 @@ object LshProbeRewrite extends Rule[LogicalPlan] {
       cond.exists {
         case EqualTo(a: Attribute, _) => layoutNames.contains(a.name)
         case In(a: Attribute, _)      => layoutNames.contains(a.name)
+        case _: LshBucketProbe        => true
         case _ => false
       }
     case _ => false
-  }
-
-  private def queryBuckets(reg: Registration, q: Array[Float]): Array[Int] = {
-    val n = math.sqrt(q.map(x => x.toDouble * x.toDouble).sum)
-    val qn = if (n == 0.0) q else q.map(x => (x / n).toFloat)
-    reg.lsh.planes(reg.dim).map(tp => reg.lsh.hash(qn.toSeq, tp))
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
@@ -757,7 +755,7 @@ object LshProbeRewrite extends Rule[LogicalPlan] {
     // cannot be served by it (the collision would silently shadow)
     if (payloadNames.isEmpty || payloadNames.exists(ladderNames.contains))
       return None
-    val qb = queryBuckets(reg, qvec)
+    val qb = reg.lsh.queryBuckets(qvec, reg.dim)
     val qbCol = F.element_at(F.typedlit(qb.toSeq), F.col("table") + 1)
     def ballParts(b: Int): Seq[Int] =
       (b +: (0 until reg.lsh.numPlanes).map(p => b ^ (1 << p)))
@@ -1442,8 +1440,19 @@ object LshProbeRewrite extends Rule[LogicalPlan] {
     }
   }
 
-  /** The LSH candidate-union filter: per-table Hamming-ball bucket
-    * disjunctions over the [[graft.index.LshIndexStore]] layout. */
+  /** The LSH candidate-union filter over the [[graft.index.LshIndexStore]]
+    * layout, three conjuncts:
+    *  - a per-table disjunction over the partition columns (`table`,
+    *    `bucket_part`), which prunes directories at listing time and
+    *    never reaches generated code;
+    *  - [[LshBucketProbe]] over (`table`, `bucket`), the exact row
+    *    filter: each table's probe set is the query's own bucket, or its
+    *    1-bit ball under `maxHamming = 1`;
+    *  - `bucket IN (union of the probe sets)`, implied by the probe,
+    *    which Spark pushes to Parquet to skip row groups.
+    * [[LshProbeStrategy]] drops the `IN` conjunct from the scan's
+    * `FilterExec`, so the only per-query values in generated code are
+    * the probe's reference object and the query vector's. */
   private def lshProbeFilter(reg: Registration, qvec: Array[Float],
                              child: LogicalPlan): Option[Expression] =
     for {
@@ -1451,32 +1460,17 @@ object LshProbeRewrite extends Rule[LogicalPlan] {
       partAttr <- child.output.find(_.name == "bucket_part")
       bucketAttr <- child.output.find(_.name == "bucket")
     } yield {
-      val qb = queryBuckets(reg, qvec)
-      // The probed bucket set per table: the query's own bucket, plus
-      // (under the 1-bit multi-probe policy) every bucket one
-      // sign-flip away — identical to candidateMatch(maxHamming = 1).
-      def ball(b: Int): Seq[Int] =
-        if (reg.maxHamming <= 0) Seq(b)
-        else b +: (0 until reg.lsh.numPlanes).map(p => b ^ (1 << p))
+      val sets = reg.lsh.probeSets(reg.lsh.queryBuckets(qvec, reg.dim), reg.maxHamming)
       def inOrEq(attr: Attribute, vs: Seq[Int]): Expression =
         if (vs.size == 1) EqualTo(attr, Literal(vs.head, IntegerType))
         else In(attr, vs.map(Literal(_, IntegerType)))
-      // Partition-col-only disjunction (prunable by Catalyst) AND the
-      // exact per-table bucket disjunction (row filtering). The first
-      // is implied by the second (bucket determines bucket_part), so
-      // the conjunction is exactly the per-table candidate union.
-      val pruneOr = qb.zipWithIndex.map { case (b, t) =>
+      val pruneOr = sets.zipWithIndex.map { case (set, t) =>
         And(EqualTo(tableAttr, Literal(t, IntegerType)),
-          inOrEq(partAttr,
-            ball(b).map(math.floorMod(_, reg.numPhysicalPartitions)).distinct))
+          inOrEq(partAttr, set.map(math.floorMod(_, reg.numPhysicalPartitions)).distinct))
           .asInstanceOf[Expression]
       }.reduce(Or(_, _))
-      val exactOr = qb.zipWithIndex.map { case (b, t) =>
-        And(EqualTo(tableAttr, Literal(t, IntegerType)),
-          inOrEq(bucketAttr, ball(b).distinct))
-          .asInstanceOf[Expression]
-      }.reduce(Or(_, _))
-      And(pruneOr, exactOr)
+      And(pruneOr, And(LshBucketProbe(Seq(tableAttr, bucketAttr), sets),
+        inOrEq(bucketAttr, sets.flatten.distinct.sorted)))
     }
 
   /** The IVF probe filter: `cluster_id IN (top-nprobe centroids by

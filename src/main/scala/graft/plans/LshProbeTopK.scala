@@ -1,12 +1,15 @@
 package graft.plans
 
+import graft.expressions.LshBucketProbe
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, NamedExpression, SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, ExprId, Expression, In, Literal, NamedExpression, PredicateHelper, SortOrder, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, UnaryNode}
+import org.apache.spark.sql.execution.{FilterExec, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.datasources.FileSourceStrategy
 import org.apache.spark.sql.graft.SqlShims
+import org.apache.spark.sql.types.IntegerType
 
 /** Logical "probe an at-rest LSH layout and return the exact top-k of
   * the candidate union" node, produced by [[LshProbeRewrite]] for
@@ -52,10 +55,10 @@ final case class LshProbeTopK(
   * strategies. Registered via `injectPlannerStrategy` in
   * [[graft.GraftExtensions]].
   */
-case class LshProbeStrategy(spark: SparkSession) extends SparkStrategy {
+case class LshProbeStrategy(spark: SparkSession) extends SparkStrategy with PredicateHelper {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case LshProbeTopK(k, order, projectList, dedupeKeys, child) =>
-      LshProbeTopKExec(k, order, projectList, dedupeKeys, planLater(child)) :: Nil
+      LshProbeTopKExec(k, order, projectList, dedupeKeys, planProbeScan(child)) :: Nil
     case sf @ ShortlistFetch(idExpr, fetch, fetchIdName, max, child) =>
       ShortlistFetchExec(idExpr, fetch, fetchIdName, max, sf.output,
         planLater(child)) :: Nil
@@ -63,6 +66,40 @@ case class LshProbeStrategy(spark: SparkSession) extends SparkStrategy {
       ShortlistFetchJoinExec(idExpr, fetch, fetchIdName, maxIds, sfj.output,
         planLater(child)) :: Nil
     case _ => Nil
+  }
+
+  /** The scan under an LSH bucket probe, planned here by
+    * `FileSourceStrategy` so that the probe's `bucket IN (...)` conjunct
+    * stays in the scan's pushed filters (Parquet skips row groups by
+    * it) but leaves the `FilterExec`: the [[LshBucketProbe]] beside it
+    * implies it, and its literals would make the generated code differ
+    * per query. Any other child plans as before. */
+  private def planProbeScan(child: LogicalPlan): SparkPlan = child match {
+    case Filter(cond, _) if splitConjunctivePredicates(cond).exists(_.isInstanceOf[LshBucketProbe]) =>
+      FileSourceStrategy(child).headOption
+        .map(_.transformUp { case FilterExec(c, in) =>
+          withoutImpliedIn(c).fold(in)(FilterExec(_, in))
+        })
+        .getOrElse(planLater(child))
+    case _ => planLater(child)
+  }
+
+  /** `cond` without each `bucket IN (...)` / `bucket = v` conjunct whose
+    * values hold every bucket an [[LshBucketProbe]] conjunct over the
+    * same `bucket` accepts; None when nothing else is left. */
+  private def withoutImpliedIn(cond: Expression): Option[Expression] = {
+    val conjuncts = splitConjunctivePredicates(cond)
+    val probed: Map[ExprId, Set[Int]] = conjuncts.collect {
+      case LshBucketProbe(Seq(_, b: Attribute), sets) => b.exprId -> sets.flatten.toSet
+    }.toMap
+    def implied(a: Attribute, values: Seq[Expression]): Boolean =
+      probed.get(a.exprId).exists(_.forall(v =>
+        values.exists { case Literal(x: Int, IntegerType) => x == v; case _ => false }))
+    conjuncts.filterNot {
+      case In(a: Attribute, values) => implied(a, values)
+      case EqualTo(a: Attribute, value) => implied(a, Seq(value))
+      case _ => false
+    }.reduceOption(And)
   }
 }
 

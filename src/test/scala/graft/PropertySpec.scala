@@ -161,6 +161,60 @@ object GraftProperties extends Properties("graft") {
       exprVal == shared && bucket == java.lang.Math.floorMod(shared, 100L)
     }
 
+  // per-table bucket arrays with null arrays, null elements and arrays
+  // shorter (or longer) than the table count, and probe sets that are
+  // one bucket or a 1-bit ball per table
+  private val bucketProbeGen: Gen[(Seq[Seq[Int]], List[Option[List[Option[Int]]]])] = for {
+    tables <- Gen.choose(1, 4)
+    planes <- Gen.choose(1, 4)
+    lsh = RandomHyperplaneLsh(tables, planes)
+    qb <- Gen.containerOfN[Array, Int](tables, Gen.choose(0, (1 << planes) - 1))
+    hamming <- Gen.oneOf(0, 1)
+    bucket = Gen.frequency(1 -> Gen.const(None),
+      6 -> Gen.choose(0, (1 << planes) - 1).map(Some(_)))
+    rows <- Gen.listOfN(12, Gen.frequency(1 -> Gen.const(None),
+      6 -> Gen.choose(0, tables + 1).flatMap(len => Gen.listOfN(len, bucket)).map(Some(_))))
+  } yield (lsh.probeSets(qb, hamming), rows)
+
+  property("LshBucketProbe (interpreted, generated, per layout row) == OR of buckets[t] = b") =
+    Prop.forAll(bucketProbeGen) { case (sets, rows) =>
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types._
+      val schema = StructType(Seq(StructField("id", LongType),
+        StructField("buckets", ArrayType(IntegerType, containsNull = true))))
+      // an RDD-backed frame: a local relation would be filtered by the
+      // optimizer's interpreted constant folding, never by generated code
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows.zipWithIndex.map {
+        case (r, i) => Row(i.toLong, r.map(_.map(_.map(Int.box).orNull)).orNull)
+      }, 2), schema)
+      def ids(where: org.apache.spark.sql.Column, conf: (String, String)*): Set[Long] = {
+        val before = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+        conf.foreach { case (k, v) => spark.conf.set(k, v) }
+        try df.where(where).select("id").as[Long].collect().toSet
+        finally before.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
+      }
+      // the old form reads an element past the array's end as NULL, which
+      // needs ANSI off: under ANSI `buckets[t]` throws there instead
+      val old = sets.zipWithIndex.flatMap { case (set, t) =>
+        set.map(b => col("buckets").getItem(t) === b)
+      }.reduce(_ || _)
+      val want = ids(old, "spark.sql.ansi.enabled" -> "false")
+      val probe = graft.expressions.LshBucketProbe(col("buckets"), sets)
+      val interpreted = ids(probe, "spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+      val generated = ids(probe, "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+      // the layout shape: one (table, bucket) row per array element
+      val layout = df.select(col("id"), posexplode(col("buckets")).as(Seq("table", "bucket")))
+      val perRow = layout.where(org.apache.spark.sql.graft.SqlShims.column(
+          graft.expressions.LshBucketProbe(Seq(col("table"), col("bucket"))
+            .map(org.apache.spark.sql.graft.SqlShims.expression), sets)))
+        .select("id").as[Long].collect().toSet
+      interpreted == want && generated == want && perRow == want
+    }
+
   private val attrEventsGen: Gen[List[(Long, Long, String, Long, Double)]] = for {
     n <- Gen.choose(0, 30)
     rows <- Gen.listOfN(n, for {
