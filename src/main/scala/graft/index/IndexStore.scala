@@ -36,7 +36,14 @@ import org.apache.spark.sql.functions._
   *    so a pushed `bucket IN (...)` filter skips the row groups whose
   *    min/max miss the probed buckets. Parquet's 128 MiB default would
   *    make a table's whole file one row group, so every probe would read
-  *    all of it (an 8,000-chunk library: all 64,000 layout rows).
+  *    all of it (an 8,000-chunk library: all 64,000 layout rows). The
+  *    `bucket` column's dictionary pages let Parquet skip a row group
+  *    whose [min, max] holds a probed bucket that it lacks (without
+  *    them that library's probe read 21,009 rows, not about 6,000). The
+  *    embedding column is written without a dictionary: each small row
+  *    group would build one of its floats again and then fall back to
+  *    plain encoding, 20-30% of the write time (8,000 x 64-d, 4 cpus,
+  *    warm: 1.12-1.29 s with it, 0.78-0.89 s without, same bytes).
   */
 object LshIndexStore {
 
@@ -117,6 +124,7 @@ final case class LshIndexStore(lsh: RandomHyperplaneLsh, dim: Int,
       .sortWithinPartitions(col("table"), col("bucket_part"), col("bucket"))
       .write.mode(mode)
       .option("parquet.block.size", LshIndexStore.RowGroupBytes.toLong)
+      .option(s"parquet.enable.dictionary#$embCol.list.element", false)
       .partitionBy("table", "bucket_part")
       .parquet(path)
   }
@@ -201,7 +209,7 @@ final case class LshIndexStore(lsh: RandomHyperplaneLsh, dim: Int,
           set.map(b => math.floorMod(b, numPhysicalPartitions)).distinct.map(Int.box): _*)
       }.reduce(_ || _)
       val exactOr = sets.map { case (set, t) =>
-        col("table") === t && col("bucket").isin(set.distinct.map(Int.box): _*)
+        col("table") === t && col("bucket").isin(set.map(Int.box): _*)
       }.reduce(_ || _)
       layout.where(pruneOr && exactOr && userFilter)
         .drop("table", "bucket", "bucket_part")

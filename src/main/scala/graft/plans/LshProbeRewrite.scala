@@ -757,15 +757,12 @@ object LshProbeRewrite extends Rule[LogicalPlan] {
       return None
     val qb = reg.lsh.queryBuckets(qvec, reg.dim)
     val qbCol = F.element_at(F.typedlit(qb.toSeq), F.col("table") + 1)
-    def ballParts(b: Int): Seq[Int] =
-      (b +: (0 until reg.lsh.numPlanes).map(p => b ^ (1 << p)))
-        .map(math.floorMod(_, reg.numPhysicalPartitions)).distinct
     // partition-column disjunction (prunable) AND the ball membership
     // on the exact bucket — the candidatesAt(1) probe of the library
     // ladder, one conjunct per table
-    val pruneOr = qb.zipWithIndex.map { case (b, t) =>
-      F.col("table") === t &&
-        F.col("bucket_part").isin(ballParts(b).map(Int.box): _*)
+    val pruneOr = reg.lsh.probeSets(qb, maxHamming = 1).zipWithIndex.map { case (ball, t) =>
+      F.col("table") === t && F.col("bucket_part").isin(
+        ball.map(math.floorMod(_, reg.numPhysicalPartitions)).distinct.map(Int.box): _*)
     }.reduce(_ || _)
     val member = pruneOr &&
       F.bit_count(F.col("bucket").bitwiseXOR(qbCol)) <= 1

@@ -1,9 +1,11 @@
 package graft
 
 import graft.dedup.Dedup
+import graft.expressions.LshBucketProbe
 import graft.functions.VectorFunctions
 import graft.index.{BruteForceKnn, RandomHyperplaneLsh}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlShims
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
 /** ScalaCheck property tests (SURVEY §5): the invariants the reference
@@ -202,15 +204,14 @@ object GraftProperties extends Properties("graft") {
         set.map(b => col("buckets").getItem(t) === b)
       }.reduce(_ || _)
       val want = ids(old, "spark.sql.ansi.enabled" -> "false")
-      val probe = graft.expressions.LshBucketProbe(col("buckets"), sets)
+      val probe = LshBucketProbe(col("buckets"), sets)
       val interpreted = ids(probe, "spark.sql.codegen.wholeStage" -> "false",
         "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
       val generated = ids(probe, "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
       // the layout shape: one (table, bucket) row per array element
       val layout = df.select(col("id"), posexplode(col("buckets")).as(Seq("table", "bucket")))
-      val perRow = layout.where(org.apache.spark.sql.graft.SqlShims.column(
-          graft.expressions.LshBucketProbe(Seq(col("table"), col("bucket"))
-            .map(org.apache.spark.sql.graft.SqlShims.expression), sets)))
+      val perRow = layout.where(SqlShims.column(
+          LshBucketProbe(Seq(col("table"), col("bucket")).map(SqlShims.expression), sets)))
         .select("id").as[Long].collect().toSet
       interpreted == want && generated == want && perRow == want
     }
